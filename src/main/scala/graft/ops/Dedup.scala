@@ -110,10 +110,11 @@ object Dedup {
     * ~2·log₂ d rounds instead of the d+1 that level-synchronous label
     * propagation ([[connectedComponentsMinLabel]]) needs. On the
     * shallow fan/template graphs near-dup corpora usually produce, both
-    * run 3-5 rounds and measure within noise of each other (see
-    * NOTES.md round-5 CCBench numbers), so the diameter-robust one is
-    * the default; the min-label path stays available for callers that
-    * know their components are shallow. */
+    * run 3-5 rounds and measure within noise of each other (NOTES.md
+    * round 5, 256-pair sf0.1 fan graph: star 1.27-2.94 s vs min-label
+    * 1.03-1.75 s), so the diameter-robust one is the default; the
+    * min-label path stays available for callers that know their
+    * components are shallow. */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame =
     connectedComponentsStar(pairs, maxIters)
 

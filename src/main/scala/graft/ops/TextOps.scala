@@ -199,27 +199,33 @@ object TextOps {
     * form paid n interpreted `element_at` dispatches plus a materialized
     * index array per shingle. The closure builds each shingle in one
     * pass over the words array — measured 28% faster on the shingle map
-    * stage (tools/R07Shingle), with multiset-identical output proven on
-    * the full bench corpus and pinned by an OpsSpec fuzz against the old
-    * expression. The `when` guard keeps the exact legacy semantics for
-    * NULL (`size(NULL)` is NULL → empty array) and shorter-than-n docs. */
+    * stage (0.418 → 0.301 s at sf0.1, OPTIMIZATION_r07.md §9), with
+    * multiset-identical output proven on the full bench corpus and pinned
+    * by an OpsSpec fuzz against the old expression. The `when` guard
+    * keeps the exact legacy semantics for NULL (`size(NULL)` is NULL →
+    * empty array) and shorter-than-n docs. */
   def wordNgramsFromWords(words: Column, n: Int): Column =
     when(size(words) >= n, ngramJoinUdf(words, lit(n)))
       .otherwise(array().cast("array<string>"))
 
   /** Space-joins each window of n consecutive words; called only with
-    * size(words) >= n (see the guard above). Word arrays come from
-    * `split`, which never yields null elements. */
+    * size(words) >= n (see the guard above). NULL words are skipped with
+    * no separator, exactly like the `concat_ws` they replace. */
   private val ngramJoinUdf =
     org.apache.spark.sql.functions.udf { (ws: Seq[String], n: Int) =>
       val out = new Array[String](ws.length - n + 1)
       var i = 0
       while (i < out.length) {
         val sb = new java.lang.StringBuilder
+        var first = true
         var j = 0
         while (j < n) {
-          if (j > 0) sb.append(' ')
-          sb.append(ws(i + j))
+          val w = ws(i + j)
+          if (w != null) {
+            if (!first) sb.append(' ')
+            sb.append(w)
+            first = false
+          }
           j += 1
         }
         out(i) = sb.toString

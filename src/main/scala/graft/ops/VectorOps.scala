@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   * CodegenFallback (interpreted lambdas), but a closure/UDF form is NOT
   * faster here: the per-call Catalyst→Scala array conversion costs more
   * than the interpreted per-element multiply it saves (measured 2.3×
-  * SLOWER in the 16-centroid IVF shape, tools/R07Dot) — so the
-  * optimization lever for this family is the aggregate CALL COUNT, not
-  * the per-call form (see the redundancy-free building blocks below).
+  * SLOWER in the 16-centroid IVF shape, 0.273 → 0.619 s,
+  * OPTIMIZATION_r07.md §9) — so the optimization lever for this family
+  * is the aggregate CALL COUNT, not the per-call form (see the
+  * redundancy-free building blocks below).
   */
 object VectorOps {
 

@@ -565,8 +565,8 @@ object Queries {
     * (alive but mostly outside the 60 s count window — the live count-0
     * row), ips 8-13 in [480, 600) (alive with active counts), ips 14-19
     * across the whole [0, 1200) burst (long multi-window walks). */
-  /** The capped request log (ip, endpoint, sec, event_id, limit_rpm)
-    * shared by a6/a9/x_quota_reset. */
+  /** The capped request log (ip, endpoint, sec, event_id, limit_rpm,
+    * epoch) shared by a6/a9/x_quota_reset; epoch 0 (no quota resets). */
   private def rateLimitRequests(s: SparkSession, dir: String): DataFrame = {
       val cfg = RateLimits.Config(defaultRpm = 4, searchRpm = 2,
         discoverRpm = 4, syncRpm = 3, webhookRpm = 1)
@@ -590,14 +590,12 @@ object Queries {
           .partitionBy("ip", "endpoint").orderBy("sec", "event_id")))
         .filter(col("rn") <= 40).drop("rn")
         .withColumn("limit_rpm", RateLimits.endpointLimit(col("endpoint"), cfg))
+        .withColumn("epoch", lit(0))
   }
 
   private def rateLimitDecisions(s: SparkSession, dir: String): DataFrame = {
       import s.implicits._
-      // the rn window above just hash-exchanged by exactly (ip, endpoint)
-      // and only narrow ops follow — the clustered walk skips simulate's
-      // second shuffle of the request log (one exchange instead of two)
-      RateLimits.simulateClustered(rateLimitRequests(s, dir).as[RateLimits.Req]).toDF()
+      RateLimits.simulate(rateLimitRequests(s, dir).as[RateLimits.Req]).toDF()
   }
 
   /** The matching DuckDB decision-log SELECT (no final ORDER BY) —
@@ -1258,24 +1256,17 @@ object Queries {
     * see the cleared bucket); the result is the /admin/quota view at
     * t=600 over the reset-aware decision log, where a bucket exists iff
     * its last post-reset check is within the 300 s sweep horizon (see
-    * a9). Epochs ride the bucket key through [[RateLimits.simulate]] (a
-    * `#epoch` suffix on the endpoint — limits are classified on the clean
-    * endpoint beforehand), so the streaming partition walk is reused
-    * unchanged. */
+    * a9). Epochs ride the request's `epoch` column through
+    * [[RateLimits.simulate]], whose walk keys its window state by
+    * (ip, endpoint, epoch). */
   private val xQuotaReset = Q(
     (s, dir) => {
       import s.implicits._
       val t = 600L
       val epoch = when(col("sec") > 350, 1).otherwise(0) +
         when(col("ip") === 9 && col("sec") > 520, 1).otherwise(0)
-      val reqs = rateLimitRequests(s, dir)
-        .withColumn("endpoint", concat(col("endpoint"), lit("#"), epoch))
-      // epoch-suffixing REFINES the (ip, endpoint) buckets the upstream
-      // rn window clustered by — every refined bucket stays inside its
-      // parent bucket's partition, so the clustered walk remains sound
-      // (its partition-local sort re-orders by the suffixed key)
-      val dec = RateLimits.simulateClustered(reqs.as[RateLimits.Req]).toDF()
-        .withColumn("endpoint", substring_index(col("endpoint"), "#", 1))
+      val reqs = rateLimitRequests(s, dir).withColumn("epoch", epoch)
+      val dec = RateLimits.simulate(reqs.as[RateLimits.Req]).toDF()
       val tr = when(col("ip") === 9, 520L).otherwise(350L)
       dec.groupBy("ip", "endpoint", "limit_rpm")
         .agg(

@@ -34,12 +34,12 @@ import org.apache.spark.sql.functions._
   * per-bucket lock is the same serialization); in-flight state per
   * bucket is ≤ limit timestamps. The batch entry point never
   * materializes a bucket in memory: requests are repartitioned on the
-  * bucket key, sorted WITHIN partitions by (ip, endpoint, sec, event_id)
-  * — Spark's external sort, which spills — and walked by a streaming
-  * `mapPartitions` that resets its O(limit) window state at each bucket
-  * boundary. A hot bucket (one bot IP hammering one endpoint — exactly
-  * the workload a limiter replay exists to analyze) therefore costs disk
-  * spill, not task heap.
+  * bucket key, sorted WITHIN partitions by (ip, endpoint, epoch, sec,
+  * event_id) — Spark's external sort, which spills — and walked by a
+  * streaming `mapPartitions` that resets its O(limit) window state at
+  * each bucket boundary. A hot bucket (one bot IP hammering one
+  * endpoint — exactly the workload a limiter replay exists to analyze)
+  * therefore costs disk spill, not task heap.
   */
 object RateLimits {
 
@@ -58,8 +58,16 @@ object RateLimits {
       .otherwise(cfg.defaultRpm)
   }
 
+  /** One request. `epoch` numbers the quota resets of its bucket
+    * (`RateLimiter.reset_quota`, rate_limiter.py:276-294): a fresh epoch
+    * is a recreated bucket with an empty window. 0 for a log without
+    * resets. */
   final case class Req(ip: Long, endpoint: String, sec: Long, event_id: Long,
-    limit_rpm: Int)
+      limit_rpm: Int, epoch: Int = 0) {
+    /** The limiter bucket: the key of both the batch walk and its
+      * streaming twin. */
+    def bucket: (Long, String, Int) = (ip, endpoint, epoch)
+  }
   final case class Decision(ip: Long, endpoint: String, event_id: Long,
     sec: Long, limit_rpm: Int, allowed: Boolean, remaining: Int,
     reset_ts: Long, retry_after: Option[Long])
@@ -75,41 +83,25 @@ object RateLimits {
     * in-heap state is the ≤ limit_rpm allowed-timestamp window (the
     * reference's `RateLimitInfo.requests` after cleanup). A single
     * (ip, endpoint) bucket with 10⁹ requests never lands in one task's
-    * memory. */
-  def simulate(reqs: Dataset[Req]): Dataset[Decision] =
-    walkClustered(reqs.repartition(col("ip"), col("endpoint")))
-
-  /** [[simulate]] minus the clustering exchange — for callers whose
-    * upstream plan ALREADY guarantees every (ip, endpoint) bucket lives
-    * in one partition, e.g. the rn-capped request synthesis whose
-    * row_number window just exchanged by exactly this key (narrow ops
-    * preserve it, and refining the endpoint with an epoch suffix keeps
-    * it valid: each refined bucket is a subset of its parent bucket's
-    * partition). Saves a full second shuffle of the request log — at
-    * scale the log shuffles once, not twice. The partition-local time
-    * sort still runs (the planner elides it when the inherited ordering
-    * already satisfies it). private[graft] because the clustering
-    * contract is UNCHECKED: misuse silently splits buckets across
-    * partitions and produces wrong verdicts, so each call site must
-    * prove the upstream partitioning (QueryPropertySpec pins
-    * clustered == public-path results on the window-shaped input). */
-  private[graft] def simulateClustered(reqs: Dataset[Req]): Dataset[Decision] =
-    walkClustered(reqs)
-
-  /** The bucket walk over an input whose (ip, endpoint) buckets are
-    * already partition-local. */
-  private def walkClustered(parted: Dataset[Req]): Dataset[Decision] = {
-    import parted.sparkSession.implicits._
-    parted
-      .sortWithinPartitions("ip", "endpoint", "sec", "event_id")
+    * memory.
+    *
+    * The repartition is on the PARENT key (ip, endpoint), never on the
+    * epoch: every epoch bucket is a subset of its parent bucket, so
+    * parent clustering suffices, and when the input already comes
+    * hash-partitioned by exactly (ip, endpoint) — e.g. the rn-capped
+    * request synthesis, whose row_number window exchanges by that key —
+    * EnsureRequirements drops the repartition as redundant and the log
+    * shuffles once. The planner proves that clustering; PlanSpec pins
+    * the single exchange on the quota queries. */
+  def simulate(reqs: Dataset[Req]): Dataset[Decision] = {
+    import reqs.sparkSession.implicits._
+    reqs.repartition(col("ip"), col("endpoint"))
+      .sortWithinPartitions("ip", "endpoint", "epoch", "sec", "event_id")
       .mapPartitions { it =>
-        var curIp = 0L
-        var curEp: String = null
+        var cur: (Long, String, Int) = null
         val q = scala.collection.mutable.ArrayDeque.empty[Long]
         it.map { r =>
-          if (curEp == null || r.ip != curIp || r.endpoint != curEp) {
-            curIp = r.ip; curEp = r.endpoint; q.clear()
-          }
+          if (r.bucket != cur) { cur = r.bucket; q.clear() }
           decideOne(r, q)
         }
       }

@@ -62,12 +62,12 @@ object StreamOps {
   /** Exact streaming admission — `check_rate_limit`
     * (rate_limiter.py:164-218) as flatMapGroupsWithState: one decision
     * row per request with the allow/deny verdict, remaining, reset_ts and
-    * retry_after; group state per (ip, endpoint) bucket is just the
-    * allowed timestamps still inside the 60 s window — AT MOST `limit`
-    * longs, the same bound the reference's cleanup keeps. Within a
-    * micro-batch requests sort by (sec, event_id); exactness across
-    * batches needs bucket-monotonic arrival (the ingestion contract, as
-    * for turn positions).
+    * retry_after; group state per `Req.bucket` (ip, endpoint, epoch) —
+    * the batch walk's key — is just the allowed timestamps still inside
+    * the 60 s window — AT MOST `limit` longs, the same bound the
+    * reference's cleanup keeps. Within a micro-batch requests sort by
+    * (sec, event_id); exactness across batches needs bucket-monotonic
+    * arrival (the ingestion contract, as for turn positions).
     *
     * State is BOUNDED in both dimensions: per-bucket size (≤ limit
     * timestamps) AND bucket count — a bucket idle past `ttlMs` of
@@ -113,10 +113,10 @@ object StreamOps {
       else GroupStateTimeout.NoTimeout
     val nonEmptyEvictions = reqs.sparkSession.sparkContext
       .longAccumulator("rateLimitDecisions.nonEmptyStateEvictions")
-    reqs.groupByKey(r => (r.ip, r.endpoint))
+    reqs.groupByKey(_.bucket)
       .flatMapGroupsWithState[Seq[Long], graft.query.RateLimits.Decision](
         OutputMode.Append, timeout) {
-        (_: (Long, String), batch: Iterator[graft.query.RateLimits.Req],
+        (_: (Long, String, Int), batch: Iterator[graft.query.RateLimits.Req],
             state: GroupState[Seq[Long]]) =>
           if (state.hasTimedOut) {
             // timestamps still recorded at expiry ⇒ possibly-lossy evict

@@ -111,11 +111,11 @@ object ScaleSmoke {
     val hotReqs = spark.range(hotN).select(
         lit(7L).as("ip"), lit("/openfeeder?q=bot").as("endpoint"),
         (col("id") / lit(100)).cast("long").as("sec"), // ~100 req/s for ~10⁴ s
-        col("id").as("event_id"), lit(30).as("limit_rpm"))
+        col("id").as("event_id"), lit(30).as("limit_rpm"), lit(0).as("epoch"))
       .unionByName(spark.range(500).select(
         lit(8L).as("ip"), lit("/openfeeder").as("endpoint"),
         (col("id") * 7).cast("long").as("sec"), col("id").as("event_id"),
-        lit(100).as("limit_rpm")))
+        lit(100).as("limit_rpm"), lit(0).as("epoch")))
     val hotDecisions = timed(s"rate-limiter replay, hot bucket ($hotN reqs)")(
       graft.query.RateLimits.simulate(hotReqs.as[graft.query.RateLimits.Req])
         .filter(col("ip") === 7L && col("allowed")).count())

@@ -84,6 +84,23 @@ class OpsSpec extends AnyFunSuite {
           s"n=$n doc=${r.getLong(0)}")
       }
     }
+    // NULL words never come out of split, but wordNgramsFromWords is
+    // public: concat_ws skips a NULL with no separator, so must the closure
+    val s = spark; import s.implicits._
+    val nullWords: Seq[(Long, Seq[String])] = (1 to 100).map { i =>
+      i.toLong -> Seq.fill(rnd.nextInt(8))(
+        if (rnd.nextInt(3) == 0) null else rnd.alphanumeric.take(1 + rnd.nextInt(4)).mkString)
+    } ++ Seq(101L -> Seq[String](null, null, null), 102L -> Seq("", null, "x"),
+      103L -> Seq[String](null, "a", "b"), 104L -> null)
+    val wd = nullWords.toDF("doc_id", "ws")
+    for (n <- 1 to 4) {
+      wd.select(col("doc_id"), TextOps.wordNgramsFromWords(col("ws"), n).as("got"),
+          legacy(col("ws"), n).as("want"))
+        .collect().foreach { r =>
+          assert(r.getSeq[String](1) == r.getSeq[String](2),
+            s"n=$n null-word doc=${r.getLong(0)}")
+        }
+    }
   }
 
   test("df-capped shingles drop boilerplate from the pair join") {

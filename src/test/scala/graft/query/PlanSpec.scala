@@ -24,6 +24,9 @@ class PlanSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  /** A shuffle on exactly the rate-limit bucket key (ip, endpoint). */
+  private val bucketExchange = """Exchange hashpartitioning\(ip#\d+L?, endpoint#\d+, \d+\)""".r
+
   test("filters push down to the parquet scan (p12 product filters)") {
     val p = plan("p12_product_filters")
     assert(p.contains("PushedFilters:"), p.take(500))
@@ -159,12 +162,15 @@ class PlanSpec extends AnyFunSuite {
   test("batch limiter walk streams: partition-local sort, no grouped materialization") {
     val s = spark; import s.implicits._
     val reqs = spark.range(100).select(
-        pmod(col("id"), lit(3)).as("ip"), lit("/openfeeder").as("endpoint"),
-        col("id").as("sec"), col("id").as("event_id"), lit(5).as("limit_rpm"))
+        pmod(col("id"), lit(3)).as("ip"),
+        when(col("id") < 30, "/openfeeder").otherwise("/openfeeder/sync").as("endpoint"),
+        col("id").as("sec"), col("id").as("event_id"), lit(5).as("limit_rpm"),
+        (col("id") >= 50).cast("int").as("epoch"))
       .as[RateLimits.Req]
     val p = RateLimits.simulate(reqs).queryExecution.executedPlan.toString
-    // bucket distribution = one hash exchange on the bucket key…
-    assert(p.contains("Exchange hashpartitioning(ip"), p.take(1500))
+    // bucket distribution = one hash exchange on the PARENT bucket key
+    // (epoch buckets subdivide it partition-locally)…
+    assert(bucketExchange.findAllIn(p).size == 1, p.take(1500))
     // …then a PARTITION-LOCAL external sort (global=false ⇒ spillable,
     // no second exchange) feeding the streaming mapPartitions walk
     assert(p.contains("Sort [ip") && p.contains("false, 0"),
@@ -175,6 +181,25 @@ class PlanSpec extends AnyFunSuite {
     // bucket in one task's heap — that operator must be gone
     assert(!p.contains("FlatMapGroups"),
       "hot buckets must stream, not materialize per-group:\n" + p.take(1500))
+  }
+
+  test("quota walks reuse the rn window's exchange: one (ip, endpoint) hash exchange, no repartition") {
+    // the a6 request synthesis hash-exchanges by (ip, endpoint) for its
+    // row_number cap; simulate's own repartition on that key must be
+    // dropped by EnsureRequirements (shuffle the request log once), in
+    // every query that walks it — including x_quota_reset, whose epoch
+    // column refines the buckets without touching the exchange key.
+    // Totals match plans/r07/*_after.txt.
+    Seq("a6_rate_window" -> 2, "a9_quota_view" -> 3,
+        "x_quota_envelope" -> 4, "x_quota_reset" -> 3).foreach { case (q, total) =>
+      val p = plan(q)
+      assert(!p.contains("REPARTITION_BY_COL"),
+        s"$q: simulate's repartition must be planned away:\n" + p.take(3000))
+      assert(bucketExchange.findAllIn(p).size == 1,
+        s"$q: expected one hashpartitioning(ip, endpoint) exchange:\n" + p.take(3000))
+      val exchanges = p.linesIterator.count(_.matches(""".*[-+:] Exchange .*"""))
+      assert(exchanges == total, s"$q: $exchanges exchanges, want $total:\n" + p.take(3000))
+    }
   }
 
   test("library dedup/fingerprint operators carry no sort (ordering is the query layer's)") {

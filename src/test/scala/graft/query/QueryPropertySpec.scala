@@ -117,34 +117,33 @@ class QueryPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("clustered walk == public simulate on window-clustered input (incl. epoch refinement)") {
+  test("epoch-column walk on window-clustered input == simulate on the epoch-suffixed key it replaced") {
     val s = spark; import s.implicits._
     forAll(reqStream, 4) { reqs =>
       // shape the input like rateLimitRequests does: a row_number window
-      // partitioned by exactly (ip, endpoint) — the clustering
-      // simulateClustered's contract requires — with narrow ops after it
-      val clustered = reqs.toDS().toDF()
+      // partitioned by exactly (ip, endpoint), narrow ops after it — the
+      // clustering that lets the planner drop simulate's own repartition
+      def clustered = reqs.toDS().toDF()
         .withColumn("rn", row_number().over(org.apache.spark.sql.expressions
           .Window.partitionBy("ip", "endpoint").orderBy("sec", "event_id")))
         .filter(col("rn") >= 1).drop("rn")
-        .as[RateLimits.Req]
+      val plain = RateLimits.simulate(clustered.as[RateLimits.Req])
+      val plan = plain.queryExecution.executedPlan.toString
+      assert(plan.linesIterator.count(_.contains("Exchange hashpartitioning")) == 1,
+        "the window's exchange must be the walk's only one:\n" + plan.take(1500))
       val pub = RateLimits.simulate(reqs.toDS()).collect().sortBy(_.event_id)
-      val clu = RateLimits.simulateClustered(clustered).collect().sortBy(_.event_id)
-      assert(clu.toSeq == pub.toSeq)
-      // the x_quota_reset shape: the endpoint is refined AFTER the window
-      // (epoch suffix) — buckets split but stay within their parent
-      // bucket's partition, so the clustered walk must still agree
-      val refined = reqs.toDS().toDF()
-        .withColumn("rn", row_number().over(org.apache.spark.sql.expressions
-          .Window.partitionBy("ip", "endpoint").orderBy("sec", "event_id")))
-        .filter(col("rn") >= 1).drop("rn")
-        .withColumn("endpoint",
-          concat(col("endpoint"), lit("#"), pmod(col("sec"), lit(2))))
-        .as[RateLimits.Req]
-      val refinedInput = refined.collect().toSeq
-      val pubR = RateLimits.simulate(refinedInput.toDS()).collect().sortBy(_.event_id)
-      val cluR = RateLimits.simulateClustered(refined).collect().sortBy(_.event_id)
-      assert(cluR.toSeq == pubR.toSeq)
+      assert(plain.collect().sortBy(_.event_id).toSeq == pub.toSeq)
+      // the x_quota_reset shape: an epoch column set AFTER the window
+      // splits each bucket; the form it replaced folded the epoch into
+      // the key ("endpoint#epoch") and stripped the suffix after the walk
+      val epochs = RateLimits.simulate(clustered
+          .withColumn("epoch", pmod(col("sec"), lit(2)).cast("int"))
+          .as[RateLimits.Req])
+        .collect().sortBy(_.event_id)
+      val suffixed = reqs.map(r => r.copy(endpoint = s"${r.endpoint}#${r.sec % 2}"))
+      val viaSuffix = RateLimits.simulate(suffixed.toDS()).collect().sortBy(_.event_id)
+        .map(d => d.copy(endpoint = d.endpoint.takeWhile(_ != '#')))
+      assert(epochs.toSeq == viaSuffix.toSeq)
     }
   }
 

@@ -108,6 +108,31 @@ class StreamOpsSpec extends AnyFunSuite {
       (4L, true, 140L, -1L))) // window drained → allowed again
   }
 
+  test("streaming admission keys buckets by (ip, endpoint, epoch), like the batch walk") {
+    import spark.implicits._
+    import graft.query.RateLimits
+    import graft.query.RateLimits.Req
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // limit 1: within one epoch the second request is denied; a new epoch
+    // (a quota reset) is a fresh bucket and admits again
+    val reqs = Seq(Req(1L, "/webhook/update", 0L, 1L, 1),
+      Req(1L, "/webhook/update", 10L, 2L, 1),
+      Req(1L, "/webhook/update", 20L, 3L, 1, epoch = 1),
+      Req(1L, "/webhook/update", 30L, 4L, 1, epoch = 1))
+    val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Req]
+    val q = StreamOps.rateLimitDecisions(source.toDS(), ttlMs = 0L)
+      .writeStream.outputMode(OutputMode.Append)
+      .format("memory").queryName("rlepoch")
+      .start()
+    source.addData(reqs: _*)
+    q.processAllAvailable()
+    q.stop()
+    val streamed = spark.table("rlepoch").as[RateLimits.Decision].collect().sortBy(_.event_id)
+    val batch = RateLimits.simulate(reqs.toDS()).collect().sortBy(_.event_id)
+    assert(streamed.map(_.allowed).toSeq == Seq(true, false, true, false))
+    assert(streamed.toSeq == batch.toSeq)
+  }
+
   test("streaming analytics rollup: watermarked day windows per bot_family x endpoint") {
     import spark.implicits._
     val in = Files.createTempDirectory("an-in").toString + "/data"
