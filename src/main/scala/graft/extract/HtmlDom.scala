@@ -86,9 +86,6 @@ object HtmlDom {
         case t: HText => Iterator.single(t)
       }
 
-    def descendantElems: Iterator[HElem] =
-      descendants.collect { case e: HElem => e }
-
     /** BeautifulSoup `get_text()`: all text node data concatenated. */
     def getText: String = {
       val sb = new java.lang.StringBuilder

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.udf
@@ -133,8 +133,4 @@ object Functions {
           graft.extract.Robots.parse(if (content == null) "" else content)
             .canFetch(agent, url)))
   }
-
-  /** convenience: the native expression as a DataFrame transform */
-  def withIsoDuration(df: DataFrame, in: String, out: String): DataFrame =
-    df.withColumn(out, org.apache.spark.sql.functions.expr(s"of_iso_duration($in)"))
 }

@@ -11,9 +11,9 @@ import graft.model._
 /** The flagship batch job: transcripts → extracted turns + chunk table +
   * metrics + lineage, checkpoint-resumable per conv-bucket.
   *
-  * Spark shape (SURVEY.md §3.1): scan → [optional salted repartition] →
-  * typed `mapPartitions` extraction (zero-shuffle, row-local) → stable-order
-  * window over (conv_id, turn_idx, ts) on the *compressed* post-extraction
+  * Spark shape (SURVEY.md §3.1): scan → typed `mapPartitions` extraction
+  * (zero-shuffle, row-local) → stable-order window over
+  * (conv_id, turn_idx, ts) on the *compressed* post-extraction
   * rows (the reference measures ~18× HTML→JSON shrinkage, README.md:93-97,
   * so windowing after extraction shuffles an order of magnitude less data
   * than windowing the raw input) → dynamic-partition-overwrite write keyed
@@ -30,17 +30,7 @@ object ExtractJob {
       /** checkpoint granularity: buckets are processed in this many
         * sequential groups; each group commits output + lineage. */
       groups: Int = 4,
-      runId: String = "run",
-      /** salt partitions for conv-clustered inputs; None = keep scan
-        * partitioning (extraction is row-local, so a balanced byte-split
-        * scan needs no shuffle). */
-      saltPartitions: Option[Int] = None,
-      saltBuckets: Int = 16,
-      /** storage-format seam: no Iceberg runtime jar ships in this
-        * container, so output tables are partitioned parquet with the same
-        * schema; `format = "iceberg"` is the one-line swap once the jar is
-        * present (MERGE INTO then replaces the dynamic-overwrite idiom). */
-      format: String = "parquet")
+      runId: String = "run")
 
   private val isoFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ssxxx")
     .withZone(ZoneOffset.UTC)
@@ -159,10 +149,12 @@ object ExtractJob {
   /** J8 skew mitigation: spread one conversation's turns across partitions
     * with a salted key (extraction is row-local, so this is safe; only the
     * ordering window needs conv locality). Use when the input layout is
-    * conv-clustered. */
-  def saltedByConv(turns: Dataset[Turn], partitions: Int, saltBuckets: Int): Dataset[Turn] =
+    * conv-clustered: pass the salted Dataset to [[run]], whose
+    * deterministic bucket filter the optimizer pushes below this
+    * repartition, so each commit group shuffles only its own slice. */
+  def saltedByConv(turns: Dataset[Turn], partitions: Int, salts: Int): Dataset[Turn] =
     turns.repartition(partitions, col("conv_id"),
-      pmod(hash(col("turn_idx")), lit(saltBuckets)))
+      pmod(hash(col("turn_idx")), lit(salts)))
 
   /** Extraction pass: typed mapPartitions, one tokenizer/regex set per JVM
     * (all static), zero shuffle. */
@@ -257,11 +249,7 @@ object ExtractJob {
         // re-extracted (the whole point of per-partition lineage)
         val slice = turns.filter(bucketOf(cfg.buckets).isin(groupBuckets: _*))
           .as[Turn]
-        val salted = cfg.saltPartitions match {
-          case Some(p) => saltedByConv(slice, p, cfg.saltBuckets)
-          case None => slice
-        }
-        val part = withTurnPos(extract(salted))
+        val part = withTurnPos(extract(slice))
           .withColumn("conv_bucket", bucketOf(cfg.buckets))
           .cache()
         try {
@@ -269,7 +257,7 @@ object ExtractJob {
           part.write.mode(SaveMode.Overwrite)
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("conv_bucket")
-            .format(cfg.format).save(s"${cfg.outDir}/pages")
+            .parquet(s"${cfg.outDir}/pages")
           // chunks table (exploded, flat — the reference's chunk store)
           part.select($"conv_id", $"turn_idx", $"turn_pos", $"url", $"page_id",
               $"title", $"ts", $"conv_bucket", explode($"chunks").as("c"))
@@ -279,7 +267,7 @@ object ExtractJob {
             .write.mode(SaveMode.Overwrite)
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("conv_bucket")
-            .format(cfg.format).save(s"${cfg.outDir}/chunks")
+            .parquet(s"${cfg.outDir}/chunks")
           // metrics side table (exact, aggregated from output columns)
           val metrics = part.groupBy($"conv_bucket").agg(
               count(lit(1)).as("rows"), sum($"bytes_in").as("bytes_in"),
@@ -300,7 +288,7 @@ object ExtractJob {
           spark.createDataset(metricRows).write.mode(SaveMode.Overwrite)
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("run_id", "group_id")
-            .format(cfg.format).save(s"${cfg.outDir}/metrics")
+            .parquet(s"${cfg.outDir}/metrics")
           // lineage LAST: a bucket is only "done" once its data + metrics
           // are durable (idempotent resume)
           val lineageRows = metricRows.map(m =>
@@ -308,7 +296,7 @@ object ExtractJob {
             groupBuckets.filterNot(b => metricRows.exists(_.conv_bucket == b))
               .map(b => LineageRow(cfg.runId, g, b, "done", 0L)) // empty buckets
           spark.createDataset(lineageRows).write.mode(SaveMode.Append)
-            .format(cfg.format).save(s"${cfg.outDir}/lineage")
+            .parquet(s"${cfg.outDir}/lineage")
           written += metricRows.map(_.rows_out).sum
         } finally part.unpersist()
       }

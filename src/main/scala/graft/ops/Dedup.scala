@@ -11,14 +11,13 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   /** k-permutation MinHash signature per document over word n-gram
-    * shingles. `maxDf` drops shingles above that document frequency before
-    * hashing (boilerplate shingles both skew LSH buckets quadratic and
-    * inflate similarity of unrelated docs — dropping them is the standard
-    * web-scale setup; see TextOps.shingles). */
+    * shingles. `maxDfPct` drops shingles in more than that percent of the
+    * documents before hashing (boilerplate shingles both skew LSH buckets
+    * quadratic and inflate similarity of unrelated docs — dropping them is
+    * the standard web-scale setup; see TextOps.shingles). */
   def minHashSignatures(docs: DataFrame, n: Int = 3, k: Int = 16,
-      maxDf: Option[Long] = None, portable: Boolean = false,
-      maxDfPct: Option[Int] = None): DataFrame = {
-    val shingled = TextOps.shingles(docs, n, maxDf, maxDfPct)
+      portable: Boolean = false, maxDfPct: Option[Int] = None): DataFrame = {
+    val shingled = TextOps.shingles(docs, n, maxDfPct)
     val mins = (0 until k).map(j => min(perm(j, portable)).as(s"mh$j"))
     shingled.groupBy("doc_id").agg(mins.head, mins.tail: _*)
   }
@@ -43,10 +42,10 @@ object Dedup {
     * persisted (doc_id + k longs ≈ 140 B/doc — disk-spillable, tiny next
     * to the corpus) so shingling runs once, not three times. */
   def minHashPairs(docs: DataFrame, n: Int = 3, k: Int = 16, bands: Int = 4,
-      minEstJaccardX1000: Int = 500, maxDf: Option[Long] = None,
-      portable: Boolean = false, maxDfPct: Option[Int] = None): DataFrame =
-    minHashPairsPlanned(docs, n, k, bands, minEstJaccardX1000, maxDf,
-      portable, maxDfPct) match { case (frame, sigs) =>
+      minEstJaccardX1000: Int = 500, portable: Boolean = false,
+      maxDfPct: Option[Int] = None): DataFrame =
+    minHashPairsPlanned(docs, n, k, bands, minEstJaccardX1000, portable,
+      maxDfPct) match { case (frame, sigs) =>
         try frame.localCheckpoint(true) finally sigs.unpersist()
       }
 
@@ -56,15 +55,15 @@ object Dedup {
     * ExistingRDD). Caller owns the returned cache's lifecycle. */
   private[graft] def minHashPairsPlanned(docs: DataFrame, n: Int = 3,
       k: Int = 16, bands: Int = 4, minEstJaccardX1000: Int = 500,
-      maxDf: Option[Long] = None, portable: Boolean = false,
-      maxDfPct: Option[Int] = None): (DataFrame, DataFrame) = {
+      portable: Boolean = false, maxDfPct: Option[Int] = None)
+      : (DataFrame, DataFrame) = {
     require(k % bands == 0, "k must be divisible by bands")
     val r = k / bands
     // persisted, reused three times (band explode + both candidate joins);
     // the operator owns the lifecycle: the small above-threshold pair
     // result is materialized via localCheckpoint and the signature cache
     // is released before returning — see ngramJaccardPairs.
-    val sigs = minHashSignatures(docs, n, k, maxDf, portable, maxDfPct)
+    val sigs = minHashSignatures(docs, n, k, portable, maxDfPct)
       .select(col("doc_id"), array((0 until k).map(j => col(s"mh$j")): _*).as("sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val frame = {
@@ -103,26 +102,14 @@ object Dedup {
     * (doc_id, cluster_id) for every doc that appears in a pair, with
     * cluster_id = min doc_id of its component.
     *
-    * Default algorithm: alternating large-star/small-star contraction
-    * ([[connectedComponentsStar]]) — round count is O(log n) in the
-    * largest component size, INDEPENDENT of its diameter, so a
-    * chain-shaped family (a document edited iteratively d times) costs
-    * ~2·log₂ d rounds instead of the d+1 that level-synchronous label
-    * propagation ([[connectedComponentsMinLabel]]) needs. On the
-    * shallow fan/template graphs near-dup corpora usually produce, both
-    * run 3-5 rounds and measure within noise of each other (NOTES.md
-    * round 5, 256-pair sf0.1 fan graph: star 1.27-2.94 s vs min-label
-    * 1.03-1.75 s), so the diameter-robust one is the default; the
-    * min-label path stays available for callers that know their
-    * components are shallow. */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame =
-    connectedComponentsStar(pairs, maxIters)
-
-  /** Alternating large-star / small-star contraction (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", ACM SoCC 2014; the
-    * same public algorithm family behind GraphFrames' default CC).
-    * Round shape: each round is two edge rewrites over the canonical
-    * (big, small) edge set —
+    * Algorithm: alternating large-star / small-star contraction (Kiveris
+    * et al., "Connected Components in MapReduce and Beyond", ACM SoCC
+    * 2014; the same public algorithm family behind GraphFrames' default
+    * CC). Round count is O(log n) in the largest component size,
+    * INDEPENDENT of its diameter, so a chain-shaped family (a document
+    * edited iteratively d times) costs ~2·log₂ d rounds. Round shape:
+    * each round is two edge rewrites over the canonical (big, small)
+    * edge set —
     *
     *  - large-star: every node attaches its LARGER neighbors to the
     *    minimum of its closed neighborhood;
@@ -137,10 +124,10 @@ object Dedup {
     * chain converges in ~14 rounds (pinned in OpsSpec); 10⁵-node chains
     * in ~2·17 (see ScaleSmoke). Non-convergence within `maxIters`
     * fails loudly — truncated contraction would return wrong labels. */
-  def connectedComponentsStar(pairs: DataFrame, maxIters: Int = 50): DataFrame =
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame =
     starRounds(pairs, maxIters)._1
 
-  /** [[connectedComponentsStar]] plus the round count it took (for tests
+  /** [[connectedComponents]] plus the round count it took (for tests
     * and smoke stages that pin the O(log n) convergence bound). */
   private[graft] def starRounds(pairs: DataFrame, maxIters: Int)
       : (DataFrame, Int) = {
@@ -162,7 +149,7 @@ object Dedup {
       rounds += 1
       if (rounds > maxIters)
         throw new IllegalStateException(
-          s"connectedComponentsStar did not converge within $maxIters rounds; " +
+          s"connectedComponents did not converge within $maxIters rounds; " +
             "star contraction needs ~2·log2(component size) rounds — raise maxIters")
       val next = starRound(cur).localCheckpoint(false)
       // exact fixpoint test: both sides are distinct sets, so equal
@@ -236,90 +223,6 @@ object Dedup {
         .otherwise(array(center))).as("e"))
       .select(col("e.big").as("big"), col("e.small").as("small"))
       .distinct()
-  }
-
-  /** Level-synchronous min-label propagation, like
-    * [[graft.job.Crawl.bfs]]: each iteration joins the (symmetrized)
-    * edges against current labels, takes the min label per node, and
-    * localCheckpoints so the iterative lineage stays flat. Iteration
-    * count = cluster diameter + 1 — fine for the shallow replica-fan
-    * graphs near-dup corpora usually produce, pathological for
-    * chain-shaped families (use [[connectedComponentsStar]], the
-    * default). The per-round shuffle carries only (node, label) longs;
-    * convergence is detected distributed (one `limit(1).count()` on the
-    * changed set — no label collect). */
-  def connectedComponentsMinLabel(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var labels = edges.select(col("src").as("doc_id")).distinct()
-        .select(col("doc_id"), col("doc_id").as("cluster_id"))
-        .localCheckpoint(true)
-      // superseded label generations are freed EXPLICITLY: non-checkpoint
-      // rounds persist + materialize, and the previous cached generation
-      // is unpersisted once the next one exists — storage stays bounded
-      // at ~two generations instead of one (doc_id, cluster_id) copy per
-      // round awaiting GC. Every 5th round localCheckpoints instead,
-      // truncating the cached-plan lineage chain (the classic
-      // iterative-Spark plan-growth failure mode).
-      var prevCached: Option[DataFrame] = None
-      var converged = false
-      var it = 0
-      try {
-      while (!converged) {
-        it += 1
-        if (it > maxIters)
-          // a silently truncated propagation would return WRONG labels
-          // (one real component split into several) — fail loudly instead.
-          // Convergence costs eccentricity + 1 rounds (the last round only
-          // CONFIRMS no label moved), so size maxIters to the largest
-          // expected component diameter plus one
-          throw new IllegalStateException(
-            s"connectedComponentsMinLabel did not converge within $maxIters rounds; " +
-              "convergence needs component-diameter + 1 rounds — raise maxIters")
-        val propagated = edges
-          .join(labels, edges("src") === labels("doc_id"))
-          .select(col("dst").as("doc_id"), col("cluster_id"))
-          .unionByName(labels)
-          .groupBy("doc_id").agg(min("cluster_id").as("cluster_id"))
-        val checkpointRound = it % 5 == 0
-        val next =
-          if (checkpointRound) propagated.localCheckpoint(true)
-          else {
-            val c = propagated.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            c.count() // materialize before the previous generation is freed
-            c
-          }
-        converged = next.as("a")
-          .join(labels.as("b"), col("a.doc_id") === col("b.doc_id"))
-          .filter(col("a.cluster_id") =!= col("b.cluster_id"))
-          .limit(1)
-          .isEmpty
-        prevCached.foreach(_.unpersist())
-        prevCached = if (checkpointRound) None else Some(next)
-        labels = next
-      }
-      // never hand a cached frame to the caller (the operator owns its
-      // cache lifecycle — see ngramJaccardPairs): checkpoint the final
-      // generation and release the cache entry
-      prevCached match {
-        case Some(cached) =>
-          val result = labels.localCheckpoint(true)
-          cached.unpersist()
-          result
-        case None => labels
-      }
-      } catch {
-        case t: Throwable =>
-          // the failure path must release the in-flight cached generation
-          // too — a thrown IllegalStateException (non-convergence) or a
-          // job failure must not leave blocks pinned in the cacheManager
-          prevCached.foreach(_.unpersist())
-          throw t
-      }
-    } finally edges.unpersist()
   }
 
   /** [[connectedComponents]] over [[minHashPairs]], labeling EVERY

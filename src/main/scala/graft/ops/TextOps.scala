@@ -83,26 +83,15 @@ object TextOps {
     docs.select(col("doc_id"),
       md5(lower(regexp_replace(col("text"), "\\s+", " "))).as("fingerprint"))
 
-  /** Rolling polynomial hash (Rabin-Karp style) — the scale path for
-    * fingerprinting without md5's cost; pure Scala, exposed for tests and
-    * the extraction job. */
-  def rollingHash(s: String): Long = {
-    var h = 0L
-    var i = 0
-    while (i < s.length) { h = h * 1000003L + s.charAt(i); i += 1 }
-    h
-  }
-
   /** Distinct (doc_id, shingle-hash) pairs, optionally dropping shingles
     * above a document-frequency cap. A hot shingle (boilerplate phrase
     * shared by a large fraction of the corpus) turns the shingle self-join
     * quadratic — one shingle in 1% of a 10^9-doc corpus is a 10^14-pair
     * bucket; capping df is the standard web-scale fix.
-    * `maxDf`: absolute cap. `maxDfPct`: percent-of-corpus cap computed
-    * INSIDE the job (`greatest(floor(ndocs·pct/100), 2)` via a broadcast
-    * 1-row count — no eager driver-side count at plan-construction time).
-    * When both are set, the absolute cap wins. */
-  def shingles(docs: DataFrame, n: Int, maxDf: Option[Long] = None,
+    * `maxDfPct`: percent-of-corpus cap computed INSIDE the job
+    * (`greatest(floor(ndocs·pct/100), 2)` via a broadcast 1-row count — no
+    * eager driver-side count at plan-construction time). None = uncapped. */
+  def shingles(docs: DataFrame, n: Int,
       maxDfPct: Option[Int] = None): DataFrame = {
     // pre-split through a projection boundary: without the alias, codegen
     // inlines `split(trim(lower(text)))` into every element_at inside the
@@ -111,14 +100,9 @@ object TextOps {
       .select(col("doc_id"), split(trim(lower(col("text"))), "\\s+").as("_ws"))
       .select(col("doc_id"), explode(wordNgramsFromWords(col("_ws"), n)).as("shingle"))
       .select(col("doc_id"), substring(md5(col("shingle")), 1, 16).as("sh"))
-    val cap: Option[Column] = (maxDf, maxDfPct) match {
-      case (Some(c), _) => Some(lit(c))
-      case (None, Some(pct)) => Some(col("_dfcap"))
-      case _ => None
-    }
-    cap match {
+    maxDfPct match {
       case None => exploded.distinct()
-      case Some(capCol) =>
+      case Some(pct) =>
         // ONE exchange for dedup + document frequency: hash-partition by
         // shingle hash first, then both the (doc_id, sh) dedup (a hash
         // aggregate whose clustered-distribution requirement a subset
@@ -132,17 +116,13 @@ object TextOps {
         val withDf = exploded.repartition(col("sh"))
           .dropDuplicates("doc_id", "sh")
           .withColumn("_df", count(lit(1)).over(w))
-        val capped = maxDfPct match {
-          case Some(pct) if maxDf.isEmpty =>
-            // (ndocs·pct)/100.0 is exact in double (ndocs·pct is an exact
-            // long), so floor(...) == ndocs·pct // 100 — mirrors the
-            // DuckDB oracle's integer division bit-for-bit
-            val total = docs.select(
-              greatest(floor(count(lit(1)) * pct / 100.0), lit(2L)).as("_dfcap"))
-            withDf.crossJoin(broadcast(total))
-          case _ => withDf
-        }
-        capped.filter(col("_df") <= capCol)
+        // (ndocs·pct)/100.0 is exact in double (ndocs·pct is an exact
+        // long), so floor(...) == ndocs·pct // 100 — mirrors the DuckDB
+        // oracle's integer division bit-for-bit
+        val total = docs.select(
+          greatest(floor(count(lit(1)) * pct / 100.0), lit(2L)).as("_dfcap"))
+        withDf.crossJoin(broadcast(total))
+          .filter(col("_df") <= col("_dfcap"))
           .select("doc_id", "sh")
     }
   }
@@ -154,7 +134,7 @@ object TextOps {
     * stays a true Jaccard of the retained sets.
     * Output: (doc_a, doc_b, jaccard_x1000). */
   def ngramJaccardPairs(docs: DataFrame, n: Int = 3, thresholdX1000: Int = 300,
-      maxDf: Option[Long] = None, maxDfPct: Option[Int] = None): DataFrame = {
+      maxDfPct: Option[Int] = None): DataFrame = {
     // persisted: referenced three times below (sizes + both self-join
     // sides); without it the explode+distinct pipeline runs three times.
     // The operator OWNS the cache lifecycle: the (small, above-threshold)
@@ -163,7 +143,7 @@ object TextOps {
     // cacheManager. Checkpoint blocks free when the returned Dataset is
     // GC'd; an executor loss fails the consuming job loudly instead of
     // silently recomputing (acceptable for a bounded result set).
-    val shingled = shingles(docs, n, maxDf, maxDfPct)
+    val shingled = shingles(docs, n, maxDfPct)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val sizes = shingled.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))

@@ -131,15 +131,12 @@ object Gateway {
     * `?q=topic` when the site has no e-commerce; topics embed in questions
     * with JS template quoting; spaces in topics become `+` in query
     * actions; the `search` context type falls through to the default arm
-    * (no case of its own). */
-  def coldStartQuestions(path: Column, baseUrl: String,
-      hasEcommerce: Boolean): Column =
-    coldStartQuestionsFrom(path, detectContext(path), baseUrl, hasEcommerce)
-
-  /** Variant taking an already-computed [[detectContext]] struct column —
-    * callers that materialize the context once (e.g. via `withColumn`)
-    * avoid inlining the whole detection when-chain at every one of the
-    * ~10 type/topic use sites below. */
+    * (no case of its own).
+    *
+    * Takes an already-computed [[detectContext]] struct column: callers
+    * materialize the context once (e.g. via `withColumn`) instead of
+    * inlining the whole detection when-chain at every one of the ~10
+    * type/topic use sites below. */
   def coldStartQuestionsFrom(path: Column, ctx: Column, baseUrl: String,
       hasEcommerce: Boolean): Column = {
     val dtype = ctx.getField("detected_type")

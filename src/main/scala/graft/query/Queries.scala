@@ -1831,6 +1831,22 @@ object Queries {
         AND q.is_quality AND l.lang_pred = d.lang
       ORDER BY d.doc_id"""))
 
+  /** The one MinHash setting every sketch query runs (3-word shingles,
+    * 16 hashes in 4 bands, est. Jaccard ≥ 0.25, shingles in more than 5%
+    * of the documents dropped), parameterized ONLY on the hash mode so the
+    * md5-portable registry queries and their xxhash64 bench twins are the
+    * same code path by construction. */
+  private def minHashPairs(docs: DataFrame, portable: Boolean): DataFrame =
+    Dedup.minHashPairs(docs, n = 3, k = 16, bands = 4,
+      minEstJaccardX1000 = 250, portable = portable, maxDfPct = Some(5))
+
+  /** [[minHashPairs]]' setting through [[Dedup.neardupClusters]]: every
+    * document labeled with its near-dup cluster. */
+  private def neardupClusters(s: SparkSession, dir: String,
+      portable: Boolean): DataFrame =
+    Dedup.neardupClusters(rd(s, dir, "documents"), n = 3, k = 16, bands = 4,
+      minEstJaccardX1000 = 250, portable = portable, maxDfPct = Some(5))
+
   /** Curation capstone v2 — NEAR-dup aware: quality gate ∧ language-ID
     * agreement ∧ near-dup CLUSTER canonical survivors (the min-doc_id of
     * each connected component of the minhash pair graph, so a≈b≈c chains
@@ -1838,11 +1854,9 @@ object Queries {
     * directly). This closes the full pairs → clusters → selection loop
     * end-to-end in one oracle-checked query; the DuckDB mirror re-derives
     * the pair set and labels components by recursive reachability — an
-    * independent algorithm from the Spark side's iterative min-label
-    * relaxation. */
+    * independent algorithm from the Spark side's star contraction. */
   /** The near-dup curation pipeline, parameterized ONLY on the hash mode
-    * so the md5-portable registry query and the xxhash64 bench twin are
-    * the same code path by construction. */
+    * like [[minHashPairs]]. */
   private def curationNeardupPipeline(s: SparkSession, dir: String,
       portable: Boolean): DataFrame = {
     val docs = rd(s, dir, "documents")
@@ -1854,9 +1868,7 @@ object Queries {
     // join, filter label == id, LEFT SEMI back against the full corpus):
     // one small broadcastable side instead of two corpus-sized join
     // inputs. Result set is identical (docs ∖ losers ≡ label == id).
-    val losers = Dedup.connectedComponents(
-      Dedup.minHashPairs(docs, n = 3, k = 16, bands = 4,
-        minEstJaccardX1000 = 250, portable = portable, maxDfPct = Some(5)))
+    val losers = Dedup.connectedComponents(minHashPairs(docs, portable))
       .filter(col("doc_id") =!= col("cluster_id"))
       .select("doc_id")
     curationFeatured(docs).join(losers, Seq("doc_id"), "left_anti")
@@ -1961,8 +1973,7 @@ object Queries {
   /** Portable minhash (md5-based permutation hashes + md5 band keys) for
     * the oracle; the xxhash64 production path is exercised in OpsSpec. */
   private val xMinHashPairs = Q(
-    (s, dir) => Dedup.minHashPairs(rd(s, dir, "documents"), n = 3, k = 16,
-      bands = 4, minEstJaccardX1000 = 250, portable = true, maxDfPct = Some(5))
+    (s, dir) => minHashPairs(rd(s, dir, "documents"), portable = true)
       .orderBy("doc_a", "doc_b"),
     Some(s"$minHashPairsSelectSql\n      ORDER BY doc_a, doc_b"))
 
@@ -1976,12 +1987,9 @@ object Queries {
     * component diameter, per-round checkpoint, (long,long)-only
     * shuffles). Oracle: the SAME pair set re-derived in
     * DuckDB, then a RECURSIVE label-reachability CTE — an independent CC
-    * algorithm (reachability closure vs iterative relaxation). */
+    * algorithm (reachability closure vs edge contraction). */
   private val xNeardupClusters = Q(
-    (s, dir) => Dedup.neardupClusters(rd(s, dir, "documents"), n = 3,
-      k = 16, bands = 4, minEstJaccardX1000 = 250, portable = true,
-      maxDfPct = Some(5))
-      .orderBy("doc_id"),
+    (s, dir) => neardupClusters(s, dir, portable = true).orderBy("doc_id"),
     Some(s"""WITH RECURSIVE pairs AS ($minHashPairsSelectSql
       ), $ccReachCtesSql
       SELECT node AS doc_id, CAST(min(label) AS BIGINT) AS cluster_id
@@ -3683,14 +3691,11 @@ object Queries {
     * production numbers; graft.Verify keeps the portable twins. */
   val benchProductionOverrides: Map[String, (SparkSession, String) => DataFrame] = Map(
     "x_minhash_pairs" -> ((s: SparkSession, dir: String) =>
-      Dedup.minHashPairs(rd(s, dir, "documents"), n = 3, k = 16, bands = 4,
-        minEstJaccardX1000 = 250, portable = false, maxDfPct = Some(5))),
+      minHashPairs(rd(s, dir, "documents"), portable = false)),
     "x_simhash" -> ((s: SparkSession, dir: String) =>
       TextOps.simHash(rd(s, dir, "documents"))),
     "x_neardup_clusters" -> ((s: SparkSession, dir: String) =>
-      Dedup.neardupClusters(rd(s, dir, "documents"), n = 3, k = 16,
-        bands = 4, minEstJaccardX1000 = 250, portable = false,
-        maxDfPct = Some(5))),
+      neardupClusters(s, dir, portable = false)),
     "x_curation_neardup" -> ((s: SparkSession, dir: String) =>
       curationNeardupPipeline(s, dir, portable = false)))
 }

@@ -188,12 +188,39 @@ class ExtractJobSpec extends AnyFunSuite {
   test("salted repartition preserves rows and spreads a mega-conversation") {
     import spark.implicits._
     val turns = Transcripts.generate(spark, 5, megaTurns = 2000, nMega = 1)
-    val salted = ExtractJob.saltedByConv(turns, partitions = 8, saltBuckets = 8)
+    val salted = ExtractJob.saltedByConv(turns, partitions = 8, salts = 8)
     assert(salted.count() == turns.count())
     val perPartition = salted
       .filter($"conv_id" === "mega-0")
       .mapPartitions(it => Iterator.single(it.length)).collect().filter(_ > 0)
     assert(perPartition.length > 1, "mega conversation should span multiple partitions")
+  }
+
+  test("salting composes as run's input: the bucket filter pushes below the salted repartition") {
+    import spark.implicits._
+    val turns = Transcripts.generate(spark, 30, megaTurns = 300, nMega = 1)
+    val inGroup = ExtractJob.bucketOf(8).isin(0, 1, 2, 3)
+    // the form run used to build per group (slice, then salt) vs the one a
+    // caller gets by passing saltedByConv(turns, ...) to run (salt, then slice)
+    val old = ExtractJob.saltedByConv(turns.filter(inGroup).as[Turn], 8, 8)
+    val composed = ExtractJob.saltedByConv(turns, 8, 8).filter(inGroup).as[Turn]
+    assert(old.queryExecution.optimizedPlan == composed.queryExecution.optimizedPlan,
+      s"${old.queryExecution.optimizedPlan}\nvs\n${composed.queryExecution.optimizedPlan}")
+    def sorted(ds: org.apache.spark.sql.Dataset[Turn]) =
+      ds.collect().sortBy(t => (t.conv_id, t.turn_idx)).toSeq
+    assert(sorted(old).nonEmpty && sorted(old) == sorted(composed))
+
+    val dirPlain = Files.createTempDirectory("graft-plain").toString
+    val dirSalted = Files.createTempDirectory("graft-salted").toString
+    ExtractJob.run(turns, ExtractJob.Config(dirPlain, buckets = 8, groups = 2))
+    ExtractJob.run(ExtractJob.saltedByConv(turns, 8, 8),
+      ExtractJob.Config(dirSalted, buckets = 8, groups = 2))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.toString).toSeq
+    assert(rows(ExtractJob.readPages(spark, dirSalted)) ==
+      rows(ExtractJob.readPages(spark, dirPlain)))
+    assert(rows(ExtractJob.readChunks(spark, dirSalted)) ==
+      rows(ExtractJob.readChunks(spark, dirPlain)))
   }
 
   test("scale smoke: 50k-turn mega-conversation through the full ordered pipeline") {

@@ -5,14 +5,12 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property test for BOTH connected-components implementations
-  * ([[Dedup.connectedComponentsStar]], the diameter-robust default, and
-  * [[Dedup.connectedComponentsMinLabel]]) against an INDEPENDENT
-  * driver-side union-find on random graphs — chains, stars, uniform
-  * random edge soups, and mixed multi-component graphs with duplicate /
-  * reversed / self-loop edges. The r4 oracle exercised one distribution
-  * shape (replica fans); this pins min-of-component labeling across
-  * arbitrary shapes.
+/** Property test for connected components ([[Dedup.connectedComponents]],
+  * star contraction) against an INDEPENDENT driver-side union-find on
+  * random graphs — chains, stars, uniform random edge soups, and mixed
+  * multi-component graphs with duplicate / reversed / self-loop edges.
+  * The r4 oracle exercised one distribution shape (replica fans); this
+  * pins min-of-component labeling across arbitrary shapes.
   */
 class CCPropertySpec extends AnyFunSuite {
 
@@ -71,19 +69,13 @@ class CCPropertySpec extends AnyFunSuite {
       chain ++ star ++ star.map(_.swap) ++ Seq((500L, 500L))
   }
 
-  test("both CC algorithms == driver union-find on random graph shapes") {
+  test("star CC == driver union-find on random graph shapes") {
     val s = spark; import s.implicits._
     forAll(graphGen, 6) { edges =>
       val expected = unionFind(edges)
-      val pairs = edges.toDF("doc_a", "doc_b")
-      val algos: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] =
-        Seq("star" -> (df => Dedup.connectedComponentsStar(df, 50)),
-          "minlabel" -> (df => Dedup.connectedComponentsMinLabel(df, 50)))
-      for ((name, algo) <- algos) {
-        val got = algo(pairs).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(got == expected, s"$name labels diverge from union-find on $edges")
-      }
+      val got = Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"), 50)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == expected, s"star labels diverge from union-find on $edges")
       assert(spark.sharedState.cacheManager.isEmpty)
     }
   }

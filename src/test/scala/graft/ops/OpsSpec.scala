@@ -113,10 +113,11 @@ class OpsSpec extends AnyFunSuite {
     // uncapped: the shared boilerplate phrase links all six pairs
     val uncapped = TextOps.ngramJaccardPairs(d, n = 3, thresholdX1000 = 1).collect()
     assert(uncapped.length == 6)
-    // df cap 2: boilerplate shingles (df=4) drop; only the real near-dup
-    // pair (1,2) survives, with Jaccard over the retained sets (3/8)
+    // 5% cap over 4 docs = greatest(floor(4·5/100), 2) = 2: boilerplate
+    // shingles (df=4) drop; only the real near-dup pair (1,2) survives,
+    // with Jaccard over the retained sets (3/8)
     val capped = TextOps.ngramJaccardPairs(d, n = 3, thresholdX1000 = 300,
-      maxDf = Some(2L)).collect()
+      maxDfPct = Some(5)).collect()
     assert(capped.map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 2L)))
     assert(capped.head.getLong(2) == 375L)
   }
@@ -286,42 +287,35 @@ class OpsSpec extends AnyFunSuite {
     assert(recall >= 0.2, s"ivf recall $recall") // random vectors: worst case
   }
 
-  test("connected components collapse transitive near-dup chains (both algorithms)") {
+  test("connected components collapse transitive near-dup chains (star contraction)") {
     val s = spark; import s.implicits._
     // chain 1-2-3 (1≈2, 2≈3, but 1 never pairs with 3 directly),
     // separate pair 7-9, singleton edge-less docs absent from pairs
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("doc_a", "doc_b")
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L)
-    for (algo <- Seq(Dedup.connectedComponents(_: org.apache.spark.sql.DataFrame, 50),
-        Dedup.connectedComponentsMinLabel(_: org.apache.spark.sql.DataFrame, 50))) {
-      val cc = algo(pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(cc == expected)
-      // a longer path exercises multi-round behavior: min-label crosses a
-      // lineage-truncation checkpoint round (every 5th); star alternates
-      val chain = (0 until 6).map(i => (i.toLong, i + 1L)).toDF("doc_a", "doc_b")
-      val cc2 = algo(chain).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(cc2.values.toSet == Set(0L) && cc2.size == 7)
-      assert(spark.sharedState.cacheManager.isEmpty,
-        "operator must release every persisted generation")
-    }
-    // an iteration cap that would truncate the contraction/propagation
-    // must fail loudly, never return partial (wrong) labels
+    val cc = Dedup.connectedComponents(pairs, 50).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(cc == expected)
+    // a longer path exercises multi-round behavior: star alternates
     val chain = (0 until 6).map(i => (i.toLong, i + 1L)).toDF("doc_a", "doc_b")
-    for (thunk <- Seq(
-        () => Dedup.connectedComponents(chain, maxIters = 1),
-        () => Dedup.connectedComponentsMinLabel(chain, maxIters = 2))) {
-      val ex = intercept[IllegalStateException](thunk())
-      assert(ex.getMessage.contains("did not converge"))
-      assert(spark.sharedState.cacheManager.isEmpty,
-        "the failure path must release caches too")
-    }
+    val cc2 = Dedup.connectedComponents(chain, 50).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(cc2.values.toSet == Set(0L) && cc2.size == 7)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "operator must release every persisted generation")
+    // an iteration cap that would truncate the contraction must fail
+    // loudly, never return partial (wrong) labels
+    val ex = intercept[IllegalStateException](
+      Dedup.connectedComponents(chain, maxIters = 1))
+    assert(ex.getMessage.contains("did not converge"))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the failure path must release caches too")
   }
 
   test("star contraction converges in O(log n) rounds on a depth-200 chain") {
     val s = spark; import s.implicits._
-    // min-label would need 201 rounds here; star needs ~2·log2(200) ≈ 15
+    // level-synchronous label propagation would need 201 rounds here;
+    // star needs ~2·log2(200) ≈ 15
     val chain = (0 until 200).map(i => (i.toLong, i + 1L)).toDF("doc_a", "doc_b")
     val (labels, rounds) = Dedup.starRounds(chain, maxIters = 50)
     val cc = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -232,6 +232,37 @@ class PlanSpec extends AnyFunSuite {
     assert(!pf.contains("Sort "), "fingerprint must not embed any sort:\n" + pf.take(1200))
   }
 
+  test("inner MinHash plan: sh exchange + df window, cap count, doc_id signatures, pair distinct") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val (frame, sigs) = graft.ops.Dedup.minHashPairsPlanned(docs, n = 3, k = 16,
+      bands = 4, minEstJaccardX1000 = 250, maxDfPct = Some(5))
+    try {
+      // formatted mode prints each numbered node once, so an exchange under
+      // the signature cache counts once however many scans reuse it
+      val p = frame.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      val nodes = p.split("\n\n").toSeq.map(_.trim)
+        .filter(_.matches("""(?s)\(\d+\) .*"""))
+      def args(name: String): Seq[String] = nodes
+        .filter(_.linesIterator.next().matches(s"""\\(\\d+\\) $name"""))
+        .flatMap(_.linesIterator.find(_.startsWith("Arguments: ")))
+      val exchanges = args("Exchange")
+      def one(what: String, re: String): scala.util.matching.Regex.Match = {
+        val hits = exchanges.flatMap(re.r.findFirstMatchIn)
+        assert(hits.size == 1, s"want one $what exchange, got ${hits.size}:\n" + p.take(6000))
+        hits.head
+      }
+      val sh = one("shingle", """^Arguments: hashpartitioning\((sh#\d+), \d+\)""").group(1)
+      assert(args("Window").exists(_.endsWith(s"[$sh]")),
+        s"the df window must partition by the exchanged $sh:\n" + p.take(6000))
+      one("cap count", """^Arguments: SinglePartition,""")
+      one("signature", """^Arguments: hashpartitioning\(doc_id#\d+L?, \d+\)""")
+      one("candidate distinct",
+        """^Arguments: hashpartitioning\(doc_a#\d+L?, doc_b#\d+L?, \d+\)""")
+      assert(exchanges.size == 4, s"want 4 exchanges, got $exchanges:\n" + p.take(6000))
+    } finally sigs.unpersist()
+  }
+
   test("sync envelope composes as one plan: no window, partial collect aggs, 1-row join") {
     val p = plan("x_sync_envelope")
     assert(!p.contains("Window"), "envelope must not use window functions:\n" + p.take(1500))
