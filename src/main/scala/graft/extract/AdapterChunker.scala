@@ -1,6 +1,7 @@
 package graft.extract
 
 import java.util.regex.Pattern
+import TextUtil.phpTrim
 
 /** The cross-adapter chunker covering ALL NINE of the reference's
   * framework ports, which hold SEVEN distinct behaviors (see
@@ -106,17 +107,40 @@ object AdapterChunker {
   private val tagRe = Pattern.compile("<[^>]*>")
   private val spaceTabRe = Pattern.compile("[ \\t]+")
   private val manyNewlinesRe = Pattern.compile("\\n{3,}")
-  private val wsSplitRe = Pattern.compile("\\s+", Pattern.UNICODE_CHARACTER_CLASS)
   private val paraSplitRe = Pattern.compile("\\n{2,}")
-  private val listLineRe = Pattern.compile("^(\\d+[.)]\\s|[-*+]\\s)",
-    Pattern.UNICODE_CHARACTER_CLASS)
 
-  /** JS `String.prototype.trim()`: Unicode whitespace + BOM. */
-  private def jsTrim(s: String): String = {
+  /** JS whitespace — what both `/\s/` and `String.prototype.trim()`
+    * accept: \t-\r, the Unicode space separators (Zs), U+2028, U+2029
+    * and the BOM U+FEFF. Unlike Python's `str.isspace` ([[TextUtil.isPyWs]])
+    * it excludes \x1c-\x1f and U+0085. */
+  @inline private def isJsWs(c: Char): Boolean = c match {
+    case '\t' | '\n' | '\u000B' | '\f' | '\r' | ' ' | '\u00A0' | '\u1680' |
+         '\u2028' | '\u2029' | '\u202F' | '\u205F' | '\u3000' | '\uFEFF' => true
+    case _ => c >= '\u2000' && c <= '\u200A'
+  }
+
+  /** A regex character class matching exactly the units `ws` accepts. */
+  private def charClass(ws: Char => Boolean): String =
+    (0 to 0xFFFF).filter(i => ws(i.toChar))
+      .map(i => f"\\x{$i%x}").mkString("[", "", "]")
+
+  private val jsWsSplitRe = Pattern.compile(charClass(isJsWs) + "+")
+
+  /** `^(\d+[.)]\s|[-*+]\s)` under the host's `\s`: JS regexes have an
+    * ASCII `\d`; Python `re` on str has a Unicode `\d`. */
+  private def listLineRe(ws: Char => Boolean, flags: Int): Pattern = {
+    val s = charClass(ws)
+    Pattern.compile(s"^(\\d+[.)]$s|[-*+]$s)", flags)
+  }
+  private val jsListLineRe = listLineRe(isJsWs, 0)
+  private val pyListLineRe =
+    listLineRe(TextUtil.isPyWs, Pattern.UNICODE_CHARACTER_CLASS)
+
+  /** JS `String.prototype.trim()`. */
+  private[extract] def jsTrim(s: String): String = {
     var a = 0; var b = s.length
-    def ws(c: Char) = Character.isWhitespace(c) || Character.isSpaceChar(c) || c == '﻿'
-    while (a < b && ws(s.charAt(a))) a += 1
-    while (b > a && ws(s.charAt(b - 1))) b -= 1
+    while (a < b && isJsWs(s.charAt(a))) a += 1
+    while (b > a && isJsWs(s.charAt(b - 1))) b -= 1
     if (a == 0 && b == s.length) s else s.substring(a, b)
   }
 
@@ -138,7 +162,7 @@ object AdapterChunker {
 
   /** chunker.js:40-42. */
   def countWords(text: String): Int =
-    wsSplitRe.split(jsTrim(text), -1).count(_.nonEmpty)
+    jsWsSplitRe.split(jsTrim(text), -1).count(_.nonEmpty)
 
   /** C4: code / quote / heading / list / paragraph — chunker.js:48-73. */
   def detectType(text: String): String = {
@@ -148,7 +172,7 @@ object AdapterChunker {
     else if (trimmed.startsWith(">")) "quote"
     else if (lines.length == 1 && countWords(text) < 15) "heading"
     else {
-      val listLines = lines.count(l => listLineRe.matcher(jsTrim(l)).find())
+      val listLines = lines.count(l => jsListLineRe.matcher(jsTrim(l)).find())
       if (lines.nonEmpty && listLines.toDouble / lines.length >= 0.5) "list"
       else "paragraph"
     }
@@ -172,22 +196,13 @@ object AdapterChunker {
     val lines = trimmed.split("\n", -1)
     if (lines.length == 1 && countWords(text) < 15) "heading"
     else {
-      val listLines = lines.count(l => listLineRe.matcher(jsTrim(l)).find())
+      val listLines = lines.count(l => jsListLineRe.matcher(jsTrim(l)).find())
       if (lines.nonEmpty && listLines.toDouble / lines.length >= 0.5) "list"
       else "paragraph"
     }
   }
 
   // ---- PHP string semantics (WP variant) ------------------------------
-
-  /** PHP `trim()` default charlist: " \t\n\r\0\x0B" — ASCII only. */
-  private def phpTrim(s: String): String = {
-    val chars = " \t\n\r\u0000\u000B"
-    var a = 0; var b = s.length
-    while (a < b && chars.indexOf(s.charAt(a)) >= 0) a += 1
-    while (b > a && chars.indexOf(s.charAt(b - 1)) >= 0) b -= 1
-    if (a == 0 && b == s.length) s else s.substring(a, b)
-  }
 
   /** PHP `str_word_count($s)` (C locale, no extra charlist): scans for
     * tokens of `[A-Za-z'-]`, where a token may start at `'`/`-` only when
@@ -260,26 +275,6 @@ object AdapterChunker {
 
   // ---- Python string semantics (FastAPI variant) ----------------------
 
-  /** Python `str.isspace()` per char: the ASCII control whitespace incl.
-    * \x1c-\x1f and \x85, plus Unicode Zs/Zl/Zp. */
-  @inline private def pyIsSpace(c: Char): Boolean = c.toInt match {
-    case 0x09 | 0x0A | 0x0B | 0x0C | 0x0D | 0x1C | 0x1D | 0x1E | 0x1F |
-         0x85 => true
-    case _ => Character.getType(c) match {
-      case Character.SPACE_SEPARATOR | Character.LINE_SEPARATOR |
-           Character.PARAGRAPH_SEPARATOR => true
-      case _ => false
-    }
-  }
-
-  /** Python `str.strip()`. */
-  private[extract] def pyStrip(s: String): String = {
-    var a = 0; var b = s.length
-    while (a < b && pyIsSpace(s.charAt(a))) a += 1
-    while (b > a && pyIsSpace(s.charAt(b - 1))) b -= 1
-    if (a == 0 && b == s.length) s else s.substring(a, b)
-  }
-
   /** Python `str.splitlines()`: universal-newline boundaries (\n \r \r\n
     * \v \f \x1c \x1d \x1e \x85 U+2028 U+2029), no trailing empty line,
     * "" → zero lines. */
@@ -307,7 +302,7 @@ object AdapterChunker {
   private[extract] def pyCountWords(s: String): Int = {
     var i = 0; var count = 0; var inWord = false
     while (i < s.length) {
-      if (pyIsSpace(s.charAt(i))) inWord = false
+      if (TextUtil.isPyWs(s.charAt(i))) inWord = false
       else { if (!inWord) count += 1; inWord = true }
       i += 1
     }
@@ -317,10 +312,10 @@ object AdapterChunker {
   /** chunker.py:39-54: single-splitlines-line `< 15`-word heading first,
     * then `[-*+]` list at ratio ≥ 0.5, else paragraph — no code/quote. */
   private def detectTypeFastApi(text: String): String = {
-    val lines = pySplitlines(pyStrip(text))
+    val lines = pySplitlines(TextUtil.stripPy(text))
     if (lines.length == 1 && pyCountWords(text) < 15) "heading"
     else {
-      val listLines = lines.count(l => listLineRe.matcher(pyStrip(l)).find())
+      val listLines = lines.count(l => pyListLineRe.matcher(TextUtil.stripPy(l)).find())
       if (lines.nonEmpty && listLines.toDouble / lines.length >= 0.5) "list"
       else "paragraph"
     }
@@ -553,24 +548,6 @@ object AdapterChunker {
     else words.mkString(" ")
   }
 
-  private val md5Local = ThreadLocal.withInitial(
-    () => java.security.MessageDigest.getInstance("MD5"))
-  private val hexDigits = "0123456789abcdef".toCharArray
-
-  def md5Hex(s: String): String = {
-    val md = md5Local.get()
-    md.reset()
-    val d = md.digest(s.getBytes("UTF-8"))
-    val out = new Array[Char](d.length * 2)
-    var i = 0
-    while (i < d.length) {
-      out(i * 2) = hexDigits((d(i) >> 4) & 0xF)
-      out(i * 2 + 1) = hexDigits(d(i) & 0xF)
-      i += 1
-    }
-    new String(out)
-  }
-
   /** Joomla's packing (Chunker.php:40-57): a CHARACTER budget, not a
     * word budget — flush when the trim-joined candidate exceeds
     * TARGET_CHARS = 500 `mb_strlen` code points. */
@@ -589,25 +566,26 @@ object AdapterChunker {
     out.result()
   }
 
-  /** Drupal's packing (ChunkerService.php:73-91): also a 500-CHARACTER
-    * `mb_strlen` budget, but over the SUM of paragraph code-point
-    * lengths — the `"\n\n"` joiners are not counted, unlike Joomla's
-    * trim-joined candidate — with flush on `current_len + para_len >
-    * 500` only when `current_len > 0`, and a final flush on
-    * `current_text !== ''`. */
-  private def packDrupalChars(paragraphs: Array[String]): Vector[String] = {
+  /** Greedy paragraph packing: append each paragraph to the current
+    * chunk (joined by "\n\n") unless the chunk is non-empty and the SUM
+    * of the paragraphs' `size` would exceed `budget` — the joiners are not
+    * counted. Sizes: express/WP/FastAPI/TS `WordsPerChunk` words and Woo
+    * 300 words, under each host's word count (chunker.js:82-122); Drupal
+    * 500 `mb_strlen` code points (ChunkerService.php:73-91). */
+  private[extract] def packBySum(paragraphs: Array[String], size: String => Int,
+      budget: Int): Vector[String] = {
     val out = Vector.newBuilder[String]
     var current = ""
-    var currentLen = 0
+    var currentSize = 0
     paragraphs.foreach { p =>
-      val pLen = p.codePointCount(0, p.length)
-      if (currentLen > 0 && currentLen + pLen > 500) {
+      val pSize = size(p)
+      if (currentSize > 0 && currentSize + pSize > budget) {
         out += current
         current = p
-        currentLen = pLen
+        currentSize = pSize
       } else {
         current = if (current.isEmpty) p else current + "\n\n" + p
-        currentLen += pLen
+        currentSize += pSize
       }
     }
     if (current.nonEmpty) out += current
@@ -640,7 +618,7 @@ object AdapterChunker {
     val trimF: String => String = variant match {
       case Express | Ts => jsTrim
       case Wp | Joomla | Woo | Drupal => phpTrim
-      case FastApi => pyStrip
+      case FastApi => TextUtil.stripPy
     }
     val wcF: String => Int = variant match {
       case Express | Ts => countWords
@@ -655,30 +633,14 @@ object AdapterChunker {
     val paragraphs = paraSplitRe.split(text, -1).map(trimF).filter(keep)
     if (paragraphs.isEmpty) return Vector.empty
 
-    val chunkTexts: Vector[String] =
-      if (variant == Joomla) packJoomlaChars(paragraphs)
-      else if (variant == Drupal) packDrupalChars(paragraphs)
-      else {
-        val budget = if (variant == Woo) 300 else WordsPerChunk
-        val out = Vector.newBuilder[String]
-        var current = ""
-        var currentWords = 0
-        paragraphs.foreach { para =>
-          val paraWords = wcF(para)
-          if (currentWords > 0 && currentWords + paraWords > budget) {
-            out += current
-            current = para
-            currentWords = paraWords
-          } else {
-            current = if (current.isEmpty) para else current + "\n\n" + para
-            currentWords += paraWords
-          }
-        }
-        if (current.nonEmpty) out += current
-        out.result()
-      }
+    val chunkTexts: Vector[String] = variant match {
+      case Joomla => packJoomlaChars(paragraphs)
+      case Drupal => packBySum(paragraphs, TextUtil.cpLength, 500)
+      case Woo => packBySum(paragraphs, wcF, 300)
+      case _ => packBySum(paragraphs, wcF, WordsPerChunk)
+    }
 
-    val idPrefix = if (variant == Woo) "p" + url else md5Hex(url)
+    val idPrefix = if (variant == Woo) "p" + url else TextUtil.md5Hex(url)
     chunkTexts.zipWithIndex.map { case (t, i) =>
       AChunk(s"${idPrefix}_$i", t, detectType(t, variant), relevance = None)
     }
@@ -790,7 +752,7 @@ object AdapterChunker {
     * summarise is line-identical). */
   def summarise(html: String, words: Int = 40): String = {
     val text = cleanHtml(html)
-    val wordList = wsSplitRe.split(text, -1).filter(_.nonEmpty)
+    val wordList = jsWsSplitRe.split(text, -1).filter(_.nonEmpty)
     if (wordList.length <= words) text
     else wordList.take(words).mkString(" ") + "..."
   }

@@ -50,7 +50,7 @@ object HostNumbers {
     * raises ValueError → None. `int("1_0")` is 10 where every other
     * host sees 1 (or rejects). */
   def pyIntParse(s: String): Option[Long] = {
-    val t = AdapterChunker.pyStrip(s)
+    val t = TextUtil.stripPy(s)
     if (t.isEmpty) return None
     var i = 0
     var sign = 1L

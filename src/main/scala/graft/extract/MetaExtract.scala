@@ -29,9 +29,6 @@ object MetaExtract {
       extra.collectFirst { case (key, v) if key == k => v }.getOrElse(JNull)
   }
 
-  val emptyMeta: Meta = Meta(JNull, JNull, JNull, JNull, JNull, Vector.empty,
-    JNull, JStr("page"), JNull, Vector.empty)
-
   // -------------------------------------------------------------------
   // M1: JSON-LD block scan over RAW html — `_JSONLD_RE`, chunker.py:57-60
   // -------------------------------------------------------------------
@@ -327,8 +324,6 @@ object MetaExtract {
       image, if (ogType.truthy) ogType else JStr("page"), JNull, Vector.empty))
   }
 
-  def extractOpenGraph(doc: HElem): Option[Meta] = extractOpenGraph(new MetaIndex(doc))
-
   // -------------------------------------------------------------------
   // M14: HTML fallback — `_extract_html_meta`, chunker.py:475-524
   // -------------------------------------------------------------------
@@ -347,8 +342,6 @@ object MetaExtract {
     Meta(title, description, author, published, JNull, keywords, JNull,
       JStr("page"), JNull, Vector.empty)
   }
-
-  def extractHtmlMeta(doc: HElem): Meta = extractHtmlMeta(new MetaIndex(doc))
 
   /** published-date resolution shared by `_extract_html_meta` (:509-517) and
     * `_extract_meta` (:599-609): meta property|name in

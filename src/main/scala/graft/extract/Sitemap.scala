@@ -1,5 +1,8 @@
 package graft.extract
 
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
+
 /** sitemap.xml parsing (S2), pinned to what the reference actually does —
   * `/root/reference/sidecar/crawler.py:63-81`: ElementTree parse, then
   * `findall("sm:sitemap/sm:loc")` (index entries → recursively fetched)
@@ -7,7 +10,7 @@ package graft.extract
   * `http://www.sitemaps.org/schemas/sitemap/0.9`, `if loc.text:` then
   * `.text.strip()`. The fetch/recursion is the network side (out of
   * scope); this is the pure parse: one document in → its direct-child loc
-  * entries out, each tagged `url` or `sitemap` so a driver loop can
+  * entries out, each tagged `url` or `sitemap` so `Crawl.sitemapSeeds` can
   * recurse exactly like the reference.
   *
   * Built on the JDK's namespace-aware SAX parser so well-formedness
@@ -33,6 +36,13 @@ object Sitemap {
   def parse(xml: String): Vector[Entry] =
     try parseStrict(xml)
     catch { case _: Exception => Vector.empty } // crawler.py:80 catch-all
+
+  /** [[parse]] as a column function: `array<struct<_1: kind, _2: loc>>`,
+    * empty for a NULL document. The parse is row-local (one document in,
+    * its entries out), so it runs wherever the xml column is. */
+  lazy val locs: UserDefinedFunction = udf((xml: String) =>
+    if (xml == null) Seq.empty[(String, String)]
+    else parse(xml).map(e => (e.kind, e.loc)))
 
   private def parseStrict(xml: String): Vector[Entry] = {
     val factory = javax.xml.parsers.SAXParserFactory.newInstance()

@@ -56,6 +56,42 @@ object TextUtil {
     if (a == 0 && b == s.length) s else s.substring(a, b)
   }
 
+  /** PHP `trim()` default charlist: " \t\n\r\0\x0B" — ASCII only. */
+  def phpTrim(s: String): String = {
+    val chars = " \t\n\r\u0000\u000B"
+    var a = 0; var b = s.length
+    while (a < b && chars.indexOf(s.charAt(a)) >= 0) a += 1
+    while (b > a && chars.indexOf(s.charAt(b - 1)) >= 0) b -= 1
+    if (a == 0 && b == s.length) s else s.substring(a, b)
+  }
+
+  private val sha256Local = ThreadLocal.withInitial(
+    () => java.security.MessageDigest.getInstance("SHA-256"))
+  private val md5Local = ThreadLocal.withInitial(
+    () => java.security.MessageDigest.getInstance("MD5"))
+  private val hexDigits = "0123456789abcdef".toCharArray
+
+  /** Lowercase hex SHA-256 of the UTF-8 bytes (Python `hashlib.sha256(s.encode()).hexdigest()`). */
+  def sha256Hex(s: String): String = hexDigest(sha256Local, s)
+
+  /** Lowercase hex MD5 of the UTF-8 bytes (PHP `md5($s)`). */
+  def md5Hex(s: String): String = hexDigest(md5Local, s)
+
+  private def hexDigest(local: ThreadLocal[java.security.MessageDigest],
+      s: String): String = {
+    val md = local.get()
+    md.reset()
+    val d = md.digest(s.getBytes("UTF-8"))
+    val out = new Array[Char](d.length * 2)
+    var i = 0
+    while (i < d.length) {
+      out(i * 2) = hexDigits((d(i) >> 4) & 0xF)
+      out(i * 2 + 1) = hexDigits(d(i) & 0xF)
+      i += 1
+    }
+    new String(out)
+  }
+
   /** Sentence-boundary splitter of `_split_long_text`:
     * `re.split(r"(?<=[.!?])\s+", text)` — `/root/reference/sidecar/chunker.py:92`.
     *

@@ -96,18 +96,10 @@ object Wpautop {
     if (a == 0 && b == s.length) s else s.substring(a, b)
   }
 
-  private def phpTrimDefault(s: String): String = {
-    val chars = " \t\n\r\u0000\u000B"
-    var a = 0; var b = s.length
-    while (a < b && chars.indexOf(s.charAt(a)) >= 0) a += 1
-    while (b > a && chars.indexOf(s.charAt(b - 1)) >= 0) b -= 1
-    if (a == 0 && b == s.length) s else s.substring(a, b)
-  }
-
   /** `wpautop($text, $br = true)`, same statement order as the WP core
     * source. */
   def apply(input: String, br: Boolean = true): String = {
-    if (phpTrimDefault(input).isEmpty) return ""
+    if (TextUtil.phpTrim(input).isEmpty) return ""
 
     // Pad the end ("just to make things a little easier").
     var text = input + "\n"

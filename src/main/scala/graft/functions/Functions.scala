@@ -93,8 +93,7 @@ object Functions {
     spark.udf.register("of_extract_chunks",
       udf((url: String, html: String) =>
         graft.extract.ChunkHtml(url, html).chunks.zipWithIndex.map { case (c, i) =>
-          SqlChunk(graft.job.ExtractJob.sha256Hex(s"$url::chunk::$i").take(16),
-            c.text, c.chunkType)
+          SqlChunk(graft.job.ExtractJob.chunkId(url, i), c.text, c.chunkType)
         }))
     // tool-dispatched variant — shares ExtractJob.RawFallbackTools routing
     // (render/pdf -> 50 KB-capped flatten-to-spans, else HTML pipeline);
@@ -103,8 +102,7 @@ object Functions {
       udf((url: String, text: String, tool: String) =>
         graft.job.ExtractJob.chunksFor(url, text, tool).zipWithIndex.map {
           case (c, i) =>
-            SqlChunk(graft.job.ExtractJob.sha256Hex(s"$url::chunk::$i").take(16),
-              c.text, c.chunkType)
+            SqlChunk(graft.job.ExtractJob.chunkId(url, i), c.text, c.chunkType)
         }))
     // gateway helpers (shared constants with graft.query.Gateway)
     spark.udf.register("of_is_llm_bot",
@@ -122,9 +120,7 @@ object Functions {
     // crawl-side parsers (crawler.py sitemap/robots semantics); for bulk
     // gating parse once and use Robots.Rules.allowedColumn instead
     spark.udf.register("of_sitemap_locs",
-      udf((xml: String) =>
-        if (xml == null) Seq.empty[(String, String)]
-        else graft.extract.Sitemap.parse(xml).map(e => (e.kind, e.loc))))
+      graft.extract.Sitemap.locs)
     spark.udf.register("of_robots_allowed",
       udf((content: String, agent: String, url: String) =>
         // null url/agent can't be gated — answer false (don't crawl the

@@ -35,9 +35,11 @@ import org.apache.spark.sql.functions._
   */
 object Crawl {
 
-  /** BFS over `links(src, dst)` from `seeds`, up to `maxDepth` levels.
-    * Returns (url, depth) with depth = first-discovery level (the min
-    * BFS distance).
+  /** BFS over `links(src, dst)` from the distributed seed set `seeds`
+    * (one `url` column), up to `maxDepth` levels. Returns (url, depth)
+    * with depth = first-discovery level (the min BFS distance). Seeds
+    * stay distributed: a large site's sitemap tree can carry millions of
+    * seed urls, which must never round-trip through a driver Seq.
     *
     * Visited-set hygiene: only each level's DELTA is materialized
     * (localCheckpoint of the newly-discovered urls); the visited set used
@@ -50,17 +52,7 @@ object Crawl {
     * rediscover any earlier page), but each is an already-materialized
     * in-memory RDD scan, and the union plan is flat (one LogicalRDD child
     * per level, not a lineage chain). */
-  def bfs(links: DataFrame, seeds: Seq[String], maxDepth: Int): DataFrame = {
-    val spark = links.sparkSession
-    import spark.implicits._
-    bfsFrom(links, seeds.toDF("url"), maxDepth)
-  }
-
-  /** [[bfs]] with a DISTRIBUTED seed set (one `url` column) — the shape a
-    * sitemap-seeded crawl needs: a large site's sitemap tree can carry
-    * millions of seed urls, which must never round-trip through a driver
-    * Seq. */
-  def bfsFrom(links: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
+  def bfs(links: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
     // materialize the edge table once: every level joins against it, and
     // without this an expensive upstream plan (scans, aggregates, unions)
     // would re-execute per level. (A repartition-by-src before the
@@ -102,68 +94,43 @@ object Crawl {
   def capPages(bfsOut: DataFrame, maxPages: Int): DataFrame =
     bfsOut.orderBy(col("depth"), col("url")).limit(maxPages)
 
+  /** Index recursion depth of [[sitemapSeeds]]: sitemaps up to
+    * `MaxIndexDepth - 1` index hops below the root are read. */
+  val MaxIndexDepth = 5
+
   /** `_fetch_sitemap` recursion (crawler.py:62-81): starting from the
     * root sitemap url, sitemap-INDEX entries recurse into their child
     * sitemaps and url entries accumulate as crawl seeds — over a
     * pre-fetched `sitemaps(url, xml)` table (north rule: the input table
-    * replaces the network fetch). The recursion is a driver loop joining
-    * the current sitemap frontier against the table (sitemap COUNT is
-    * tiny — the spec caps a sitemap at 50k urls, so even 10^9 pages is
-    * ~20k sitemap files), while the url entries explode distributed via
-    * [[graft.extract.Sitemap.parse]] — a single sitemap's locs never
+    * replaces the network fetch). The recursion is a [[bfs]] over the
+    * index edges (sitemap url → child sitemap loc) from the root, to depth
+    * `MaxIndexDepth - 1`; the result is the url entries of every sitemap
+    * it reaches. Each document is parsed once, distributed, via
+    * [[graft.extract.Sitemap.locs]] — a single sitemap's locs never
     * funnel through the driver. An unknown child sitemap url (absent from
     * the table) contributes nothing, like the reference's swallowed fetch
-    * failure (crawler.py:78-80); index cycles are cut by a seen anti-join
-    * (the reference would loop — fetch depth caps at `maxIndexDepth`).
-    * Returns the distinct seed urls (one `url` column), ready for
-    * [[bfsFrom]] after the caller adds the root page
+    * failure (crawler.py:78-80); index cycles are cut by the bfs visited
+    * set (the reference would loop — fetch depth caps at
+    * [[MaxIndexDepth]]). Returns the distinct seed urls (one `url`
+    * column), ready for [[bfs]] after the caller adds the root page
     * (crawler.py:151-162: sitemap seeds first, root always included). */
-  def sitemapSeeds(sitemaps: DataFrame, rootSitemap: String,
-      maxIndexDepth: Int = 5): DataFrame = {
+  def sitemapSeeds(sitemaps: DataFrame, rootSitemap: String): DataFrame = {
     val spark = sitemaps.sparkSession
     import spark.implicits._
-    val parseLocs = udf((xml: String) =>
-      if (xml == null) Seq.empty[(String, String)]
-      else graft.extract.Sitemap.parse(xml).map(e => (e.kind, e.loc)))
-    val sm = sitemaps.select(col("url"), col("xml")).localCheckpoint(false)
-    var frontier = Seq(rootSitemap).toDF("sm_url").localCheckpoint(true)
-    var frontierCount = 1L
-    val seenLevels = scala.collection.mutable.ArrayBuffer(frontier)
-    // per level, `entries` feeds BOTH the seed accumulator and the next
-    // frontier: persist (lazy) instead of localCheckpoint (eager) so the
-    // level costs ONE materializing job (the frontier checkpoint, which
-    // populates the cache on the way) instead of two; the cache entries
-    // are released after the seed set is materialized at exit.
-    val entryLevels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var seeds: Option[DataFrame] = None
-    var d = 0
-    while (d < maxIndexDepth && frontierCount > 0) {
-      d += 1
-      val entries = sm.join(frontier, sm("url") === frontier("sm_url"))
-        .select(explode(parseLocs(col("xml"))).as("e"))
-        .select(col("e._1").as("kind"), col("e._2").as("loc"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      entryLevels += entries
-      val pageUrls = entries.filter(col("kind") === "url")
-        .select(col("loc").as("url"))
-      seeds = Some(seeds.map(_.unionByName(pageUrls)).getOrElse(pageUrls))
-      // lazy checkpoint + count: one materializing job per level (the
-      // count doubles as the loop's emptiness probe), populating the
-      // `entries` cache on the way
-      val next = entries.filter(col("kind") === "sitemap")
-        .select(col("loc").as("sm_url"))
-        .distinct()
-        .join(seenLevels.reduce(_ unionByName _), Seq("sm_url"), "left_anti")
-        .localCheckpoint(false)
-      frontierCount = next.count()
-      seenLevels += next
-      frontier = next
-    }
-    // materialize the seed set before releasing the per-level caches —
-    // the caller must never depend on this operator's cache lifecycle
-    val out = seeds.map(_.distinct().localCheckpoint(true))
-      .getOrElse(Seq.empty[String].toDF("url"))
-    entryLevels.foreach(_.unpersist())
-    out
+    // lazy: materializes inside the walk's first level job, so the parse
+    // runs once per row and both the walk and the url pick read it
+    val entries = sitemaps
+      .select(col("url").as("sm_url"),
+        explode(graft.extract.Sitemap.locs(col("xml"))).as("e"))
+      .select(col("sm_url"), col("e._1").as("kind"), col("e._2").as("loc"))
+      .localCheckpoint(false)
+    val index = entries.filter(col("kind") === "sitemap")
+      .select(col("sm_url").as("src"), col("loc").as("dst"))
+    val reached = bfs(index, Seq(rootSitemap).toDF("url"), MaxIndexDepth - 1)
+      .select(col("url").as("sm_url"))
+    entries.filter(col("kind") === "url")
+      .join(reached, Seq("sm_url"), "left_semi")
+      .select(col("loc").as("url"))
+      .distinct()
   }
 }

@@ -5,7 +5,7 @@ import java.time.ZoneOffset
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.extract.{ChunkHtml, JNull, JStr, JsonLite}
+import graft.extract.{ChunkHtml, JNull, JStr, JsonLite, TextUtil}
 import graft.model._
 
 /** The flagship batch job: transcripts → extracted turns + chunk table +
@@ -35,23 +35,14 @@ object ExtractJob {
   private val isoFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ssxxx")
     .withZone(ZoneOffset.UTC)
 
-  private val sha256Local = ThreadLocal.withInitial(
-    () => java.security.MessageDigest.getInstance("SHA-256"))
-  private val hexDigits = "0123456789abcdef".toCharArray
+  /** Sidecar chunk id: the first 16 hex digits of SHA-256 over the url
+    * and the chunk index (indexer.py:383-387). */
+  def chunkId(url: String, i: Int): String =
+    TextUtil.sha256Hex(s"$url::chunk::$i").take(16)
 
-  def sha256Hex(s: String): String = {
-    val md = sha256Local.get()
-    md.reset()
-    val d = md.digest(s.getBytes("UTF-8"))
-    val out = new Array[Char](d.length * 2)
-    var i = 0
-    while (i < d.length) {
-      out(i * 2) = hexDigits((d(i) >> 4) & 0xF)
-      out(i * 2 + 1) = hexDigits(d(i) & 0xF)
-      i += 1
-    }
-    new String(out)
-  }
+  /** Sidecar page id: the first 16 hex digits of SHA-256 over the
+    * prefixed url (indexer.py:383-392). */
+  def pageId(url: String): String = TextUtil.sha256Hex(s"page::$url").take(16)
 
   private def utf8Len(s: String): Long = {
     var n = 0L; var i = 0
@@ -96,14 +87,14 @@ object ExtractJob {
     val iso = isoFmt.format(t.ts.toInstant)
     val fl = graft.extract.SpanFlatten.flatten(t.text)
     val chunks = fl.chunks.zipWithIndex.map { case (c, i) =>
-      ChunkOut(sha256Hex(s"$url::chunk::$i").take(16), i, c.text, c.chunkType)
+      ChunkOut(chunkId(url, i), i, c.text, c.chunkType)
     }
     val meta = MetadataOut(None, None, None, None, None, Vector.empty, None,
       meta_type = "raw", schema_type = None, extra = Map.empty)
     val bytesOut = chunks.map(c => utf8Len(c.text)).sum + utf8Len(fl.summary)
     ExtractedTurn(
       conv_id = t.conv_id, turn_idx = t.turn_idx, turn_pos = 0L,
-      url = url, page_id = sha256Hex(s"page::$url").take(16),
+      url = url, page_id = pageId(url),
       role = t.role, tool = t.tool, ts = t.ts,
       title = "", author = None, published = None,
       updated = iso, language = "en",
@@ -119,7 +110,7 @@ object ExtractJob {
     val ex = ChunkHtml.extract(url, t.text, Some(iso))
     val page = ex.page
     val chunks = page.chunks.zipWithIndex.map { case (c, i) =>
-      ChunkOut(sha256Hex(s"$url::chunk::$i").take(16), i, c.text, c.chunkType)
+      ChunkOut(chunkId(url, i), i, c.text, c.chunkType)
     }
     val m = page.metadata
     val meta = MetadataOut(
@@ -136,7 +127,7 @@ object ExtractJob {
       utf8Len(page.title)
     ExtractedTurn(
       conv_id = t.conv_id, turn_idx = t.turn_idx, turn_pos = 0L,
-      url = url, page_id = sha256Hex(s"page::$url").take(16),
+      url = url, page_id = pageId(url),
       role = t.role, tool = t.tool, ts = t.ts,
       title = page.title, author = page.author, published = page.published,
       updated = page.updated.getOrElse(iso), language = page.language,

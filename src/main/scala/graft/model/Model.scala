@@ -13,8 +13,8 @@ final case class Turn(
     tool: String,
     ts: Timestamp)
 
-/** One extracted content chunk. Id scheme follows the sidecar:
-  * `sha256(f"{url}::chunk::{idx}")[:16]` —
+/** One extracted content chunk. Id scheme follows the sidecar
+  * ([[graft.job.ExtractJob.chunkId]]) —
   * `/root/reference/sidecar/indexer.py:383-387`. `chunk_index` is kept
   * explicit (the reference re-sorts by hash id at read time,
   * `indexer.py:246-247` — a quirk we do not propagate to storage). */

@@ -119,10 +119,7 @@ object VectorOps {
     val words = java.util.regex.Pattern.compile("\\s+")
       .split(lowered.substring(a, b), -1)
     words.foldLeft(Map.empty[Int, Long].withDefaultValue(0L)) { (m, w) =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(w.getBytes("UTF-8")).take(4)
-        .map(x => f"${x & 0xff}%02x").mkString
-      val h = java.lang.Long.parseLong(hex, 16)
+      val h = java.lang.Long.parseLong(graft.extract.TextUtil.md5Hex(w).take(8), 16)
       val bkt = (h % dim).toInt
       m.updated(bkt, m(bkt) + (if (((h >> 8) & 1) == 1) 1L else -1L))
     }.filter(_._2 != 0L)

@@ -151,25 +151,28 @@ object Queries {
       upper(substr(source,1,1)) || substr(source,2) AS topic
       FROM documents ORDER BY doc_id"""))
 
-  /** S1: the crawl's BFS reachability over a deterministic link graph
-    * derived from documents (each page links to (2i+1) mod N and
-    * (3i+2) mod N), seeded at the root like crawler.py:156-160. The
-    * oracle is a DuckDB RECURSIVE CTE computing min-depth reachability —
-    * a genuinely independent BFS implementation. The corpus-size modulus
-    * is computed in-job via a broadcast 1-row count (no plan-construction
+  /** The crawl queries' link graph over `documents`: page `/p/i` links
+    * to `/p/((2i+1) mod N)` and `/p/((3i+2) mod N)`. The corpus size N is
+    * computed in-job via a broadcast 1-row count (no plan-construction
     * driver count). */
+  private def pageLinks(s: SparkSession, dir: String): DataFrame = {
+    val docs = rd(s, dir, "documents").select(col("doc_id"))
+    val base = docs.crossJoin(broadcast(docs.agg(count(lit(1)).as("_n"))))
+    def page(c: Column): Column = concat(lit("/p/"), c)
+    base.select(page(col("doc_id")).as("src"),
+        page(pmod(col("doc_id") * 2 + 1, col("_n"))).as("dst"))
+      .unionByName(base.select(page(col("doc_id")).as("src"),
+        page(pmod(col("doc_id") * 3 + 2, col("_n"))).as("dst")))
+  }
+
+  /** S1: the crawl's BFS reachability over [[pageLinks]], seeded at the
+    * root like crawler.py:156-160. The oracle is a DuckDB RECURSIVE CTE
+    * computing min-depth reachability — a genuinely independent BFS
+    * implementation. */
   private val s1CrawlBfs = Q(
     (s, dir) => {
-      val docs = rd(s, dir, "documents").select(col("doc_id"))
-      val n = docs.agg(count(lit(1)).as("_n"))
-      val base = docs.crossJoin(broadcast(n))
-      def page(c: Column): Column = concat(lit("/p/"), c)
-      val edges =
-        base.select(page(col("doc_id")).as("src"),
-            page(pmod(col("doc_id") * 2 + 1, col("_n"))).as("dst"))
-          .unionByName(base.select(page(col("doc_id")).as("src"),
-            page(pmod(col("doc_id") * 3 + 2, col("_n"))).as("dst")))
-      graft.job.Crawl.bfs(edges, Seq("/p/0"), maxDepth = 6)
+      import s.implicits._
+      graft.job.Crawl.bfs(pageLinks(s, dir), Seq("/p/0").toDF("url"), maxDepth = 6)
         .orderBy("url")
     },
     Some("""WITH RECURSIVE e AS (
@@ -199,8 +202,6 @@ object Queries {
     * presentation sort. */
   private val s2SitemapParse = Q(
     (s, dir) => {
-      val parseLocs = udf((xml: String) =>
-        graft.extract.Sitemap.parse(xml).map(e => (e.kind, e.loc)))
       val xml =
         when(pmod(col("doc_id"), lit(4)) === 0,
           concat(
@@ -216,7 +217,7 @@ object Queries {
             lit("/page-1?a=1&amp;b=2 </loc></url><url><loc>http://site/"), col("doc_id"),
             lit("/page-2</loc></url></urlset>")))
       rd(s, dir, "documents")
-        .select(col("doc_id"), explode(parseLocs(xml)).as("e"))
+        .select(col("doc_id"), explode(graft.extract.Sitemap.locs(xml)).as("e"))
         .select(col("doc_id"), col("e._1").as("kind"), col("e._2").as("loc"))
         .orderBy("doc_id", "loc")
     },
@@ -243,7 +244,7 @@ object Queries {
     * (crawler.py:62-81 sitemap recursion feeding crawler.py:151-162 BFS):
     * a sitemap INDEX resolves through [[graft.job.Crawl.sitemapSeeds]]
     * into its two child urlsets' page urls, the root page is always
-    * included, and [[graft.job.Crawl.bfsFrom]] walks the link graph from
+    * included, and [[graft.job.Crawl.bfs]] walks [[pageLinks]] from
     * that distributed seed set under the `max_pages` cap. The oracle
     * re-derives the same seeds set-theoretically and replays the BFS as
     * a RECURSIVE CTE — an independent implementation of both halves. */
@@ -251,9 +252,6 @@ object Queries {
     (s, dir) => {
       import s.implicits._
       val docs = rd(s, dir, "documents").select(col("doc_id"))
-      val n = docs.agg(count(lit(1)).as("_n"))
-      val base = docs.crossJoin(broadcast(n))
-      def page(c: Column): Column = concat(lit("/p/"), c)
       // sitemap tree: one index → two child urlsets over disjoint slices
       def urlset(mod: Int): DataFrame = docs
         .filter(pmod(col("doc_id"), lit(10)) === mod)
@@ -273,13 +271,10 @@ object Queries {
         .sitemapSeeds(sitemaps, "http://site/sitemap.xml")
         .select(regexp_replace(col("url"), "^http://site", "").as("url"))
         .unionByName(Seq("/").toDF("url")) // root always enters the queue
-      val edges = base.select(page(col("doc_id")).as("src"),
-          page(pmod(col("doc_id") * 2 + 1, col("_n"))).as("dst"))
-        .unionByName(base.select(page(col("doc_id")).as("src"),
-          page(pmod(col("doc_id") * 3 + 2, col("_n"))).as("dst")))
+      val edges = pageLinks(s, dir)
         .unionByName(Seq(("/", "/p/0")).toDF("src", "dst"))
       graft.job.Crawl.capPages(
-        graft.job.Crawl.bfsFrom(edges, seeds, maxDepth = 4), maxPages = 200)
+        graft.job.Crawl.bfs(edges, seeds, maxDepth = 4), maxPages = 200)
     },
     Some("""WITH RECURSIVE seeds AS (
         SELECT DISTINCT '/p/' || doc_id AS url FROM documents

@@ -2,6 +2,7 @@ package graft.extract
 
 import org.scalatest.funsuite.AnyFunSuite
 import AdapterChunker._
+import TextUtil.{md5Hex, stripPy}
 
 /** Goldens for the adapter-variant chunker, per
   * `/root/reference/adapters/express/src/chunker.js:19-136` and the FastAPI
@@ -438,7 +439,7 @@ class AdapterChunkerSpec extends AnyFunSuite {
       assert(phpStrWordCount(s) >= 0)
       assert(pyCountWords(s) >= 0)
       assert(pySplitlines(s).mkString.length <= s.length)
-      assert(pyStrip(s).length <= s.length)
+      assert(stripPy(s).length <= s.length)
     }
   }
 

@@ -39,7 +39,7 @@ class FunctionsSpec extends AnyFunSuite {
     assert(out.length == 2)
     assert(out.map(_.getInt(2)).toSeq == Seq(300, 300))
     assert(out.forall(_.getString(0).startsWith(
-      graft.extract.AdapterChunker.md5Hex("https://e.com/p"))))
+      graft.extract.TextUtil.md5Hex("https://e.com/p"))))
   }
 
   test("of_extract_chunks from SQL: sidecar pipeline, typed chunks with sha ids") {

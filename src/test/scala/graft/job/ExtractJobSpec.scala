@@ -126,14 +126,14 @@ class ExtractJobSpec extends AnyFunSuite {
     // a -> b -> c -> d, a -> c (shortcut), e isolated, d -> a (cycle)
     val links = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("a", "c"), ("d", "a"),
       ("e", "e")).toDF("src", "dst")
-    val out = graft.job.Crawl.bfs(links, Seq("a"), maxDepth = 10)
+    val out = graft.job.Crawl.bfs(links, Seq("a").toDF("url"), maxDepth = 10)
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     // shortcut wins: c is depth 1 (min), not 2; cycle terminates; e absent
     assert(out == Map("a" -> 0, "b" -> 1, "c" -> 1, "d" -> 2))
     assert(spark.sharedState.cacheManager.isEmpty)
     // page cap cuts by (depth, url): top-3 = a, then b/c at depth 1
     val capped = graft.job.Crawl.capPages(
-      graft.job.Crawl.bfs(links, Seq("a"), maxDepth = 10), maxPages = 3)
+      graft.job.Crawl.bfs(links, Seq("a").toDF("url"), maxDepth = 10), maxPages = 3)
       .collect().map(_.getString(0)).toSet
     assert(capped == Set("a", "b", "c"))
     // robots composition: disallowing page b on the SOURCE side means b is
@@ -142,7 +142,7 @@ class ExtractJobSpec extends AnyFunSuite {
     val rules = graft.extract.Robots.parse("User-agent: *\nDisallow: /b\n")
     val gated = links
       .filter(rules.allowedColumn("OpenFeeder-Sidecar", concat(lit("/"), col("src"))))
-    val out2 = graft.job.Crawl.bfs(gated, Seq("a"), maxDepth = 10)
+    val out2 = graft.job.Crawl.bfs(gated, Seq("a").toDF("url"), maxDepth = 10)
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(out2 == Map("a" -> 0, "b" -> 1, "c" -> 1, "d" -> 2))
   }
@@ -151,7 +151,7 @@ class ExtractJobSpec extends AnyFunSuite {
     import spark.implicits._
     // depth-20 chain: n0 -> n1 -> ... -> n20
     val chain = (0 until 20).map(i => (f"n$i%02d", f"n${i + 1}%02d")).toDF("src", "dst")
-    val out = graft.job.Crawl.bfs(chain, Seq("n00"), maxDepth = 25)
+    val out = graft.job.Crawl.bfs(chain, Seq("n00").toDF("url"), maxDepth = 25)
     val got = out.collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(got == (0 to 20).map(i => f"n$i%02d" -> i).toMap)
     // the result is the union of the 21 checkpointed level deltas — one
