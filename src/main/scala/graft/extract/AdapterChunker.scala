@@ -167,15 +167,9 @@ object AdapterChunker {
   /** C4: code / quote / heading / list / paragraph — chunker.js:48-73. */
   def detectType(text: String): String = {
     val trimmed = jsTrim(text)
-    val lines = trimmed.split("\n", -1)
     if (trimmed.startsWith("```")) "code"
     else if (trimmed.startsWith(">")) "quote"
-    else if (lines.length == 1 && countWords(text) < 15) "heading"
-    else {
-      val listLines = lines.count(l => jsListLineRe.matcher(jsTrim(l)).find())
-      if (lines.nonEmpty && listLines.toDouble / lines.length >= 0.5) "list"
-      else "paragraph"
-    }
+    else detectTypeTs(text)
   }
 
   /** [[detectType]] under a specific adapter port's semantics. */
@@ -190,7 +184,8 @@ object AdapterChunker {
   }
 
   /** astro/nextjs/vite chunker.ts detectType: heading first, then
-    * `[-*+]` list, no code/quote — express string semantics. */
+    * `[-*+]` list, no code/quote — express string semantics; express is
+    * this rule behind its code and quote checks. */
   private def detectTypeTs(text: String): String = {
     val trimmed = jsTrim(text)
     val lines = trimmed.split("\n", -1)

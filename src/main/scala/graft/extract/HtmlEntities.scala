@@ -14,7 +14,9 @@ object HtmlEntities {
 
   private val named: Map[String, String] = Html5Entities.table
 
-  /** Legacy HTML4 subset kept for the entity-table regression test. */
+  /** The HTML 4.01 named-entity table plus `apos`; without `apos` it is
+    * PHP's ENT_HTML401 table, which [[decodePhpHtml4]] decodes with on
+    * the Joomla clean and summary paths. */
   private[extract] val html4Subset: Map[String, String] = Map(
     // XML / basic
     "amp" -> "&", "lt" -> "<", "gt" -> ">", "quot" -> "\"", "apos" -> "'",

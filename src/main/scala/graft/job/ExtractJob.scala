@@ -58,20 +58,46 @@ object ExtractJob {
   private def optStr(v: graft.extract.JVal): Option[String] =
     v match { case JNull => None; case other => Some(other.pyStr) }
 
-  /** One turn through the reference pipeline, dispatched on the `tool`
-    * column (SURVEY §1.3): `render`/`pdf` payloads take the raw-fallback
-    * flatten-to-spans path with the 50 KB cap
-    * (`/root/reference/mcp/src/tools/smart-fetch.ts:75-87`); everything
-    * else takes the full HTML extraction path. Deterministic: `updated`
-    * pinned to the turn's `ts` (chunker.py:733 uses wall-clock; we do not). */
   /** Tools routed to the raw-fallback flatten-to-spans path — the single
     * source of truth shared by [[extractOne]] and the `of_extract_turn`
     * SQL function. */
   val RawFallbackTools: Set[String] = Set("render", "pdf")
 
-  def extractOne(t: Turn): ExtractedTurn =
-    if (RawFallbackTools.contains(t.tool)) extractRawFallback(t)
-    else extractHtmlTurn(t)
+  /** One turn through the reference pipeline, dispatched on the `tool`
+    * column (SURVEY §1.3): `render`/`pdf` payloads take the raw-fallback
+    * flatten-to-spans path with the 50 KB cap
+    * (`/root/reference/mcp/src/tools/smart-fetch.ts:75-87`, see
+    * [[graft.extract.SpanFlatten]]) and no metadata chain — the
+    * reference's fallback returns the raw body; everything else takes the
+    * full HTML extraction path. Deterministic: `updated` pinned to the
+    * turn's `ts` (chunker.py:733 uses wall-clock; we do not). */
+  def extractOne(t: Turn): ExtractedTurn = {
+    val url = s"${t.conv_id}#${t.turn_idx}"
+    val iso = isoFmt.format(t.ts.toInstant)
+    if (RawFallbackTools.contains(t.tool)) {
+      val fl = graft.extract.SpanFlatten.flatten(t.text)
+      turnOut(t, url, fl.chunks, fl.summary, title = "", author = None,
+        published = None, updated = iso, language = "en", RawMeta,
+        fl.spansKept, fl.spansDropped)
+    } else {
+      val ex = ChunkHtml.extract(url, t.text, Some(iso))
+      val page = ex.page
+      val m = page.metadata
+      val meta = MetadataOut(
+        title = optStr(m.title), description = optStr(m.description),
+        author = optStr(m.author), published = optStr(m.published),
+        modified = optStr(m.modified), keywords = m.keywords,
+        image = optStr(m.image),
+        meta_type = m.metaType.pyStr,
+        schema_type = optStr(m.schemaType),
+        extra = m.extra.map { case (k, v) =>
+          k -> (v match { case JStr(s) => s; case o => JsonLite.render(o) })
+        }.toMap)
+      turnOut(t, url, page.chunks, page.summary, page.title, page.author,
+        page.published, page.updated.getOrElse(iso), page.language, meta,
+        ex.blocksKept, ex.blocksDropped)
+    }
+  }
 
   /** Tool-dispatched chunk list for one payload (the `of_extract_turn`
     * SQL surface; null-safe: null text yields no chunks). */
@@ -80,61 +106,29 @@ object ExtractJob {
     else if (RawFallbackTools.contains(tool)) graft.extract.SpanFlatten.flatten(text).chunks
     else ChunkHtml(if (url == null) "" else url, text).chunks
 
-  /** tool=render/pdf: 50 KB cap + flatten-to-spans (see [[SpanFlatten]]).
-    * No metadata chain — the reference's fallback returns the raw body. */
-  private def extractRawFallback(t: Turn): ExtractedTurn = {
-    val url = s"${t.conv_id}#${t.turn_idx}"
-    val iso = isoFmt.format(t.ts.toInstant)
-    val fl = graft.extract.SpanFlatten.flatten(t.text)
-    val chunks = fl.chunks.zipWithIndex.map { case (c, i) =>
-      ChunkOut(chunkId(url, i), i, c.text, c.chunkType)
-    }
-    val meta = MetadataOut(None, None, None, None, None, Vector.empty, None,
-      meta_type = "raw", schema_type = None, extra = Map.empty)
-    val bytesOut = chunks.map(c => utf8Len(c.text)).sum + utf8Len(fl.summary)
-    ExtractedTurn(
-      conv_id = t.conv_id, turn_idx = t.turn_idx, turn_pos = 0L,
-      url = url, page_id = pageId(url),
-      role = t.role, tool = t.tool, ts = t.ts,
-      title = "", author = None, published = None,
-      updated = iso, language = "en",
-      summary = fl.summary, chunks = chunks, metadata = meta,
-      n_chunks = chunks.length,
-      bytes_in = utf8Len(t.text), bytes_out = bytesOut,
-      blocks_kept = fl.spansKept, blocks_dropped = fl.spansDropped)
-  }
+  private val RawMeta = MetadataOut(None, None, None, None, None, Vector.empty,
+    None, meta_type = "raw", schema_type = None, extra = Map.empty)
 
-  private def extractHtmlTurn(t: Turn): ExtractedTurn = {
-    val url = s"${t.conv_id}#${t.turn_idx}"
-    val iso = isoFmt.format(t.ts.toInstant)
-    val ex = ChunkHtml.extract(url, t.text, Some(iso))
-    val page = ex.page
-    val chunks = page.chunks.zipWithIndex.map { case (c, i) =>
+  /** The one [[ExtractedTurn]] builder of both paths: chunk ids, the
+    * UTF-8 byte counts and the turn envelope. */
+  private def turnOut(t: Turn, url: String, chunks: Vector[ChunkHtml.Chunk],
+      summary: String, title: String, author: Option[String],
+      published: Option[String], updated: String, language: String,
+      meta: MetadataOut, kept: Int, dropped: Int): ExtractedTurn = {
+    val out = chunks.zipWithIndex.map { case (c, i) =>
       ChunkOut(chunkId(url, i), i, c.text, c.chunkType)
     }
-    val m = page.metadata
-    val meta = MetadataOut(
-      title = optStr(m.title), description = optStr(m.description),
-      author = optStr(m.author), published = optStr(m.published),
-      modified = optStr(m.modified), keywords = m.keywords,
-      image = optStr(m.image),
-      meta_type = m.metaType.pyStr,
-      schema_type = optStr(m.schemaType),
-      extra = m.extra.map { case (k, v) =>
-        k -> (v match { case JStr(s) => s; case o => JsonLite.render(o) })
-      }.toMap)
-    val bytesOut = chunks.map(c => utf8Len(c.text)).sum + utf8Len(page.summary) +
-      utf8Len(page.title)
     ExtractedTurn(
       conv_id = t.conv_id, turn_idx = t.turn_idx, turn_pos = 0L,
       url = url, page_id = pageId(url),
       role = t.role, tool = t.tool, ts = t.ts,
-      title = page.title, author = page.author, published = page.published,
-      updated = page.updated.getOrElse(iso), language = page.language,
-      summary = page.summary, chunks = chunks, metadata = meta,
-      n_chunks = chunks.length,
-      bytes_in = utf8Len(t.text), bytes_out = bytesOut,
-      blocks_kept = ex.blocksKept, blocks_dropped = ex.blocksDropped)
+      title = title, author = author, published = published,
+      updated = updated, language = language,
+      summary = summary, chunks = out, metadata = meta,
+      n_chunks = out.length,
+      bytes_in = utf8Len(t.text),
+      bytes_out = out.map(c => utf8Len(c.text)).sum + utf8Len(summary) + utf8Len(title),
+      blocks_kept = kept, blocks_dropped = dropped)
   }
 
   /** J8 skew mitigation: spread one conversation's turns across partitions
@@ -203,15 +197,18 @@ object ExtractJob {
       .select($"_pid", $"conv_id", $"_off")
     // left broadcast hash join streams `ranged` in place: within-partition
     // sort order survives, so the local running counter below stays valid
+    val turnCols = implicitly[org.apache.spark.sql.Encoder[ExtractedTurn]].schema
+      .fieldNames.map(col)
     ranged.join(broadcast(offsets), Seq("_pid", "conv_id"), "left")
       .na.fill(0L, Seq("_off"))
-      .as[ExtractedTurnWithPid].mapPartitions { it =>
+      .select(struct(turnCols: _*).as("_1"), $"_off".as("_2"))
+      .as[(ExtractedTurn, Long)].mapPartitions { it =>
         var lastConv: String = null
         var local = 0L
-        it.map { r =>
-          if (r.conv_id != lastConv) { lastConv = r.conv_id; local = 0L }
+        it.map { case (t, off) =>
+          if (t.conv_id != lastConv) { lastConv = t.conv_id; local = 0L }
           local += 1
-          r.toExtracted(r._off + local)
+          t.copy(turn_pos = off + local)
         }
       }
   }
@@ -311,19 +308,4 @@ object ExtractJob {
 
   def readChunks(spark: SparkSession, outDir: String): DataFrame =
     spark.read.parquet(s"$outDir/chunks")
-}
-
-/** Row shape used internally by [[ExtractJob.scalableTurnPos]]. `_off` is
-  * the turn-count prefix of this conversation in partitions before `_pid`. */
-final case class ExtractedTurnWithPid(
-    conv_id: String, turn_idx: Int, turn_pos: Long, url: String, page_id: String,
-    role: String, tool: String, ts: java.sql.Timestamp, title: String,
-    author: Option[String], published: Option[String], updated: String,
-    language: String, summary: String, chunks: Seq[ChunkOut],
-    metadata: MetadataOut, n_chunks: Int, bytes_in: Long, bytes_out: Long,
-    blocks_kept: Int, blocks_dropped: Int, _pid: Int, _off: Long) {
-  def toExtracted(pos: Long): ExtractedTurn = ExtractedTurn(
-    conv_id, turn_idx, pos, url, page_id, role, tool, ts, title, author,
-    published, updated, language, summary, chunks, metadata, n_chunks,
-    bytes_in, bytes_out, blocks_kept, blocks_dropped)
 }

@@ -25,6 +25,19 @@ object TextOps {
     ((length(text) - length(regexp_replace(text, java.util.regex.Pattern.quote(term), "")))
       / term.length).cast("int")
 
+  /** Lower-cased whitespace words — the one word split of the shingle,
+    * SimHash and hashed-feature operators. */
+  def words(text: Column): Column =
+    split(trim(lower(text)), "\\s+")
+
+  /** Mean word length ×100, integer-exact (n_words floored at 1). */
+  def meanWordLenX100(nChars: Column, nWords: Column): Column =
+    (nChars * 100L / greatest(nWords, lit(1))).cast("long")
+
+  /** The quality gate: at least 5 words with a mean length of 2..12. */
+  def isQuality(nWords: Column, meanLenX100: Column): Column =
+    (nWords >= 5) && (meanLenX100 between (200L, 1200L))
+
   /** doc_id, n_chars, n_words, n_tokens, n_punct, stop_hits, quality flags.
     * Quality scoring per the reference's "content appears real" noise check
     * spirit (`/root/reference/validator/checks.py:401-439`): all components
@@ -39,29 +52,40 @@ object TextOps {
       tokenCount(col("text")).as("n_tokens"),
       size(regexp_extract_all(col("text"), lit("[.!?,;:]"), lit(0))).as("n_punct"),
       stopHits.as("stop_hits"))
-      .withColumn("mean_word_len_x100",
-        (col("n_chars") * 100L / greatest(col("n_words"), lit(1))).cast("long"))
-      .withColumn("is_quality",
-        (col("n_words") >= 5) && (col("mean_word_len_x100") between (200L, 1200L)))
+      .withColumn("mean_word_len_x100", meanWordLenX100(col("n_chars"), col("n_words")))
+      .withColumn("is_quality", isQuality(col("n_words"), col("mean_word_len_x100")))
+  }
+
+  /** Function words per language, in tie-break priority order. */
+  private val LangWords: Seq[(String, Seq[String])] = Seq(
+    "en" -> Seq("the", "and", "of"),
+    "fr" -> Seq("le", "la", "et", "les"),
+    "es" -> Seq("el", "los", "que", "y"),
+    "de" -> Seq("der", "die", "und", "das"))
+
+  /** Per-language function-word hit counts over the lower-cased text, in
+    * [[LangWords]] order. */
+  def langHits(text: Column): Seq[Column] =
+    LangWords.map { case (_, ws) =>
+      ws.map(w => occurrences(lower(text), s" $w ")).reduce(_ + _) }
+
+  /** The language with the most hits; ties go to the earlier language in
+    * [[LangWords]]. `hits` is in [[LangWords]] order. */
+  def langPred(hits: Seq[Column]): Column = {
+    val langs = LangWords.map(_._1)
+    def beatsLater(i: Int) = hits.drop(i + 1).map(hits(i) >= _).reduce(_ && _)
+    (1 until langs.length - 1).foldLeft(when(beatsLater(0), langs.head)) {
+      (chain, i) => chain.when(beatsLater(i), langs(i))
+    }.otherwise(langs.last)
   }
 
   /** Heuristic language ID via function-word hits (n-gram heuristic class;
-    * deterministic tie-break by priority order en>fr>es>de>zh). */
+    * deterministic tie-break by priority order en>fr>es>de). */
   def langId(docs: DataFrame): DataFrame = {
-    def hits(words: Seq[String]): Column =
-      words.map(w => occurrences(lower(col("text")), s" $w ")).reduce(_ + _)
-    val en = hits(Seq("the", "and", "of"))
-    val fr = hits(Seq("le", "la", "et", "les"))
-    val es = hits(Seq("el", "los", "que", "y"))
-    val de = hits(Seq("der", "die", "und", "das"))
-    docs.select(col("doc_id"), col("lang"), en.as("en_hits"), fr.as("fr_hits"),
-        es.as("es_hits"), de.as("de_hits"))
-      .withColumn("lang_pred",
-        when(col("en_hits") >= col("fr_hits") && col("en_hits") >= col("es_hits")
-          && col("en_hits") >= col("de_hits"), "en")
-        .when(col("fr_hits") >= col("es_hits") && col("fr_hits") >= col("de_hits"), "fr")
-        .when(col("es_hits") >= col("de_hits"), "es")
-        .otherwise("de"))
+    val names = LangWords.map { case (l, _) => s"${l}_hits" }
+    val hits = langHits(col("text")).zip(names).map { case (h, n) => h.as(n) }
+    docs.select(col("doc_id") +: col("lang") +: hits: _*)
+      .withColumn("lang_pred", langPred(names.map(col)))
   }
 
   /** Exact dedup: canonical = min doc_id per md5(normalized text). The
@@ -72,16 +96,19 @@ object TextOps {
     * semi-join must not pay a pointless range-shuffle sort; queries that
     * need total order sort at the query layer). */
   def exactDedup(docs: DataFrame): DataFrame =
-    docs.select(md5(lower(regexp_replace(col("text"), "\\s+", " "))).as("text_hash"),
-        col("doc_id"))
+    docs.select(normalizedMd5(col("text")).as("text_hash"), col("doc_id"))
       .groupBy("text_hash")
       .agg(min("doc_id").as("canonical_id"), count(lit(1)).as("dup_count"))
 
   /** Normalized-text md5 fingerprint per document (SQL-parity variant of
     * document fingerprinting). Unordered, like [[exactDedup]]. */
   def fingerprint(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      md5(lower(regexp_replace(col("text"), "\\s+", " "))).as("fingerprint"))
+    docs.select(col("doc_id"), normalizedMd5(col("text")).as("fingerprint"))
+
+  /** md5 of the lower-cased text with whitespace runs collapsed to one
+    * space — the exact-dedup key and the document fingerprint. */
+  private def normalizedMd5(text: Column): Column =
+    md5(lower(regexp_replace(text, "\\s+", " ")))
 
   /** Distinct (doc_id, shingle-hash) pairs, optionally dropping shingles
     * above a document-frequency cap. A hot shingle (boilerplate phrase
@@ -94,10 +121,10 @@ object TextOps {
   def shingles(docs: DataFrame, n: Int,
       maxDfPct: Option[Int] = None): DataFrame = {
     // pre-split through a projection boundary: without the alias, codegen
-    // inlines `split(trim(lower(text)))` into every element_at inside the
+    // inlines the `words` split into every element_at inside the
     // transform lambda and re-splits the whole document O(words·n) times
     val exploded = docs
-      .select(col("doc_id"), split(trim(lower(col("text"))), "\\s+").as("_ws"))
+      .select(col("doc_id"), words(col("text")).as("_ws"))
       .select(col("doc_id"), explode(wordNgramsFromWords(col("_ws"), n)).as("shingle"))
       .select(col("doc_id"), substring(md5(col("shingle")), 1, 16).as("sh"))
     maxDfPct match {
@@ -162,13 +189,6 @@ object TextOps {
     } finally shingled.unpersist()
   }
 
-  /** Word n-grams as a column of space-joined shingles (pure expressions:
-    * split + transform over index range — no UDF). Documents with fewer
-    * than `n` words yield an empty array (unguarded, `sequence(0, -1)`
-    * would step backwards and `element_at(words, 0)` errors under ANSI). */
-  def wordNgrams(text: Column, n: Int): Column =
-    wordNgramsFromWords(split(trim(text), "\\s+"), n)
-
   /** n-grams over an already-split words column. Callers should alias the
     * split through a projection so it evaluates once per row (see
     * [[shingles]]).
@@ -214,44 +234,26 @@ object TextOps {
       scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
     }
 
-  /** 64-bit SimHash over whitespace words, each word hashed with xxhash64;
-    * implemented with pure expressions (explode + bit aggregation). */
-  def simHash(docs: DataFrame): DataFrame = {
-    val words = docs.select(col("doc_id"),
-      explode(split(trim(lower(col("text"))), "\\s+")).as("w"))
-      .select(col("doc_id"), xxhash64(col("w")).as("h"))
+  /** 64-bit SimHash over whitespace words; implemented with pure
+    * expressions (explode + bit aggregation). Output: (doc_id, simhash).
+    * The hash mode picks only the word hash: xxhash64 by default (~4×
+    * cheaper), or with `portable` two 32-bit md5 halves `h1 << 32 | h2`,
+    * reproducible in any SQL engine (the DuckDB oracle compares the two
+    * 32-bit halves of the result, bit b of `h2` for b < 32 and bit b−32
+    * of `h1` otherwise). */
+  def simHash(docs: DataFrame, portable: Boolean = false): DataFrame = {
+    def md5Half(from: Int) = conv(substring(md5(col("w")), from, 8), 16, 10).cast("long")
+    val h = if (portable) shiftleft(md5Half(1), 32).bitwiseOR(md5Half(9)) else xxhash64(col("w"))
+    val hashed = docs.select(col("doc_id"), explode(words(col("text"))).as("w"))
+      .select(col("doc_id"), h.as("h"))
     val bitCols = (0 until 64).map { b =>
       sum(when(shiftright(col("h"), b).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"b$b")
     }
-    val agg = words.groupBy("doc_id").agg(bitCols.head, bitCols.tail: _*)
+    val agg = hashed.groupBy("doc_id").agg(bitCols.head, bitCols.tail: _*)
     val sim = (0 until 64).map { b =>
       when(col(s"b$b") > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
     }.reduce(_.bitwiseOR(_))
     agg.select(col("doc_id"), sim.as("simhash"))
-  }
-
-  /** Portable SimHash: identical to [[simHash]] in structure but the word
-    * hash is two 32-bit halves of md5 instead of xxhash64, so the whole
-    * computation is reproducible in any SQL engine (DuckDB oracle).
-    * Production path stays [[simHash]] (xxhash64 is ~4× cheaper); this
-    * variant is the correctness gate. Output: (doc_id, sim_hi, sim_lo),
-    * each half in [0, 2^32). */
-  def simHashPortable(docs: DataFrame): DataFrame = {
-    val words = docs.select(col("doc_id"),
-      explode(split(trim(lower(col("text"))), "\\s+")).as("w"))
-      .select(col("doc_id"),
-        conv(substring(md5(col("w")), 1, 8), 16, 10).cast("long").as("h1"),
-        conv(substring(md5(col("w")), 9, 8), 16, 10).cast("long").as("h2"))
-    val votes = (0 until 32).map { b =>
-      sum(when(shiftright(col("h1"), b).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"hi$b")
-    } ++ (0 until 32).map { b =>
-      sum(when(shiftright(col("h2"), b).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"lo$b")
-    }
-    val agg = words.groupBy("doc_id").agg(votes.head, votes.tail: _*)
-    def fold(prefix: String): Column = (0 until 32).map { b =>
-      when(col(s"$prefix$b") > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    agg.select(col("doc_id"), fold("hi").as("sim_hi"), fold("lo").as("sim_lo"))
   }
 
   /** SimHash near-dup candidates: pairs within `maxHamming` bits, using

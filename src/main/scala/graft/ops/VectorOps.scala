@@ -85,7 +85,7 @@ object VectorOps {
     * combinable. */
   def hashedFeatures(docs: DataFrame, dim: Int): DataFrame = {
     val words = docs.select(col("doc_id"),
-      explode(split(trim(lower(col("text"))), "\\s+")).as("w"))
+      explode(TextOps.words(col("text"))).as("w"))
     val h = conv(substring(md5(col("w")), 1, 8), 16, 10).cast("long")
     words.select(col("doc_id"), pmod(h, lit(dim)).as("bucket"),
         when(shiftright(h, 8).bitwiseAND(1) === 1, 1L).otherwise(-1L).as("s"))

@@ -539,29 +539,15 @@ object Queries {
     Some("""SELECT l_orderkey, count(*) AS n_items FROM lineitem
       GROUP BY l_orderkey ORDER BY l_orderkey LIMIT 1000"""))
 
-  /** A6: the full per-endpoint rate limiter — exact `check_rate_limit`
-    * admission sequencing (rate_limiter.py:164-218) with
-    * `_get_endpoint_limit` classification (rate_limiter.py:145-162) and
-    * the X-RateLimit-Reset / retry_after math, per [[RateLimits]]. The
-    * request log is synthesized deterministically from events (20 ips ×
-    * the 5 endpoint classes; times in per-ip bands over a 1200 s burst —
-    * see [[rateLimitDecisions]] — first 40 per bucket), with per-class
-    * limits {default 4, search 2, discover 4,
-    * sync 3, webhook 1} — the reference's RATE_LIMIT_*_RPM env knobs
-    * scaled so both verdicts appear at test scale. The oracle replays the
-    * same greedy admission with a recursive CTE carrying each bucket's
-    * allowed-timestamp window, so the denial SET (not just counts) and
-    * every reset/retry_after value are checked. */
-  /** The shared a6 request synthesis + exact admission simulation —
-    * also feeds the a9 quota view. Request times land in per-ip BANDS so
-    * every bucket-lifecycle verdict exists at the a9 snapshot (t = 600):
+  /** The capped request log (ip, endpoint, sec, event_id, limit_rpm,
+    * epoch) shared by a6/a9/x_quota_reset; epoch 0 (no quota resets).
+    * Request times land in per-ip BANDS so every bucket-lifecycle verdict
+    * exists at the a9 snapshot (t = 600):
     * ips 0-2 only in [0, 250) (stale — swept before the snapshot), ips
     * 3-4 only in (600, 1101) (not yet seen), ips 5-7 in [310, 560)
     * (alive but mostly outside the 60 s count window — the live count-0
     * row), ips 8-13 in [480, 600) (alive with active counts), ips 14-19
     * across the whole [0, 1200) burst (long multi-window walks). */
-  /** The capped request log (ip, endpoint, sec, event_id, limit_rpm,
-    * epoch) shared by a6/a9/x_quota_reset; epoch 0 (no quota resets). */
   private def rateLimitRequests(s: SparkSession, dir: String): DataFrame = {
       val cfg = RateLimits.Config(defaultRpm = 4, searchRpm = 2,
         discoverRpm = 4, syncRpm = 3, webhookRpm = 1)
@@ -593,8 +579,6 @@ object Queries {
       RateLimits.simulate(rateLimitRequests(s, dir).as[RateLimits.Req]).toDF()
   }
 
-  /** The matching DuckDB decision-log SELECT (no final ORDER BY) —
-    * shared by the a6 oracle and the a9 quota-view oracle. */
   /** The DuckDB mirror of [[rateLimitRequests]]' banded synthesis
     * (`keyed` + `reqs` CTE bodies) — ONE copy, interpolated into every
     * limiter oracle so the request log can never drift between a6/a9
@@ -624,6 +608,8 @@ object Queries {
         WHERE rn <= 40
       )"""
 
+  /** The matching DuckDB decision-log SELECT (no final ORDER BY) —
+    * shared by the a6 oracle and the a9 quota-view oracle. */
   private def rateLimitDecisionsSql: String = s"""WITH RECURSIVE $rateLimitRequestsSqlCtes, lim AS (
         SELECT *, CASE WHEN contains(endpoint, '?q=') THEN 2
           WHEN contains(split_part(endpoint, '?', 1), '.well-known') THEN 4
@@ -651,36 +637,23 @@ object Queries {
         allowed, CAST(remaining AS INT) AS remaining, reset_ts, retry_after
       FROM sim"""
 
+  /** A6: the full per-endpoint rate limiter — exact `check_rate_limit`
+    * admission sequencing (rate_limiter.py:164-218) with
+    * `_get_endpoint_limit` classification (rate_limiter.py:145-162) and
+    * the X-RateLimit-Reset / retry_after math, per [[RateLimits]]. The
+    * request log is synthesized deterministically from events (20 ips ×
+    * the 5 endpoint classes; times in per-ip bands over a 1200 s burst —
+    * see [[rateLimitDecisions]] — first 40 per bucket), with per-class
+    * limits {default 4, search 2, discover 4,
+    * sync 3, webhook 1} — the reference's RATE_LIMIT_*_RPM env knobs
+    * scaled so both verdicts appear at test scale. The oracle replays the
+    * same greedy admission with a recursive CTE carrying each bucket's
+    * allowed-timestamp window, so the denial SET (not just counts) and
+    * every reset/retry_after value are checked. */
   private val a6RateWindow = Q(
     (s, dir) => rateLimitDecisions(s, dir).orderBy("ip", "endpoint", "event_id"),
     Some(s"$rateLimitDecisionsSql\n      ORDER BY ip, endpoint, event_id"))
 
-  /** A9: the `/admin/quota` usage view (main.py:818-837 →
-    * `RateLimiter.get_quota`, rate_limiter.py:218-273): a point-in-time
-    * snapshot per (ip, endpoint) bucket of the ALLOWED requests still
-    * inside the trailing 60 s window (denied requests are never recorded,
-    * so they never count), the bucket's limit, remaining, and
-    * percent_used rounded to 1 decimal — composed directly on the exact
-    * admission decision log, snapshot pinned at t=600 (mid-burst, so
-    * buckets show genuine partial usage). The admin-key gate itself is
-    * the x_auth_gate shape.
-    *
-    * Bucket EXISTENCE is exact: the reference lists only buckets alive in
-    * its in-memory map — created on the first `check_rate_limit` for the
-    * (ip, endpoint) key and evicted by the periodic stale sweep
-    * (`_cleanup_stale_buckets`, rate_limiter.py:132-144), where a bucket
-    * is stale once `now - last_cleanup > 300` (is_stale,
-    * rate_limiter.py:76-78) and `last_cleanup` advances on EVERY check —
-    * allowed or denied — because `bucket.cleanup()` runs before the
-    * verdict (rate_limiter.py:185, 65-69). So a bucket appears iff its
-    * last CHECKED request is within 300 s of the snapshot, and a bucket
-    * whose first request is after the snapshot does not exist yet. One
-    * modeling choice, stated: the reference's sweep fires on a 300 s
-    * timer whose phase depends on process start, so a stale bucket can
-    * linger up to one extra interval before eviction; this view pins the
-    * deterministic fixpoint "a sweep ran immediately before the
-    * snapshot" — the only phase-independent semantics a log-derived
-    * replay can state. */
   /** The alive-bucket quota view at snapshot t = 600 (unordered) —
     * shared by a9 and the x_quota_envelope composition. */
   private def quotaView(s: SparkSession, dir: String): DataFrame = {
@@ -714,6 +687,32 @@ object Queries {
       )
       WHERE last_checked IS NOT NULL AND last_checked >= 300"""
 
+  /** A9: the `/admin/quota` usage view (main.py:818-837 →
+    * `RateLimiter.get_quota`, rate_limiter.py:218-273): a point-in-time
+    * snapshot per (ip, endpoint) bucket of the ALLOWED requests still
+    * inside the trailing 60 s window (denied requests are never recorded,
+    * so they never count), the bucket's limit, remaining, and
+    * percent_used rounded to 1 decimal — composed directly on the exact
+    * admission decision log, snapshot pinned at t=600 (mid-burst, so
+    * buckets show genuine partial usage). The admin-key gate itself is
+    * the x_auth_gate shape.
+    *
+    * Bucket EXISTENCE is exact: the reference lists only buckets alive in
+    * its in-memory map — created on the first `check_rate_limit` for the
+    * (ip, endpoint) key and evicted by the periodic stale sweep
+    * (`_cleanup_stale_buckets`, rate_limiter.py:132-144), where a bucket
+    * is stale once `now - last_cleanup > 300` (is_stale,
+    * rate_limiter.py:76-78) and `last_cleanup` advances on EVERY check —
+    * allowed or denied — because `bucket.cleanup()` runs before the
+    * verdict (rate_limiter.py:185, 65-69). So a bucket appears iff its
+    * last CHECKED request is within 300 s of the snapshot, and a bucket
+    * whose first request is after the snapshot does not exist yet. One
+    * modeling choice, stated: the reference's sweep fires on a 300 s
+    * timer whose phase depends on process start, so a stale bucket can
+    * linger up to one extra interval before eviction; this view pins the
+    * deterministic fixpoint "a sweep ran immediately before the
+    * snapshot" — the only phase-independent semantics a log-derived
+    * replay can state. */
   private val a9QuotaView = Q(
     (s, dir) => quotaView(s, dir).orderBy("ip", "endpoint"),
     Some(s"$quotaViewSql\n      ORDER BY ip, endpoint"))
@@ -1145,20 +1144,6 @@ object Queries {
         '}}}' AS quota_envelope
       FROM per_ip"""))
 
-  /** The admin-key gate for the `/admin` endpoints — `_check_admin_auth`
-    * (main.py:799-815): with no RATE_LIMIT_ADMIN_KEY configured, every
-    * admin call answers 403 "Admin endpoints are disabled" (the endpoints
-    * are switched off, regardless of credentials); with a key configured,
-    * a missing or non-`Bearer ` Authorization header answers 401 "Missing
-    * Bearer token", a Bearer token that is not exactly the key answers
-    * 403 "Invalid admin key" (`hmac.compare_digest` — semantically exact
-    * string equality; the timing property is a serving-side concern), and
-    * the exact key passes. Error bodies are FastAPI's HTTPException
-    * rendering `{"detail": message}`. The synthesis crosses configured /
-    * not with six header shapes (exact key, wrong key, absent, Basic,
-    * lowercase `bearer`, `Bearer` with no space) so every branch of the
-    * 401/403/200 matrix appears. This is the sidecar's 403-first variant
-    * next to x_auth_gate's express 401-envelope variant. */
   /** Shared builder for the sidecar's two FastAPI Bearer gates
     * (`_check_admin_auth` main.py:799-815, `_check_webhook_auth`
     * main.py:660-670): identical Bearer mechanics (`startswith("Bearer ")`,
@@ -1232,6 +1217,20 @@ object Queries {
       ORDER BY doc_id"""
     })
 
+  /** The admin-key gate for the `/admin` endpoints — `_check_admin_auth`
+    * (main.py:799-815): with no RATE_LIMIT_ADMIN_KEY configured, every
+    * admin call answers 403 "Admin endpoints are disabled" (the endpoints
+    * are switched off, regardless of credentials); with a key configured,
+    * a missing or non-`Bearer ` Authorization header answers 401 "Missing
+    * Bearer token", a Bearer token that is not exactly the key answers
+    * 403 "Invalid admin key" (`hmac.compare_digest` — semantically exact
+    * string equality; the timing property is a serving-side concern), and
+    * the exact key passes. Error bodies are FastAPI's HTTPException
+    * rendering `{"detail": message}`. The synthesis crosses configured /
+    * not with six header shapes (exact key, wrong key, absent, Basic,
+    * lowercase `bearer`, `Bearer` with no space) so every branch of the
+    * 401/403/200 matrix appears. This is the sidecar's 403-first variant
+    * next to x_auth_gate's express 401-envelope variant. */
   private val xAdminAuth = bearerGateQ(
     secret = "admin-secret-key", wrongToken = "wrong-key",
     flagName = "admin_key_configured",
@@ -1749,35 +1748,19 @@ object Queries {
       WHERE inter * 1000 // (sa.n_sh + sb.n_sh - inter) >= 200
       ORDER BY doc_a, doc_b"""))
 
-  /** Portable variant (md5-derived word hashes) so the whole simhash
-    * computation has a DuckDB oracle; the xxhash64 production path is
-    * property-tested in OpsSpec. */
-  /** Composed curation capstone — the end-to-end pipeline a training-data
-    * user actually runs: quality gate ∧ language-ID agreement ∧ exact-dedup
-    * canonical survivors, carrying token counts for budget accounting.
-    * Every stage is a pure DataFrame transform, so they compose into ONE
-    * Catalyst plan (joins co-partition on doc_id); oracle-checked
-    * end-to-end in DuckDB. */
   /** The per-row feature frame (doc_id, lang, n_tokens, is_quality,
     * lang_pred) shared by both curation capstones — quality + language-ID
     * are pure expressions, so BOTH compute in ONE scan (joining separate
     * qualityFeatures/langId frames would re-scan the corpus twice
     * more). */
   private def curationFeatured(docs: DataFrame): DataFrame = {
-    def hits(ws: Seq[String]): Column =
-      ws.map(w => TextOps.occurrences(lower(col("text")), s" $w ")).reduce(_ + _)
     val nWords = TextOps.wordCount(col("text"))
-    val meanLenX100 = (length(col("text")) * 100L / greatest(nWords, lit(1))).cast("long")
-    val isQuality = (nWords >= 5) && (meanLenX100 between (200L, 1200L))
-    val en = hits(Seq("the", "and", "of"))
-    val fr = hits(Seq("le", "la", "et", "les"))
-    val es = hits(Seq("el", "los", "que", "y"))
-    val de = hits(Seq("der", "die", "und", "das"))
-    val langPred = when(en >= fr && en >= es && en >= de, "en")
-      .when(fr >= es && fr >= de, "fr").when(es >= de, "es").otherwise("de")
+    val isQuality = TextOps.isQuality(nWords,
+      TextOps.meanWordLenX100(length(col("text")), nWords))
     docs.select(col("doc_id"), col("lang"),
       TextOps.tokenCount(col("text")).cast("long").as("n_tokens"),
-      isQuality.as("is_quality"), langPred.as("lang_pred"))
+      isQuality.as("is_quality"),
+      TextOps.langPred(TextOps.langHits(col("text"))).as("lang_pred"))
   }
 
   /** The matching DuckDB feature CTEs (`q`, `l`) — shared by both
@@ -1806,6 +1789,12 @@ object Queries {
       )"""
   }
 
+  /** Composed curation capstone — the end-to-end pipeline a training-data
+    * user actually runs: quality gate ∧ language-ID agreement ∧ exact-dedup
+    * canonical survivors, carrying token counts for budget accounting.
+    * Every stage is a pure DataFrame transform, so they compose into ONE
+    * Catalyst plan (joins co-partition on doc_id); oracle-checked
+    * end-to-end in DuckDB. */
   private val xCurationPipeline = Q(
     (s, dir) => {
       val docs = rd(s, dir, "documents")
@@ -1842,14 +1831,6 @@ object Queries {
     Dedup.neardupClusters(rd(s, dir, "documents"), n = 3, k = 16, bands = 4,
       minEstJaccardX1000 = 250, portable = portable, maxDfPct = Some(5))
 
-  /** Curation capstone v2 — NEAR-dup aware: quality gate ∧ language-ID
-    * agreement ∧ near-dup CLUSTER canonical survivors (the min-doc_id of
-    * each connected component of the minhash pair graph, so a≈b≈c chains
-    * collapse to one kept document even when the ends never pair
-    * directly). This closes the full pairs → clusters → selection loop
-    * end-to-end in one oracle-checked query; the DuckDB mirror re-derives
-    * the pair set and labels components by recursive reachability — an
-    * independent algorithm from the Spark side's star contraction. */
   /** The near-dup curation pipeline, parameterized ONLY on the hash mode
     * like [[minHashPairs]]. */
   private def curationNeardupPipeline(s: SparkSession, dir: String,
@@ -1872,6 +1853,14 @@ object Queries {
       .orderBy("doc_id")
   }
 
+  /** Curation capstone v2 — NEAR-dup aware: quality gate ∧ language-ID
+    * agreement ∧ near-dup CLUSTER canonical survivors (the min-doc_id of
+    * each connected component of the minhash pair graph, so a≈b≈c chains
+    * collapse to one kept document even when the ends never pair
+    * directly). This closes the full pairs → clusters → selection loop
+    * end-to-end in one oracle-checked query; the DuckDB mirror re-derives
+    * the pair set and labels components by recursive reachability — an
+    * independent algorithm from the Spark side's star contraction. */
   private val xCurationNeardup = Q(
     (s, dir) => curationNeardupPipeline(s, dir, portable = true),
     Some(s"""WITH RECURSIVE pairs AS ($minHashPairsSelectSql
@@ -1885,8 +1874,15 @@ object Queries {
         AND q.is_quality AND l.lang_pred = d.lang
       ORDER BY d.doc_id"""))
 
+  /** SimHash in its portable mode (md5-derived word hashes) so the whole
+    * computation has a DuckDB oracle; the 64-bit hash is split into its
+    * unsigned 32-bit halves (sim_hi, sim_lo). The xxhash64 production mode
+    * is property-tested in OpsSpec. */
   private val xSimHash = Q(
-    (s, dir) => TextOps.simHashPortable(rd(s, dir, "documents")).orderBy("doc_id"),
+    (s, dir) => TextOps.simHash(rd(s, dir, "documents"), portable = true)
+      .select(col("doc_id"), shiftrightunsigned(col("simhash"), 32).as("sim_hi"),
+        col("simhash").bitwiseAND(0xFFFFFFFFL).as("sim_lo"))
+      .orderBy("doc_id"),
     Some {
       def votes(h: String, prefix: String) = (0 until 32).map(b =>
         s"sum(CASE WHEN ($h >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS $prefix$b").mkString(",\n        ")

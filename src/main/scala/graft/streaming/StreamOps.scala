@@ -18,6 +18,16 @@ import graft.model.Turn
   */
 object StreamOps {
 
+  /** Processing-time expiry when `ttlMs` > 0; `ttlMs = 0` is NoTimeout
+    * (deterministic tests). */
+  private def ttlTimeout(ttlMs: Long): GroupStateTimeout =
+    if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
+    else GroupStateTimeout.NoTimeout
+
+  /** Restarts a group's idle clock under [[ttlTimeout]]. */
+  private def renewTtl(state: GroupState[_], ttlMs: Long): Unit =
+    if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
+
   /** Streaming extraction: every new transcript file is extracted exactly
     * once; checkpointed offsets make the stream resumable (the streaming
     * twin of ExtractJob's lineage-based batch resume). */
@@ -108,14 +118,11 @@ object StreamOps {
       ttlMs: Long = 300000L)
       : Dataset[graft.query.RateLimits.Decision] = {
     import reqs.sparkSession.implicits._
-    val timeout =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     val nonEmptyEvictions = reqs.sparkSession.sparkContext
       .longAccumulator("rateLimitDecisions.nonEmptyStateEvictions")
     reqs.groupByKey(_.bucket)
       .flatMapGroupsWithState[Seq[Long], graft.query.RateLimits.Decision](
-        OutputMode.Append, timeout) {
+        OutputMode.Append, ttlTimeout(ttlMs)) {
         (_: (Long, String, Int), batch: Iterator[graft.query.RateLimits.Req],
             state: GroupState[Seq[Long]]) =>
           if (state.hasTimedOut) {
@@ -131,7 +138,7 @@ object StreamOps {
             val out = graft.query.RateLimits.decideBucket(
               batch.toVector.sortBy(r => (r.sec, r.event_id)), q)
             state.update(q.toSeq)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
+            renewTtl(state, ttlMs)
             out.iterator
           }
       }
@@ -166,12 +173,9 @@ object StreamOps {
   def streamingExtractWithTurnPos(turns: Dataset[Turn], ttlMs: Long = 300000L)
       : Dataset[graft.model.ExtractedTurn] = {
     import turns.sparkSession.implicits._
-    val timeout =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     turns.groupByKey(_.conv_id)
       .flatMapGroupsWithState[Long, graft.model.ExtractedTurn](
-        OutputMode.Append, timeout) {
+        OutputMode.Append, ttlTimeout(ttlMs)) {
         (_: String, batch: Iterator[Turn], state: GroupState[Long]) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
@@ -182,7 +186,7 @@ object StreamOps {
               ExtractJob.extractOne(t).copy(turn_pos = pos)
             }
             state.update(pos)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
+            renewTtl(state, ttlMs)
             out.iterator
           }
       }
@@ -230,11 +234,8 @@ object StreamOps {
   def dialogueSessions(events: Dataset[GwEvent], ttlMs: Long = 300000L)
       : Dataset[GwOut] = {
     import events.sparkSession.implicits._
-    val timeout =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     events.groupByKey(_.session_id)
-      .flatMapGroupsWithState[GwSessionState, GwOut](OutputMode.Append, timeout) {
+      .flatMapGroupsWithState[GwSessionState, GwOut](OutputMode.Append, ttlTimeout(ttlMs)) {
         (sid: String, batch: Iterator[GwEvent], state: GroupState[GwSessionState]) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
@@ -243,7 +244,7 @@ object StreamOps {
               e.kind match {
                 case "cold_start" =>
                   state.update(GwSessionState(e.path, e.detected_type))
-                  if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
+                  renewTtl(state, ttlMs)
                   out += GwOut(sid, "created", "", e.path, e.detected_type)
                 case "respond" =>
                   state.getOption match {
@@ -275,11 +276,8 @@ object StreamOps {
   def sessionSummaries(events: Dataset[SessionEvent], ttlMs: Long = 300000L)
       : Dataset[SessionSummary] = {
     import events.sparkSession.implicits._
-    val timeout =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     events.groupByKey(_.session_id)
-      .mapGroupsWithState[Long, SessionSummary](timeout) {
+      .mapGroupsWithState[Long, SessionSummary](ttlTimeout(ttlMs)) {
         (sid: String, batch: Iterator[SessionEvent], state: GroupState[Long]) =>
           if (state.hasTimedOut) {
             val n = state.getOption.getOrElse(0L)
@@ -288,7 +286,7 @@ object StreamOps {
           } else {
             val n = state.getOption.getOrElse(0L) + batch.size
             state.update(n)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
+            renewTtl(state, ttlMs)
             SessionSummary(sid, n, expired = false)
           }
       }

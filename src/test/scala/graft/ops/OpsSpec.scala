@@ -165,8 +165,8 @@ class OpsSpec extends AnyFunSuite {
     val d = docsOf(10L -> text, 20L -> text,
       30L -> "unrelated content about spark shuffle partitions and codegen stages")
     // portable simhash: identical docs get identical (hi, lo) halves in [0, 2^32)
-    val sh = TextOps.simHashPortable(d).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val sh = TextOps.simHash(d, portable = true).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1) >>> 32, r.getLong(1) & 0xFFFFFFFFL)).toMap
     assert(sh(10L) == sh(20L))
     assert(sh.values.forall { case (hi, lo) =>
       hi >= 0 && hi < (1L << 32) && lo >= 0 && lo < (1L << 32) })

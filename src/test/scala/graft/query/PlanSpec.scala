@@ -217,7 +217,7 @@ class PlanSpec extends AnyFunSuite {
     assertNoGlobalSort("exactDedup", graft.ops.TextOps.exactDedup(docs))
     assertNoGlobalSort("fingerprint", graft.ops.TextOps.fingerprint(docs))
     assertNoGlobalSort("simHash", graft.ops.TextOps.simHash(docs))
-    assertNoGlobalSort("simHashPortable", graft.ops.TextOps.simHashPortable(docs))
+    assertNoGlobalSort("simHash(portable)", graft.ops.TextOps.simHash(docs, portable = true))
     assertNoGlobalSort("simHashPairs", graft.ops.TextOps.simHashPairs(docs))
     assertNoGlobalSort("ngramJaccardPairs",
       graft.ops.TextOps.ngramJaccardPairs(docs, n = 3, thresholdX1000 = 300, maxDfPct = Some(5)))
