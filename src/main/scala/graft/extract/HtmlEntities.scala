@@ -14,108 +14,49 @@ object HtmlEntities {
 
   private val named: Map[String, String] = Html5Entities.table
 
-  /** The HTML 4.01 named-entity table plus `apos`; without `apos` it is
-    * PHP's ENT_HTML401 table, which [[decodePhpHtml4]] decodes with on
-    * the Joomla clean and summary paths. */
-  private[extract] val html4Subset: Map[String, String] = Map(
+  /** The HTML 4.01 named-entity table, PHP's ENT_HTML401 table, which
+    * [[decodePhpHtml4]] decodes with on the Joomla clean and summary
+    * paths: the 252 HTML 4.01 names with their [[Html5Entities]] values,
+    * except `lang`/`rang`, which keep the 4.01 code points U+2329/U+232A
+    * (HTML5 remapped those names to U+27E8/U+27E9). */
+  private[extract] val html401: Map[String, String] = Seq(
     // XML / basic
-    "amp" -> "&", "lt" -> "<", "gt" -> ">", "quot" -> "\"", "apos" -> "'",
+    "amp", "lt", "gt", "quot",
     // Latin-1
-    "nbsp" -> " ", "iexcl" -> "¡", "cent" -> "¢",
-    "pound" -> "£", "curren" -> "¤", "yen" -> "¥",
-    "brvbar" -> "¦", "sect" -> "§", "uml" -> "¨",
-    "copy" -> "©", "ordf" -> "ª", "laquo" -> "«",
-    "not" -> "¬", "shy" -> "­", "reg" -> "®",
-    "macr" -> "¯", "deg" -> "°", "plusmn" -> "±",
-    "sup2" -> "²", "sup3" -> "³", "acute" -> "´",
-    "micro" -> "µ", "para" -> "¶", "middot" -> "·",
-    "cedil" -> "¸", "sup1" -> "¹", "ordm" -> "º",
-    "raquo" -> "»", "frac14" -> "¼", "frac12" -> "½",
-    "frac34" -> "¾", "iquest" -> "¿",
-    "Agrave" -> "À", "Aacute" -> "Á", "Acirc" -> "Â",
-    "Atilde" -> "Ã", "Auml" -> "Ä", "Aring" -> "Å",
-    "AElig" -> "Æ", "Ccedil" -> "Ç", "Egrave" -> "È",
-    "Eacute" -> "É", "Ecirc" -> "Ê", "Euml" -> "Ë",
-    "Igrave" -> "Ì", "Iacute" -> "Í", "Icirc" -> "Î",
-    "Iuml" -> "Ï", "ETH" -> "Ð", "Ntilde" -> "Ñ",
-    "Ograve" -> "Ò", "Oacute" -> "Ó", "Ocirc" -> "Ô",
-    "Otilde" -> "Õ", "Ouml" -> "Ö", "times" -> "×",
-    "Oslash" -> "Ø", "Ugrave" -> "Ù", "Uacute" -> "Ú",
-    "Ucirc" -> "Û", "Uuml" -> "Ü", "Yacute" -> "Ý",
-    "THORN" -> "Þ", "szlig" -> "ß",
-    "agrave" -> "à", "aacute" -> "á", "acirc" -> "â",
-    "atilde" -> "ã", "auml" -> "ä", "aring" -> "å",
-    "aelig" -> "æ", "ccedil" -> "ç", "egrave" -> "è",
-    "eacute" -> "é", "ecirc" -> "ê", "euml" -> "ë",
-    "igrave" -> "ì", "iacute" -> "í", "icirc" -> "î",
-    "iuml" -> "ï", "eth" -> "ð", "ntilde" -> "ñ",
-    "ograve" -> "ò", "oacute" -> "ó", "ocirc" -> "ô",
-    "otilde" -> "õ", "ouml" -> "ö", "divide" -> "÷",
-    "oslash" -> "ø", "ugrave" -> "ù", "uacute" -> "ú",
-    "ucirc" -> "û", "uuml" -> "ü", "yacute" -> "ý",
-    "thorn" -> "þ", "yuml" -> "ÿ",
-    // typographic / symbols (HTML4)
-    "OElig" -> "Œ", "oelig" -> "œ", "Scaron" -> "Š",
-    "scaron" -> "š", "Yuml" -> "Ÿ", "fnof" -> "ƒ",
-    "circ" -> "ˆ", "tilde" -> "˜",
-    "ensp" -> " ", "emsp" -> " ", "thinsp" -> " ",
-    "zwnj" -> "‌", "zwj" -> "‍", "lrm" -> "‎",
-    "rlm" -> "‏", "ndash" -> "–", "mdash" -> "—",
-    "lsquo" -> "‘", "rsquo" -> "’", "sbquo" -> "‚",
-    "ldquo" -> "“", "rdquo" -> "”", "bdquo" -> "„",
-    "dagger" -> "†", "Dagger" -> "‡", "bull" -> "•",
-    "hellip" -> "…", "permil" -> "‰", "prime" -> "′",
-    "Prime" -> "″", "lsaquo" -> "‹", "rsaquo" -> "›",
-    "oline" -> "‾", "frasl" -> "⁄", "euro" -> "€",
-    "trade" -> "™", "alefsym" -> "ℵ",
-    "larr" -> "←", "uarr" -> "↑", "rarr" -> "→",
-    "darr" -> "↓", "harr" -> "↔", "crarr" -> "↵",
-    "lArr" -> "⇐", "uArr" -> "⇑", "rArr" -> "⇒",
-    "dArr" -> "⇓", "hArr" -> "⇔",
-    "forall" -> "∀", "part" -> "∂", "exist" -> "∃",
-    "empty" -> "∅", "nabla" -> "∇", "isin" -> "∈",
-    "notin" -> "∉", "ni" -> "∋", "prod" -> "∏",
-    "sum" -> "∑", "minus" -> "−", "lowast" -> "∗",
-    "radic" -> "√", "prop" -> "∝", "infin" -> "∞",
-    "ang" -> "∠", "and" -> "∧", "or" -> "∨",
-    "cap" -> "∩", "cup" -> "∪", "int" -> "∫",
-    "there4" -> "∴", "sim" -> "∼", "cong" -> "≅",
-    "asymp" -> "≈", "ne" -> "≠", "equiv" -> "≡",
-    "le" -> "≤", "ge" -> "≥", "sub" -> "⊂",
-    "sup" -> "⊃", "nsub" -> "⊄", "sube" -> "⊆",
-    "supe" -> "⊇", "oplus" -> "⊕", "otimes" -> "⊗",
-    "perp" -> "⊥", "sdot" -> "⋅",
-    // HTML 4.01 symbols missing from the original subset (card suits,
-    // ceilings/floors, script capitals, lozenge, angle brackets). NOTE
-    // lang/rang use the HTML 4.01 code points U+2329/U+232A — HTML5
-    // remapped those names to U+27E8/U+27E9, so the full HTML5 table
-    // deliberately disagrees here.
-    "hearts" -> "♥", "spades" -> "♠", "clubs" -> "♣",
-    "diams" -> "♦", "loz" -> "◊",
-    "lang" -> "\u2329", "rang" -> "\u232A",
-    "lceil" -> "⌈", "rceil" -> "⌉",
-    "lfloor" -> "⌊", "rfloor" -> "⌋",
-    "weierp" -> "℘", "image" -> "ℑ", "real" -> "ℜ",
+    "nbsp", "iexcl", "cent", "pound", "curren", "yen", "brvbar", "sect",
+    "uml", "copy", "ordf", "laquo", "not", "shy", "reg", "macr", "deg",
+    "plusmn", "sup2", "sup3", "acute", "micro", "para", "middot", "cedil",
+    "sup1", "ordm", "raquo", "frac14", "frac12", "frac34", "iquest", "Agrave",
+    "Aacute", "Acirc", "Atilde", "Auml", "Aring", "AElig", "Ccedil", "Egrave",
+    "Eacute", "Ecirc", "Euml", "Igrave", "Iacute", "Icirc", "Iuml", "ETH",
+    "Ntilde", "Ograve", "Oacute", "Ocirc", "Otilde", "Ouml", "times",
+    "Oslash", "Ugrave", "Uacute", "Ucirc", "Uuml", "Yacute", "THORN", "szlig",
+    "agrave", "aacute", "acirc", "atilde", "auml", "aring", "aelig", "ccedil",
+    "egrave", "eacute", "ecirc", "euml", "igrave", "iacute", "icirc", "iuml",
+    "eth", "ntilde", "ograve", "oacute", "ocirc", "otilde", "ouml", "divide",
+    "oslash", "ugrave", "uacute", "ucirc", "uuml", "yacute", "thorn", "yuml",
+    // typographic / symbols
+    "OElig", "oelig", "Scaron", "scaron", "Yuml", "fnof", "circ", "tilde",
+    "ensp", "emsp", "thinsp", "zwnj", "zwj", "lrm", "rlm", "ndash", "mdash",
+    "lsquo", "rsquo", "sbquo", "ldquo", "rdquo", "bdquo", "dagger", "Dagger",
+    "bull", "hellip", "permil", "prime", "Prime", "lsaquo", "rsaquo", "oline",
+    "frasl", "euro", "trade", "alefsym", "larr", "uarr", "rarr", "darr",
+    "harr", "crarr", "lArr", "uArr", "rArr", "dArr", "hArr", "forall", "part",
+    "exist", "empty", "nabla", "isin", "notin", "ni", "prod", "sum", "minus",
+    "lowast", "radic", "prop", "infin", "ang", "and", "or", "cap", "cup",
+    "int", "there4", "sim", "cong", "asymp", "ne", "equiv", "le", "ge", "sub",
+    "sup", "nsub", "sube", "supe", "oplus", "otimes", "perp", "sdot",
+    "hearts", "spades", "clubs", "diams", "loz", "lang", "rang", "lceil",
+    "rceil", "lfloor", "rfloor", "weierp", "image", "real",
     // Greek
-    "Alpha" -> "Α", "Beta" -> "Β", "Gamma" -> "Γ",
-    "Delta" -> "Δ", "Epsilon" -> "Ε", "Zeta" -> "Ζ",
-    "Eta" -> "Η", "Theta" -> "Θ", "Iota" -> "Ι",
-    "Kappa" -> "Κ", "Lambda" -> "Λ", "Mu" -> "Μ",
-    "Nu" -> "Ν", "Xi" -> "Ξ", "Omicron" -> "Ο",
-    "Pi" -> "Π", "Rho" -> "Ρ", "Sigma" -> "Σ",
-    "Tau" -> "Τ", "Upsilon" -> "Υ", "Phi" -> "Φ",
-    "Chi" -> "Χ", "Psi" -> "Ψ", "Omega" -> "Ω",
-    "alpha" -> "α", "beta" -> "β", "gamma" -> "γ",
-    "delta" -> "δ", "epsilon" -> "ε", "zeta" -> "ζ",
-    "eta" -> "η", "theta" -> "θ", "iota" -> "ι",
-    "kappa" -> "κ", "lambda" -> "λ", "mu" -> "μ",
-    "nu" -> "ν", "xi" -> "ξ", "omicron" -> "ο",
-    "pi" -> "π", "rho" -> "ρ", "sigmaf" -> "ς",
-    "sigma" -> "σ", "tau" -> "τ", "upsilon" -> "υ",
-    "phi" -> "φ", "chi" -> "χ", "psi" -> "ψ",
-    "omega" -> "ω", "thetasym" -> "ϑ", "upsih" -> "ϒ",
-    "piv" -> "ϖ",
-  )
+    "Alpha", "Beta", "Gamma", "Delta", "Epsilon", "Zeta", "Eta", "Theta",
+    "Iota", "Kappa", "Lambda", "Mu", "Nu", "Xi", "Omicron", "Pi", "Rho",
+    "Sigma", "Tau", "Upsilon", "Phi", "Chi", "Psi", "Omega", "alpha", "beta",
+    "gamma", "delta", "epsilon", "zeta", "eta", "theta", "iota", "kappa",
+    "lambda", "mu", "nu", "xi", "omicron", "pi", "rho", "sigmaf", "sigma",
+    "tau", "upsilon", "phi", "chi", "psi", "omega", "thetasym", "upsih",
+    "piv",
+  ).map(n => n -> named(n)).toMap ++ Map("lang" -> "\u2329", "rang" -> "\u232A")
 
   private def isNameChar(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9')
@@ -123,23 +64,23 @@ object HtmlEntities {
   /** Decode all character references in `s`. Unknown / malformed references
     * are left verbatim, matching libxml2's recovery behavior.
     */
-  def decode(s: String): String =
-    decodeWith(s, named, numericSemicolonOptional = true)
+  def decode(s: String): String = decodeWith(s, Lenient)
 
-  /** PHP html_entity_decode doctype selector (ENT_HTML401 vs ENT_HTML5):
-    * picks the `unicode_cp_is_allowed` row for numeric references. */
-  private[extract] sealed trait PhpDoctype
-  private[extract] case object PhpHtml401 extends PhpDoctype
-  private[extract] case object PhpHtml5 extends PhpDoctype
+  /** How [[decodeWith]] reads references: [[Lenient]] is the parser's
+    * decode (full HTML5 table, numerics with or without `;`); the two
+    * PHP modes are `html_entity_decode` under ENT_HTML401 / ENT_HTML5,
+    * each with its own named table and `unicode_cp_is_allowed` row. */
+  private sealed abstract class Mode(val table: Map[String, String])
+  private case object Lenient extends Mode(named)
+  private case object PhpHtml401 extends Mode(html401)
+  private case object PhpHtml5 extends Mode(named)
 
   /** PHP `html_entity_decode($s, ENT_QUOTES, 'UTF-8')` with the default
     * HTML 4.01 table (the Joomla adapter's decode): the HTML4 names —
     * NOT `&apos;`, which is XML/HTML5-only and stays verbatim under
     * ENT_HTML401 — and PHP's strict numerics (semicolon required,
     * doctype-disallowed code points left verbatim). */
-  def decodePhpHtml4(s: String): String =
-    decodeWith(s, html4Subset - "apos", numericSemicolonOptional = false,
-      phpNumericRules = true, phpDoctype = PhpHtml401)
+  def decodePhpHtml4(s: String): String = decodeWith(s, PhpHtml401)
 
   /** PHP `html_entity_decode($s, ENT_QUOTES | ENT_HTML5, 'UTF-8')` (the
     * WooCommerce and Drupal adapters' decode): the full HTML5 named
@@ -158,9 +99,7 @@ object HtmlEntities {
     * ENT_HTML5)` returns `&amp X` verbatim in every PHP version with the
     * 5.4+ decoder, exactly as this decoder does (golden-pinned in
     * AdapterChunkerSpec). */
-  def decodePhpHtml5(s: String): String =
-    decodeWith(s, named, numericSemicolonOptional = false,
-      phpNumericRules = true, phpDoctype = PhpHtml5)
+  def decodePhpHtml5(s: String): String = decodeWith(s, PhpHtml5)
 
   /** PHP `unicode_cp_is_allowed` (ext/standard/html.c): numeric
     * references to doctype-disallowed code points are NOT decoded —
@@ -173,9 +112,11 @@ object HtmlEntities {
     *    Unicode noncharacters — U+FDD0-U+FDEF and every code point whose
     *    low 16 bits are FFFE/FFFF (`(code & 0xFFFF) >= 0xFFFE` in the C
     *    source's own comment).
-    */
-  private def phpCpAllowed(cp: Int, doctype: PhpDoctype): Boolean =
-    doctype match {
+    *
+    * [[Lenient]] has no such row: it allows every code point. */
+  private def phpCpAllowed(cp: Int, mode: Mode): Boolean =
+    mode match {
+      case Lenient => true
       case PhpHtml401 =>
         cp == 0x09 || cp == 0x0A || cp == 0x0D ||
           (cp >= 0x20 && cp <= 0x7E) || (cp >= 0xA0 && cp <= 0xD7FF) ||
@@ -187,17 +128,16 @@ object HtmlEntities {
             (cp >= 0xFDF0 && cp <= 0x10FFFF)) && (cp & 0xFFFF) < 0xFFFE)
     }
 
-  /** [[decode]] against an arbitrary named table, with PHP-style strict
-    * (semicolon-required, disallowed-codepoint-verbatim) or parser-style
-    * lenient numeric references. PHP numerics follow `strtol`: leading
-    * zeros are unbounded (`&#000000000065;` decodes), the parsed VALUE
-    * is what's capped (> 0x10FFFF fails verbatim, process_numeric_entity
-    * in ext/standard/html.c). */
-  def decodeWith(s: String, table: Map[String, String],
-      numericSemicolonOptional: Boolean,
-      phpNumericRules: Boolean = false,
-      phpDoctype: PhpDoctype = PhpHtml401): String = {
+  /** Decode `s` under `mode`: the PHP modes are strict
+    * (semicolon-required, disallowed-codepoint-verbatim), [[Lenient]]
+    * decodes numeric references with or without the semicolon. PHP
+    * numerics follow `strtol`: leading zeros are unbounded
+    * (`&#000000000065;` decodes), the parsed VALUE is what's capped
+    * (> 0x10FFFF fails verbatim, process_numeric_entity in
+    * ext/standard/html.c). */
+  private def decodeWith(s: String, mode: Mode): String = {
     if (s.indexOf('&') < 0) return s
+    val phpNumericRules = mode ne Lenient
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
     val n = s.length
@@ -222,11 +162,11 @@ object HtmlEntities {
           if (phpNumericRules) while (sig < j - 1 && s.charAt(sig) == '0') sig += 1
           val lenOk = if (phpNumericRules) j - sig <= 7 else j - start <= 7
           if (j > start && lenOk &&
-              (numericSemicolonOptional || terminated)) {
+              (!phpNumericRules || terminated)) {
             try {
               val cp = Integer.parseInt(s.substring(sig, j), if (hex) 16 else 10)
               if (Character.isValidCodePoint(cp) && cp != 0 &&
-                  (!phpNumericRules || phpCpAllowed(cp, phpDoctype))) {
+                  phpCpAllowed(cp, mode)) {
                 sb.appendCodePoint(cp)
                 i = if (terminated) j + 1 else j
                 handled = true
@@ -237,7 +177,7 @@ object HtmlEntities {
           var j = i + 1
           while (j < n && isNameChar(s.charAt(j)) && j - i <= 32) j += 1
           if (j < n && s.charAt(j) == ';' && j > i + 1) {
-            table.get(s.substring(i + 1, j)) match {
+            mode.table.get(s.substring(i + 1, j)) match {
               case Some(rep) => sb.append(rep); i = j + 1; handled = true
               case None => ()
             }

@@ -61,13 +61,20 @@ object Gateway {
   }
   private def expr_substr2(w: Column): Column = w.substr(lit(2), length(w))
 
+  /** The path split both gateway.js functions share: the non-empty
+    * segments after one trailing `/` is dropped, and the second segment
+    * (null when absent). */
+  private def pathSegments(path: Column): (Column, Column) = {
+    val clean = regexp_replace(path, "/$", "")
+    val segments = filter(split(clean, "/"), s => length(s) > 0)
+    (segments, when(size(segments) >= 2, element_at(segments, 2)))
+  }
+
   /** detectContext (gateway.js:28-75): path → (detected_type,
     * detected_topic). */
   def detectContext(path: Column): Column = {
-    val clean = regexp_replace(path, "/$", "")
-    val segments = filter(split(clean, "/"), s => length(s) > 0)
+    val (segments, seg1) = pathSegments(path)
     val seg0 = element_at(segments, 1)
-    val seg1 = when(size(segments) >= 2, element_at(segments, 2))
     val lastSeg = element_at(segments, -1)
     val productRe = "(?i)^(product|products|shop|store|item|catalogue|catalog)$"
     val categoryRe = "(?i)^(category|cat|collection|collections|tag|brand|department)$"
@@ -141,9 +148,7 @@ object Gateway {
       hasEcommerce: Boolean): Column = {
     val dtype = ctx.getField("detected_type")
     val topic = ctx.getField("detected_topic")
-    val clean = regexp_replace(path, "/$", "")
-    val segments = filter(split(clean, "/"), s => length(s) > 0)
-    val seg1 = when(size(segments) >= 2, element_at(segments, 2))
+    val seg1 = pathSegments(path)._2
     val encPath = encodeUriComponent(path)
     val topicPlus = regexp_replace(topic, " ", "+")
     val b = baseUrl

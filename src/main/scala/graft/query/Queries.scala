@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.job.{ExtractJob, Transcripts}
@@ -60,17 +60,19 @@ object Queries {
       ORDER BY o_orderdate DESC, o_orderkey ASC LIMIT 20 OFFSET 40) t
       ORDER BY o_orderkey"""))
 
+  /** The modeled `?q=` after the express sanitize (content.js:144):
+    * tags stripped, capped at 200 chars, first word, lower case. The raw
+    * term is > 200 chars before the sanitize. */
+  private val sanitizedSearchTerm: String = ("<b>MERGE</b>" + " pad" * 100)
+    .replaceAll("<[^>]*>", "").take(200).takeWhile(_ != ' ').toLowerCase
+
   /** P5+P9: sanitized case-insensitive substring search
     * (content.js:144,317-323). */
   private val p9Search = Q(
-    (s, dir) => {
-      val qRaw = "<b>MERGE</b>" + " pad" * 100 // > 200 chars pre-sanitize
-      val q = qRaw.replaceAll("<[^>]*>", "").take(200).takeWhile(_ != ' ').toLowerCase
-      rd(s, dir, "documents")
-        .filter(lower(col("text")).contains(q))
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    },
+    (s, dir) => rd(s, dir, "documents")
+      .filter(lower(col("text")).contains(sanitizedSearchTerm))
+      .select("doc_id", "lang")
+      .orderBy("doc_id"),
     Some("SELECT doc_id, lang FROM documents WHERE lower(text) LIKE '%merge%' ORDER BY doc_id"))
 
   /** P10+W1: relevance scoring (term occurrences), min_score filter,
@@ -549,8 +551,6 @@ object Queries {
     * row), ips 8-13 in [480, 600) (alive with active counts), ips 14-19
     * across the whole [0, 1200) burst (long multi-window walks). */
   private def rateLimitRequests(s: SparkSession, dir: String): DataFrame = {
-      val cfg = RateLimits.Config(defaultRpm = 4, searchRpm = 2,
-        discoverRpm = 4, syncRpm = 3, webhookRpm = 1)
       val endpoint = when(pmod(col("event_id"), lit(5)) === 0, "/openfeeder?q=term")
         .when(pmod(col("event_id"), lit(5)) === 1, "/openfeeder/sync")
         .when(pmod(col("event_id"), lit(5)) === 2, "/webhook/update")
@@ -570,13 +570,24 @@ object Queries {
         .withColumn("rn", row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy("ip", "endpoint").orderBy("sec", "event_id")))
         .filter(col("rn") <= 40).drop("rn")
-        .withColumn("limit_rpm", RateLimits.endpointLimit(col("endpoint"), cfg))
+        .withColumn("limit_rpm", RateLimits.endpointLimit(col("endpoint"), rateLimitConfig))
         .withColumn("epoch", lit(0))
   }
 
-  private def rateLimitDecisions(s: SparkSession, dir: String): DataFrame = {
+  /** The limiter config of every rate-limit query: the reference's
+    * RATE_LIMIT_*_RPM knobs scaled so both verdicts appear at test scale. */
+  private val rateLimitConfig = RateLimits.Config(defaultRpm = 4, searchRpm = 2,
+    discoverRpm = 4, syncRpm = 3, webhookRpm = 1)
+
+  /** The admission decision log of [[rateLimitRequests]] through
+    * [[RateLimits.simulate]]; `epoch`, when given, replaces the request
+    * log's epoch 0 (quota resets). */
+  private def rateLimitDecisions(s: SparkSession, dir: String,
+      epoch: Option[Column] = None): DataFrame = {
       import s.implicits._
-      RateLimits.simulate(rateLimitRequests(s, dir).as[RateLimits.Req]).toDF()
+      val reqs = rateLimitRequests(s, dir)
+      RateLimits.simulate(epoch.fold(reqs)(reqs.withColumn("epoch", _))
+        .as[RateLimits.Req]).toDF()
   }
 
   /** The DuckDB mirror of [[rateLimitRequests]]' banded synthesis
@@ -643,7 +654,7 @@ object Queries {
     * the X-RateLimit-Reset / retry_after math, per [[RateLimits]]. The
     * request log is synthesized deterministically from events (20 ips ×
     * the 5 endpoint classes; times in per-ip bands over a 1200 s burst —
-    * see [[rateLimitDecisions]] — first 40 per bucket), with per-class
+    * see [[rateLimitRequests]] — first 40 per bucket), with per-class
     * limits {default 4, search 2, discover 4,
     * sync 3, webhook 1} — the reference's RATE_LIMIT_*_RPM env knobs
     * scaled so both verdicts appear at test scale. The oracle replays the
@@ -654,15 +665,19 @@ object Queries {
     (s, dir) => rateLimitDecisions(s, dir).orderBy("ip", "endpoint", "event_id"),
     Some(s"$rateLimitDecisionsSql\n      ORDER BY ip, endpoint, event_id"))
 
-  /** The alive-bucket quota view at snapshot t = 600 (unordered) —
-    * shared by a9 and the x_quota_envelope composition. */
-  private def quotaView(s: SparkSession, dir: String): DataFrame = {
+  /** The alive-bucket `/admin/quota` snapshot at t = 600 (unordered) of
+    * a decision log — shared by a9, the x_quota_envelope composition and
+    * x_quota_reset. With `resetAt`, only requests strictly after the
+    * bucket's last reset count, in both the last-checked time and the
+    * window count. */
+  private def quotaSnapshot(decisions: DataFrame, resetAt: Option[Column]): DataFrame = {
       val t = 600L
-      rateLimitDecisions(s, dir)
+      def afterReset(c: Column): Column = resetAt.fold(c)(tr => c && col("sec") > tr)
+      decisions
         .groupBy("ip", "endpoint", "limit_rpm")
         .agg(
-          max(when(col("sec") <= t, col("sec"))).as("last_checked"),
-          sum(when(col("allowed") && col("sec") <= t && col("sec") > t - 60, 1L)
+          max(when(afterReset(col("sec") <= t), col("sec"))).as("last_checked"),
+          sum(when(afterReset(col("allowed") && col("sec") <= t && col("sec") > t - 60), 1L)
             .otherwise(0L)).as("n_in_window"))
         // bucket exists at t iff seen by t and not stale: t - last ≤ 300
         .filter(col("last_checked").isNotNull && col("last_checked") >= t - 300)
@@ -714,7 +729,7 @@ object Queries {
     * snapshot" — the only phase-independent semantics a log-derived
     * replay can state. */
   private val a9QuotaView = Q(
-    (s, dir) => quotaView(s, dir).orderBy("ip", "endpoint"),
+    (s, dir) => quotaSnapshot(rateLimitDecisions(s, dir), None).orderBy("ip", "endpoint"),
     Some(s"$quotaViewSql\n      ORDER BY ip, endpoint"))
 
   /** `GET /admin/quota?ip=X` — the single-IP mode of `get_quota`
@@ -735,15 +750,13 @@ object Queries {
     * (default) instead of its actual 2. */
   private val xQuotaIpView = Q(
     (s, dir) => {
-      val cfg = RateLimits.Config(defaultRpm = 4, searchRpm = 2,
-        discoverRpm = 4, syncRpm = 3, webhookRpm = 1)
       rateLimitRequests(s, dir).select("ip").distinct()
         .select(col("ip"),
           explode(typedlit(Seq("discover", "search", "sync", "webhook")))
             .as("endpoint"))
         .select(col("ip"), col("endpoint"),
           lit(0L).as("count"),
-          RateLimits.endpointLimit(col("endpoint"), cfg).cast("int").as("limit_rpm"))
+          RateLimits.endpointLimit(col("endpoint"), rateLimitConfig).cast("int").as("limit_rpm"))
         .withColumn("remaining", col("limit_rpm").cast("long"))
         .withColumn("percent_used", lit(0.0))
         .orderBy("ip", "endpoint")
@@ -784,6 +797,14 @@ object Queries {
       untilCands.map(_.filter(_.nonEmpty).flatMap(SyncCodec.parseIsoTimestamp).map(_.toLong))
   }
 
+  /** `values(idx)` as a `sqlType` column, NULL where the value is absent
+    * or `idx` is out of range: a when-chain folded over the indices. */
+  private def pickByIndex(idx: Column, values: Seq[Option[Any]], sqlType: String): Column =
+    values.zipWithIndex.foldLeft(lit(null).cast(sqlType)) {
+      case (acc, (v, i)) => when(idx === i, v.map(lit).getOrElse(
+        lit(null).cast(sqlType))).otherwise(acc)
+    }
+
   /** `?since=`/`?until=` parameter validation on GET /openfeeder
     * (main.py:394-409 + parse_since sync_utils.py:41-50 / parse_until
     * main.py:770-778), replicated branch-for-branch:
@@ -820,23 +841,13 @@ object Queries {
       import SyncValidationVocab.{sinceCands, untilCands, sinceTs, untilTs}
       val sIdx = pmod(col("doc_id"), lit(8))
       val uIdx = pmod(floor(col("doc_id") / 8).cast("long"), lit(6))
-      def pickStr(idx: Column, vals: Seq[Option[String]]): Column =
-        vals.zipWithIndex.foldLeft(lit(null).cast("string")) {
-          case (acc, (v, i)) => when(idx === i, v.map(lit).getOrElse(
-            lit(null).cast("string"))).otherwise(acc)
-        }
-      def pickTs(idx: Column, vals: Seq[Option[Long]]): Column =
-        vals.zipWithIndex.foldLeft(lit(null).cast("long")) {
-          case (acc, (v, i)) => when(idx === i, v.map(lit).getOrElse(
-            lit(null).cast("long"))).otherwise(acc)
-        }
       val base = rd(s, dir, "documents").select(col("doc_id"),
           when(pmod(col("doc_id"), lit(5)) === 0, "widget")
             .otherwise(lit(null).cast("string")).as("q_param"),
-          pickStr(sIdx, sinceCands).as("since_param"),
-          pickStr(uIdx, untilCands).as("until_param"),
-          pickTs(sIdx, sinceTs).as("since_ts"),
-          pickTs(uIdx, untilTs).as("until_ts"))
+          pickByIndex(sIdx, sinceCands, "string").as("since_param"),
+          pickByIndex(uIdx, untilCands, "string").as("until_param"),
+          pickByIndex(sIdx, sinceTs, "long").as("since_ts"),
+          pickByIndex(uIdx, untilTs, "long").as("until_ts"))
       val hasQ = col("q_param").isNotNull && col("q_param") =!= ""
       val hasSince = col("since_param").isNotNull && col("since_param") =!= ""
       val hasUntil = col("until_param").isNotNull && col("until_param") =!= ""
@@ -1097,7 +1108,7 @@ object Queries {
     * horizon, not the historical corpus). */
   private val xQuotaEnvelope = Q(
     (s, dir) => {
-      val v = quotaView(s, dir)
+      val v = quotaSnapshot(rateLimitDecisions(s, dir), None)
       val bucketJson = concat(
         lit("\""), col("endpoint"), lit("\":{\"count\":"), col("n_in_window"),
         lit(",\"limit\":"), col("limit_rpm"), lit(",\"remaining\":"), col("remaining"),
@@ -1255,23 +1266,10 @@ object Queries {
     * (ip, endpoint, epoch). */
   private val xQuotaReset = Q(
     (s, dir) => {
-      import s.implicits._
-      val t = 600L
       val epoch = when(col("sec") > 350, 1).otherwise(0) +
         when(col("ip") === 9 && col("sec") > 520, 1).otherwise(0)
-      val reqs = rateLimitRequests(s, dir).withColumn("epoch", epoch)
-      val dec = RateLimits.simulate(reqs.as[RateLimits.Req]).toDF()
       val tr = when(col("ip") === 9, 520L).otherwise(350L)
-      dec.groupBy("ip", "endpoint", "limit_rpm")
-        .agg(
-          max(when(col("sec") <= t && col("sec") > tr, col("sec"))).as("last_checked"),
-          sum(when(col("allowed") && col("sec") <= t && col("sec") > t - 60 &&
-              col("sec") > tr, 1L).otherwise(0L)).as("n_in_window"))
-        .filter(col("last_checked").isNotNull && col("last_checked") >= t - 300)
-        .select(col("ip"), col("endpoint"), col("n_in_window"),
-          col("limit_rpm"),
-          greatest(col("limit_rpm") - col("n_in_window"), lit(0L)).as("remaining"),
-          round(lit(100.0) * col("n_in_window") / col("limit_rpm"), 1).as("percent_used"))
+      quotaSnapshot(rateLimitDecisions(s, dir, Some(epoch)), Some(tr))
         .orderBy("ip", "endpoint")
     },
     Some(s"""WITH RECURSIVE $rateLimitRequestsSqlCtes, lim AS (
@@ -1317,12 +1315,33 @@ object Queries {
       WHERE last_checked IS NOT NULL AND last_checked >= 300
       ORDER BY ip, endpoint"""))
 
+  /** The differential-sync window bounds every sync query reads:
+    * since 2024-01-10, until 2024-01-20 (UTC). Lazy: the first cast
+    * parses its type name, about a second on a cold JVM, which only the
+    * sync queries should pay. */
+  private lazy val syncSince = lit("2024-01-10 00:00:00").cast("timestamp")
+  private lazy val syncUntil = lit("2024-01-20 00:00:00").cast("timestamp")
+
+  /** ISO-8601 seconds rendering of a timestamp, no zone suffix. */
+  private def iso(c: Column): Column = date_format(c, "yyyy-MM-dd'T'HH:mm:ss")
+
+  /** The events table as the sidecar's pages store (url, title,
+    * indexed_at, first_indexed_at, event_id): url from event_id,
+    * indexed_at = ts, first_indexed_at = ts − (event_id % 20) days so
+    * both sync buckets populate. */
+  private def syncPages(s: SparkSession, dir: String): DataFrame =
+    rd(s, dir, "events").select(
+      concat(lit("/page/"), col("event_id")).as("url"),
+      col("event_type").as("title"),
+      col("ts").as("indexed_at"),
+      expr("timestampadd(DAY, -CAST(event_id % 20 AS INT), ts)").as("first_indexed_at"),
+      col("event_id"))
+
   /** T2: differential sync window — inclusive [since, until]
     * (indexer.py:339-377). */
   private val t2SyncWindow = Q(
     (s, dir) => rd(s, dir, "events")
-      .filter(col("ts") >= lit("2024-01-10 00:00:00").cast("timestamp") &&
-        col("ts") <= lit("2024-01-20 00:00:00").cast("timestamp"))
+      .filter(col("ts") >= syncSince && col("ts") <= syncUntil)
       .select("event_id", "event_type")
       .orderBy("event_id"),
     Some("""SELECT event_id, event_type FROM events
@@ -1333,8 +1352,7 @@ object Queries {
     * main.py:419-427). */
   private val j5SyncBuckets = Q(
     (s, dir) => rd(s, dir, "events")
-      .filter(col("ts") >= lit("2024-01-10 00:00:00").cast("timestamp") &&
-        col("ts") <= lit("2024-01-20 00:00:00").cast("timestamp"))
+      .filter(col("ts") >= syncSince && col("ts") <= syncUntil)
       .withColumn("bucket",
         when(col("ts") >= lit("2024-01-15 00:00:00").cast("timestamp"), "added")
           .otherwise("updated"))
@@ -1382,18 +1400,9 @@ object Queries {
       val sinceIso = "2024-01-10T00:00:00+00:00"
       val untilIso = "2024-01-20T00:00:00+00:00"
       val token = graft.extract.SyncCodec.encodeSyncToken(untilIso)
-      val sinceTs = lit("2024-01-10 00:00:00").cast("timestamp")
-      val untilTs = lit("2024-01-20 00:00:00").cast("timestamp")
-      def iso(c: Column): Column = date_format(c, "yyyy-MM-dd'T'HH:mm:ss")
-      val pages = rd(s, dir, "events").select(
-        concat(lit("/page/"), col("event_id")).as("url"),
-        col("event_type").as("title"),
-        col("ts").as("indexed_at"),
-        expr("timestampadd(DAY, -CAST(event_id % 20 AS INT), ts)").as("first_indexed_at"),
-        col("event_id"))
-      val win = pages
-        .filter(col("indexed_at") >= sinceTs && col("indexed_at") <= untilTs)
-        .withColumn("is_added", col("first_indexed_at") >= sinceTs)
+      val win = syncPages(s, dir)
+        .filter(col("indexed_at") >= syncSince && col("indexed_at") <= syncUntil)
+        .withColumn("is_added", col("first_indexed_at") >= syncSince)
         .withColumn("item", struct(
           col("url"),
           col("title"),
@@ -1405,7 +1414,7 @@ object Queries {
         sort_array(collect_list(when(col("is_added"), col("item")))).as("added"),
         sort_array(collect_list(when(!col("is_added"), col("item")))).as("updated"))
       val dels = rd(s, dir, "events")
-        .filter(col("event_type") === "error" && col("ts") >= sinceTs)
+        .filter(col("event_type") === "error" && col("ts") >= syncSince)
         .select(struct(concat(lit("/page/"), col("event_id")).as("url"),
           iso(col("ts")).as("deleted_at")).as("t"))
         .agg(sort_array(collect_list(col("t"))).as("deleted"))
@@ -1482,20 +1491,12 @@ object Queries {
     * single-row aggregation of the full change set (PlanSpec pins it). */
   private val xSyncPage = Q(
     (s, dir) => {
-      val sinceTs = lit("2024-01-10 00:00:00").cast("timestamp")
-      val untilTs = lit("2024-01-20 00:00:00").cast("timestamp")
-      def iso(c: Column): Column = date_format(c, "yyyy-MM-dd'T'HH:mm:ss")
       val cursor = "/page/3" // last url of the previous page (keyset)
-      rd(s, dir, "events").select(
-          concat(lit("/page/"), col("event_id")).as("url"),
-          col("event_type").as("title"),
-          col("ts").as("indexed_at"),
-          expr("timestampadd(DAY, -CAST(event_id % 20 AS INT), ts)").as("first_indexed_at"),
-          col("event_id"))
-        .filter(col("indexed_at") >= sinceTs && col("indexed_at") <= untilTs)
+      syncPages(s, dir)
+        .filter(col("indexed_at") >= syncSince && col("indexed_at") <= syncUntil)
         .filter(col("url") > cursor)
         .select(
-          when(col("first_indexed_at") >= sinceTs, "added").otherwise("updated").as("bucket"),
+          when(col("first_indexed_at") >= syncSince, "added").otherwise("updated").as("bucket"),
           col("url"), col("title"),
           when(pmod(col("event_id"), lit(3)) =!= 0, iso(col("first_indexed_at")))
             .as("published"),
@@ -1718,12 +1719,15 @@ object Queries {
     Some("""SELECT doc_id, md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fingerprint
       FROM documents ORDER BY doc_id"""))
 
+  /** The one n-gram Jaccard setting (3-word shingles, Jaccard ≥ 0.2).
+    * df cap = max(5% of corpus, 2), computed inside the job: boilerplate
+    * shingles shared by a large corpus fraction are what turns the
+    * shingle self-join quadratic. */
+  private[graft] def ngramJaccardPairs(docs: DataFrame): DataFrame =
+    TextOps.ngramJaccardPairs(docs, n = 3, thresholdX1000 = 200, maxDfPct = Some(5))
+
   private val xNgramJaccard = Q(
-    // df cap = max(5% of corpus, 2), computed inside the job: boilerplate
-    // shingles shared by a large corpus fraction are what turns the
-    // shingle self-join quadratic
-    (s, dir) => TextOps.ngramJaccardPairs(rd(s, dir, "documents"), n = 3,
-      thresholdX1000 = 200, maxDfPct = Some(5)).orderBy("doc_a", "doc_b"),
+    (s, dir) => ngramJaccardPairs(rd(s, dir, "documents")).orderBy("doc_a", "doc_b"),
     Some("""WITH words AS (
         SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS ws FROM documents
       ), idx AS (
@@ -1820,15 +1824,14 @@ object Queries {
     * of the documents dropped), parameterized ONLY on the hash mode so the
     * md5-portable registry queries and their xxhash64 bench twins are the
     * same code path by construction. */
-  private def minHashPairs(docs: DataFrame, portable: Boolean): DataFrame =
+  private[graft] def minHashPairs(docs: DataFrame, portable: Boolean): DataFrame =
     Dedup.minHashPairs(docs, n = 3, k = 16, bands = 4,
       minEstJaccardX1000 = 250, portable = portable, maxDfPct = Some(5))
 
   /** [[minHashPairs]]' setting through [[Dedup.neardupClusters]]: every
     * document labeled with its near-dup cluster. */
-  private def neardupClusters(s: SparkSession, dir: String,
-      portable: Boolean): DataFrame =
-    Dedup.neardupClusters(rd(s, dir, "documents"), n = 3, k = 16, bands = 4,
+  private[graft] def neardupClusters(docs: DataFrame, portable: Boolean): DataFrame =
+    Dedup.neardupClusters(docs, n = 3, k = 16, bands = 4,
       minEstJaccardX1000 = 250, portable = portable, maxDfPct = Some(5))
 
   /** The near-dup curation pipeline, parameterized ONLY on the hash mode
@@ -1980,17 +1983,22 @@ object Queries {
     * DuckDB, then a RECURSIVE label-reachability CTE — an independent CC
     * algorithm (reachability closure vs edge contraction). */
   private val xNeardupClusters = Q(
-    (s, dir) => neardupClusters(s, dir, portable = true).orderBy("doc_id"),
+    (s, dir) => neardupClusters(rd(s, dir, "documents"), portable = true).orderBy("doc_id"),
     Some(s"""WITH RECURSIVE pairs AS ($minHashPairsSelectSql
       ), $ccReachCtesSql
       SELECT node AS doc_id, CAST(min(label) AS BIGINT) AS cluster_id
       FROM reach GROUP BY node ORDER BY doc_id"""))
 
+  /** The query embedding of the vector queries: vec_id 0's, read with
+    * one driver collect. */
+  private def queryVector(emb: DataFrame): Array[Float] =
+    emb.filter(col("vec_id") === 0).select("embedding")
+      .collect().head.getSeq[Float](0).toArray
+
   private val xEmbeddingTopK = Q(
     (s, dir) => {
       val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .collect().head.getSeq[Float](0).toArray
+      val q = queryVector(emb)
       VectorOps.cosineTopK(emb, q, k = 20, excludeId = Some(0L))
     },
     Some("""SELECT e.vec_id, e.label,
@@ -2014,8 +2022,7 @@ object Queries {
   private val xEmbeddingLsh = Q(
     (s, dir) => {
       val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .collect().head.getSeq[Float](0).toArray
+      val q = queryVector(emb)
       VectorOps.lshTopK(emb, dim = 64, q, k = 20, nPlanes = 8, probeBits = 3,
         excludeId = Some(0L))
     },
@@ -2055,8 +2062,7 @@ object Queries {
   private val xEmbeddingIvf = Q(
     (s, dir) => {
       val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .collect().head.getSeq[Float](0).toArray
+      val q = queryVector(emb)
       VectorOps.ivfTopK(emb, dim = 64, q, k = 20, nCells = 16, nProbe = 6,
         excludeId = Some(0L))
     },
@@ -2188,6 +2194,18 @@ object Queries {
       .orderBy("conv_id", "turn_idx", "chunk_index"),
     None)
 
+  /** One `Turn` per document (conv_id = doc_id, turn 0, no tool, the
+    * transcript epoch) whose payload is `text`, a column named "text". */
+  private def docTurns(s: SparkSession, dir: String, role: String,
+      text: Column): Dataset[graft.model.Turn] = {
+    import s.implicits._
+    rd(s, dir, "documents")
+      .select(col("doc_id").cast("string").as("conv_id"), lit(0).as("turn_idx"),
+        lit(role).as("role"), text, lit("").as("tool"),
+        lit(new java.sql.Timestamp(Transcripts.EpochStart * 1000L)).as("ts"))
+      .as[graft.model.Turn]
+  }
+
   /** The flagship extraction pipeline, ORACLE-CHECKED: over plain-text
     * payloads (the documents table: no markup, < 1500 chars) the pipeline's
     * output is exactly predictable in SQL — lxml wraps bare text in one
@@ -2196,20 +2214,12 @@ object Queries {
     * This gives the extraction operator a hard DuckDB gate instead of a
     * rows-only check. */
   private val eExtractDocsOracle = Q(
-    (s, dir) => {
-      import s.implicits._
-      val turns = rd(s, dir, "documents")
-        .select(col("doc_id").cast("string").as("conv_id"), lit(0).as("turn_idx"),
-          lit("user").as("role"), col("text"), lit("").as("tool"),
-          lit(new java.sql.Timestamp(Transcripts.EpochStart * 1000L)).as("ts"))
-        .as[graft.model.Turn]
-      ExtractJob.extract(turns).toDF()
-        .select(col("conv_id").cast("long").as("doc_id"), col("n_chunks"),
-          element_at(col("chunks"), 1).getField("text").as("chunk_text"),
-          element_at(col("chunks"), 1).getField("chunk_type").as("chunk_type"),
-          col("summary"), col("language"))
-        .orderBy("doc_id")
-    },
+    (s, dir) => ExtractJob.extract(docTurns(s, dir, "user", col("text"))).toDF()
+      .select(col("conv_id").cast("long").as("doc_id"), col("n_chunks"),
+        element_at(col("chunks"), 1).getField("text").as("chunk_text"),
+        element_at(col("chunks"), 1).getField("chunk_type").as("chunk_type"),
+        col("summary"), col("language"))
+      .orderBy("doc_id"),
     Some("""SELECT doc_id, 1 AS n_chunks,
       regexp_replace(trim(text), '\s+', ' ', 'g') AS chunk_text,
       'paragraph' AS chunk_type,
@@ -2239,12 +2249,7 @@ object Queries {
         lit("</p><pre>\ndef f_"), col("doc_id"),
         lit("(x):\n    return x + "), col("doc_id"),
         lit("</pre></article></body></html>"))
-      val turns = rd(s, dir, "documents")
-        .select(col("doc_id").cast("string").as("conv_id"), lit(0).as("turn_idx"),
-          lit("assistant").as("role"), html.as("text"), lit("").as("tool"),
-          lit(new java.sql.Timestamp(Transcripts.EpochStart * 1000L)).as("ts"))
-        .as[graft.model.Turn]
-      ExtractJob.extract(turns).toDF()
+      ExtractJob.extract(docTurns(s, dir, "assistant", html.as("text"))).toDF()
         .select(col("conv_id").cast("long").as("doc_id"), col("title"),
           col("language"), col("n_chunks"),
           element_at(col("chunks"), 1).getField("text").as("c1_text"),
@@ -2447,6 +2452,18 @@ object Queries {
       col("text").as("content"),
       col("source"))
 
+  /** The one-row `total_pages` of a paged listing: at least 1, rounded
+    * up over `perPage` items. */
+  private def totalPages(rows: DataFrame, perPage: Double): DataFrame =
+    rows.agg(count(lit(1)).as("n"))
+      .select(greatest(lit(1L), ceil(col("n") / lit(perPage)).cast("long"))
+        .as("total_pages"))
+
+  /** The express 40-word [[graft.extract.AdapterChunker.summarise]].
+    * Lazy: building a UDF reflects on its types, over a second on a cold
+    * JVM, which only the two queries that use it should pay. */
+  private lazy val summariseUdf = udf((c: String) => graft.extract.AdapterChunker.summarise(c))
+
   private val searchCorpusSql =
     """corpus AS (
         SELECT doc_id,
@@ -2472,13 +2489,9 @@ object Queries {
     * broadcast 1-row total — no global window. */
   private val xSearchExpressFamily = Q(
     (s, dir) => {
-      val q = ("<b>MERGE</b>" + " pad" * 100) // sanitize: strip tags, 200 cap,
-        .replaceAll("<[^>]*>", "").take(200).takeWhile(_ != ' ').toLowerCase
+      val q = sanitizedSearchTerm
       val corpus = searchCorpus(s, dir)
-      val total = corpus.agg(count(lit(1)).as("n"))
-        .select(greatest(lit(1L), ceil(col("n") / lit(25.0)).cast("long"))
-          .as("total_pages"))
-      val summariseUdf = udf((c: String) => graft.extract.AdapterChunker.summarise(c))
+      val total = totalPages(corpus, 25.0)
       corpus
         .orderBy(col("doc_id").desc).offset(25).limit(25) // page=2, limit=25
         .filter(!col("source").startsWith("src1"))        // excludePaths
@@ -2619,9 +2632,7 @@ object Queries {
       val titleHit = lower(col("title")).contains(q)
       val bodyHit = lower(col("content")).contains(q)
       val matches = corpus.filter(titleHit || bodyHit)
-      val total = matches.agg(count(lit(1)).as("n"))
-        .select(greatest(lit(1L), ceil(col("n") / lit(20.0)).cast("long"))
-          .as("total_pages"))
+      val total = totalPages(matches, 20.0)
       val joomlaSumUdf =
         udf((c: String) => graft.extract.AdapterChunker.summariseJoomla(c))
       matches
@@ -2683,9 +2694,7 @@ object Queries {
       val hit = lower(col("title")).contains(q) ||
         lower(col("excerpt")).contains(q) || lower(col("content")).contains(q)
       val matches = corpus.filter(hit)
-      val total = matches.agg(count(lit(1)).as("n"))
-        .select(greatest(lit(1L), ceil(col("n") / lit(20.0)).cast("long"))
-          .as("total_pages"))
+      val total = totalPages(matches, 20.0)
       val wpTrimUdf = udf((c: String) =>
         graft.extract.AdapterChunker.wpTrimWords(c, 30, "..."))
       matches
@@ -2737,20 +2746,18 @@ object Queries {
     * idiom; the '/error' prefix stands in for config.excludePaths. */
   private val xSyncExpressStatic = Q(
     (s, dir) => {
-      val sinceTs = lit("2024-01-10 00:00:00").cast("timestamp")
-      val untilTs = lit("2024-01-20 00:00:00").cast("timestamp")
       val pages = rd(s, dir, "events").select(
         concat(lit("/"), col("event_type"), lit("/"), col("event_id")).as("url"),
         col("ts").as("published"))
       val updatedRows = pages
         .filter(!col("url").startsWith("/error")) // isExcludedPath
-        .filter(col("published") >= sinceTs && col("published") <= untilTs)
+        .filter(col("published") >= syncSince && col("published") <= syncUntil)
       val counts = updatedRows.agg(count(lit(1)).as("n"))
         .select(lit(0L).as("n_added"), col("n").as("n_updated"),
           lit(0L).as("n_deleted"), lit(false).as("deleted_tracking"))
       updatedRows
         .select(col("url"),
-          date_format(col("published"), "yyyy-MM-dd'T'HH:mm:ss").as("published"),
+          iso(col("published")).as("published"),
           lit("updated").as("bucket")) // NEVER "added": the static-file quirk
         .crossJoin(broadcast(counts))
         .orderBy("url")
@@ -2789,19 +2796,17 @@ object Queries {
     * where every parser agrees. */
   private val xSyncWpDiff = Q(
     (s, dir) => {
-      val sinceTs = lit("2024-01-10 00:00:00").cast("timestamp")
-      val untilTs = lit("2024-01-20 00:00:00").cast("timestamp")
       val pages = rd(s, dir, "events").select(
         concat(lit("/"), col("event_type"), lit("/"), col("event_id")).as("url"),
         col("ts").as("modified"),
         expr("timestampadd(DAY, -CAST(event_id % 20 AS INT), ts)").as("post_date"))
       pages
-        .filter(col("modified") > sinceTs && col("modified") <= untilTs) // (s, u]
+        .filter(col("modified") > syncSince && col("modified") <= syncUntil) // (s, u]
         .filter(!col("url").startsWith("/error")) // in-loop exclusion
         .select(col("url"),
-          date_format(col("modified"), "yyyy-MM-dd'T'HH:mm:ss").as("updated"),
-          date_format(col("post_date"), "yyyy-MM-dd'T'HH:mm:ss").as("published"),
-          when(col("post_date") >= sinceTs, "added").otherwise("updated")
+          iso(col("modified")).as("updated"),
+          iso(col("post_date")).as("published"),
+          when(col("post_date") >= syncSince, "added").otherwise("updated")
             .as("bucket"))
         .orderBy("url")
     },
@@ -2869,7 +2874,6 @@ object Queries {
     (s, dir) => {
       val spark = s
       import spark.implicits._
-      val summariseUdf = udf((c: String) => graft.extract.AdapterChunker.summarise(c))
       val nChunksUdf = udf((c: String, u: String) =>
         graft.extract.AdapterChunker.chunkContent(c, u).length.toLong)
       val pages = rd(s, dir, "documents").select(
@@ -2878,9 +2882,7 @@ object Queries {
           .otherwise(concat(lit("/"), col("source"), lit("/"), col("doc_id")))
           .as("url"),
         col("text"))
-      val totalPages = pages.agg(count(lit(1)).as("n"))
-        .select(greatest(lit(1L), ceil(col("n") / lit(10.0)).cast("long"))
-          .as("total_pages"))
+      val total = totalPages(pages, 10.0)
       val discovery = Seq(("discovery", ".well-known/openfeeder.json"))
         .toDF("kind", "path")
         .withColumn("seq", lit(-1L)).withColumn("url", lit("search")) // capabilities
@@ -2904,7 +2906,7 @@ object Queries {
             .as("path"),
           col("seq"), col("url"), col("summary"), col("total_chunks"))
       discovery.unionByName(indexItems).unionByName(items)
-        .crossJoin(broadcast(totalPages))
+        .crossJoin(broadcast(total))
         .orderBy("kind", "seq", "path")
     },
     Some("""WITH pages AS (
@@ -2995,11 +2997,8 @@ object Queries {
         if (raw == null || !phpIsNumeric(raw)) 10L
         else math.min(wpAbsInt(raw), 50L)
       })
-      val rawCol = raws.zipWithIndex.foldLeft(lit(null).cast("string")) {
-        case (acc, (v, i)) =>
-          when(pmod(col("doc_id"), lit(raws.size)) === i,
-            Option(v).map(lit).getOrElse(lit(null).cast("string"))).otherwise(acc)
-      }
+      val rawCol = pickByIndex(pmod(col("doc_id"), lit(raws.size)),
+        raws.map(Option(_)), "string")
       rd(s, dir, "documents").select(col("doc_id"), rawCol.as("raw_limit"))
         .select(col("doc_id"), col("raw_limit"),
           expressUdf(col("raw_limit")).as("express_limit"),
@@ -3686,7 +3685,7 @@ object Queries {
     "x_simhash" -> ((s: SparkSession, dir: String) =>
       TextOps.simHash(rd(s, dir, "documents"))),
     "x_neardup_clusters" -> ((s: SparkSession, dir: String) =>
-      neardupClusters(s, dir, portable = false)),
+      neardupClusters(rd(s, dir, "documents"), portable = false)),
     "x_curation_neardup" -> ((s: SparkSession, dir: String) =>
       curationNeardupPipeline(s, dir, portable = false)))
 }

@@ -69,19 +69,16 @@ object ScaleSmoke {
           lit(" doc-token-"), col("doc_id") * replicas + col("rep")).as("text"))
     println(s"SMOKE documents: ${nDocs0 * replicas} (${nDocs0} × $replicas)")
     val mh = timed("minhash pairs (production xxhash64, df-cap 5%)")(
-      graft.ops.Dedup.minHashPairs(docs, n = 3, k = 16, bands = 4,
-        minEstJaccardX1000 = 250, portable = false, maxDfPct = Some(5)).count())
+      graft.query.Queries.minHashPairs(docs, portable = false).count())
     println(s"SMOKE minhash pairs: $mh")
     val nj = timed("ngram jaccard pairs (df-cap 5%)")(
-      graft.ops.TextOps.ngramJaccardPairs(docs, n = 3, thresholdX1000 = 200,
-        maxDfPct = Some(5)).count())
+      graft.query.Queries.ngramJaccardPairs(docs).count())
     println(s"SMOKE jaccard pairs: $nj")
 
     // connected components over the full 10×-scale pair graph: each
     // original doc's replica fan must collapse to one cluster
     val clusters = timed("connected components over minhash pairs")(
-      graft.ops.Dedup.neardupClusters(docs, n = 3, k = 16, bands = 4,
-        minEstJaccardX1000 = 250, portable = false, maxDfPct = Some(5)))
+      graft.query.Queries.neardupClusters(docs, portable = false))
     val nClusters = clusters.select("cluster_id").distinct().count()
     val nLabeled = clusters.count()
     println(s"SMOKE cc clusters: $nClusters over $nLabeled labeled docs")

@@ -48,9 +48,9 @@ class HtmlDomSpec extends AnyFunSuite {
     assert(graft.extract.Html5Entities.table.size == 2125)
     // superset property: every legacy HTML4 entity resolves to the same
     // value — EXCEPT lang/rang, whose code points HTML5 remapped
-    // (U+2329/U+232A → U+27E8/U+27E9); the HTML4 subset deliberately
+    // (U+2329/U+232A → U+27E8/U+27E9); the HTML 4.01 table deliberately
     // keeps the 4.01 values for the PHP (Joomla) decode path
-    graft.extract.HtmlEntities.html4Subset.foreach { case (n, v) =>
+    graft.extract.HtmlEntities.html401.foreach { case (n, v) =>
       if (n == "lang" || n == "rang") {
         assert(v == (if (n == "lang") "\u2329" else "\u232A"))
         assert(graft.extract.HtmlEntities.decode(s"&$n;") ==

@@ -77,6 +77,7 @@ class FunctionsSpec extends AnyFunSuite {
     val r = spark.sql(
       s"""SELECT of_extract_turn('u#0', $html, 'browser') AS h,
          |       of_extract_turn('u#0', $html, 'render') AS s,
+         |       of_extract_turn('u#0', $html, 'pdf') AS p,
          |       of_is_llm_bot('Mozilla/5.0 GPTBot/1.0') AS bot,
          |       of_is_llm_bot('Mozilla/5.0 human') AS human""".stripMargin)
       .collect().head
@@ -85,7 +86,8 @@ class FunctionsSpec extends AnyFunSuite {
     assert(htmlChunks.map(_.getString(2)) == Seq("paragraph"))
     assert(spanChunks.map(_.getString(2)) == Seq("span"))
     assert(spanChunks.head.getString(1) == "A paragraph with more than twenty characters.")
-    assert(r.getBoolean(2) && !r.getBoolean(3))
+    assert(r.getSeq[org.apache.spark.sql.Row](2) == spanChunks)
+    assert(r.getBoolean(3) && !r.getBoolean(4))
   }
 
   test("of_detect_bot / of_bot_family / of_encode_uri from SQL") {

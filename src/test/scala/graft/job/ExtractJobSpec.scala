@@ -67,7 +67,9 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(h.chunks.map(_.chunk_type).contains("paragraph"))
     assert(h.title == "Title here")
 
-    // pdf routes like render
+    // pdf routes like render: the same HTML turn differs only in its tool
+    val rp = ExtractJob.extractOne(Turn("c", 0, "tool", html, "pdf", ts0))
+    assert(rp == r.copy(tool = "pdf"))
     val p = ExtractJob.extractOne(Turn("c", 1, "tool", "plain text span", "pdf", ts0))
     assert(p.chunks.map(_.text) == Seq("plain text span"))
     assert(p.chunks.head.chunk_type == "span")

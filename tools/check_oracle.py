@@ -8,6 +8,10 @@ import duckdb
 
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+# `SF OUT --against OUT2` also compares every Verify output table, the
+# rows-only ones included, row for row with the same table of a second
+# Verify dump, by EXCEPT ALL in both directions; any difference fails.
+against = sys.argv[4] if len(sys.argv) > 4 and sys.argv[3] == "--against" else None
 
 con = duckdb.connect()
 for p in glob.glob(f"{sf}/*.parquet"):
@@ -54,4 +58,33 @@ rows_only = [d.split("/")[-1] for d in glob.glob(f"{out}/*") if
 for name in sorted(rows_only):
     n = con.execute(f"SELECT count(*) FROM read_parquet('{out}/{name}/*.parquet')").fetchone()[0]
     print(f"ROWS {name}: {n}")
+
+if against:
+    def tables_in(d):
+        return sorted(t.split("/")[-1] for t in glob.glob(f"{d}/*") if not t.endswith(".json"))
+    tables = tables_in(out)
+    for name in sorted(set(tables_in(against)) - set(tables)):
+        print(f"MISSING {name}: only in {against}")
+        fails += 1
+    same = 0
+    for name in tables:
+        a = f"read_parquet('{out}/{name}/*.parquet')"
+        b = f"read_parquet('{against}/{name}/*.parquet')"
+        try:
+            extra = con.execute(
+                f"SELECT count(*) FROM (SELECT * FROM {a} EXCEPT ALL SELECT * FROM {b})"
+            ).fetchone()[0]
+            missing = con.execute(
+                f"SELECT count(*) FROM (SELECT * FROM {b} EXCEPT ALL SELECT * FROM {a})"
+            ).fetchone()[0]
+        except Exception as e:
+            print(f"ERROR {name} against: {str(e)[:300]}")
+            fails += 1
+            continue
+        if extra or missing:
+            print(f"DIFF {name}: {extra} rows only here, {missing} only in {against}")
+            fails += 1
+        else:
+            same += 1
+    print(f"AGAINST {against}: {same}/{len(tables)} tables identical")
 sys.exit(1 if fails else 0)
