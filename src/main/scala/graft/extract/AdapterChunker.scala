@@ -20,13 +20,26 @@ object AdapterChunker {
   /** Which adapter port's semantics to run: the ports diverge in
     * chunk-type detection order and bullet classes, host-language
     * string semantics (trim / word count / line split), clean
-    * pipelines, packing budgets, and id schemes. */
-  sealed trait Variant
+    * pipelines, packing budgets, and id schemes. Each value carries its
+    * port's rules as data — its [[Host]], clean, bullet set, detection
+    * [[Order]], packer, id prefix, and whether a cleaned "0" is PHP
+    * `empty` — read by the one [[detectType]] and [[chunkContent]]. */
+  sealed abstract class Variant private[AdapterChunker] (
+      private[AdapterChunker] val host: Host,
+      private[AdapterChunker] val clean: String => String,
+      bullets: String,
+      private[AdapterChunker] val order: Order,
+      private[AdapterChunker] val pack: Array[String] => Vector[String],
+      private[AdapterChunker] val idPrefix: String => String = TextUtil.md5Hex,
+      private[AdapterChunker] val zeroIsEmpty: Boolean = false) {
+    private[AdapterChunker] val listRe = listLineRe(host.ws, bullets, host.flags)
+  }
   object Variant {
     /** chunker.js:48-73 — code → quote → heading → list → paragraph,
       * `[-*+]` bullets, JS whitespace-split word count. The superset
       * variant (the only one detecting code/quote). */
-    case object Express extends Variant
+    case object Express extends Variant(Js, cleanHtml, "-*+",
+      CodeQuoteHeadingFirst, packBySum(_, countWords, WordsPerChunk))
     /** `/root/reference/adapters/wordpress/includes/class-chunker.php:152-174`
       * — LIST IS CHECKED BEFORE HEADING (a single-line bullet is a list
       * here, a heading in express), bullets are `[-*]` only (no `+`), no
@@ -44,18 +57,21 @@ object AdapterChunker {
       * `\n\n` as `</p>\n<p>`, WP-cleaned paragraph boundaries are single
       * newlines; a literal `\n\n` reaches the packer only through
       * `<pre>` bodies. */
-    case object Wp extends Variant
+    case object Wp extends Variant(Php, cleanWp, "-*", ListFirst,
+      packBySum(_, phpStrWordCount, WordsPerChunk), zeroIsEmpty = true)
     /** `/root/reference/adapters/fastapi/openfeeder_fastapi/chunker.py:39-54`
       * — heading before list (like express) but NO code/quote detection,
       * and Python string semantics: `splitlines()` boundaries (`\r`,
       * `\v`, `\f`, … split lines here; only `\n` does in JS/PHP),
       * `str.strip()`, `str.split()` word counting. */
-    case object FastApi extends Variant
+    case object FastApi extends Variant(Py, cleanHtml, "-*+", HeadingFirst,
+      packBySum(_, pyCountWords, WordsPerChunk))
     /** The three TypeScript ports — astro/nextjs/vite `src/chunker.ts`,
       * byte-identical detectType across them (astro :32-49) — heading
       * before list, `[-*+]` bullets, NO code/quote, JS string semantics;
       * clean/packing/ids are the express pipeline. */
-    case object Ts extends Variant
+    case object Ts extends Variant(Js, cleanHtml, "-*+", HeadingFirst,
+      packBySum(_, countWords, WordsPerChunk))
     /** `/root/reference/adapters/joomla/src/Helper/Chunker.php` — its own
       * clean (`{...}` CMS-tag strip :79, PHP `strip_tags` :82 — which
       * CONCATENATES text across removed tags instead of spacing it,
@@ -64,7 +80,8 @@ object AdapterChunker {
       * 500` on the trim-joined candidate, :45-52 — not a word budget!),
       * and heading-first detection with `str_word_count` on the RAW text
       * and `[-*+]` bullets (:96-117). */
-    case object Joomla extends Variant
+    case object Joomla extends Variant(Php, cleanJoomla, "-*+", HeadingFirst,
+      packJoomlaChars)
     /** `/root/reference/adapters/woocommerce/includes/class-chunker.php`
       * — a 300-word `str_word_count` budget (:20), ids `p{product_id}_i`
       * (:121, no md5 — pass the product id as the `url` argument), clean
@@ -81,7 +98,8 @@ object AdapterChunker {
       * without /u: a real "• " line starts with byte 0xE2 whose
       * continuation byte can never match `\s`, so the • alternative is
       * DEAD for valid UTF-8 — effectively `[-*]`, replicated as such. */
-    case object Woo extends Variant
+    case object Woo extends Variant(Php, cleanWoo, "-*", ListOnly,
+      packBySum(_, phpStrWordCount, 300), "p" + _, zeroIsEmpty = true)
     /** `/root/reference/adapters/drupal/src/Service/ChunkerService.php`
       * — the SEVENTH behavior: Drupal is NOT WordPress. Packing is a
       * 500-CHARACTER budget (`CHARS_PER_CHUNK = 500`, :16): per
@@ -98,7 +116,8 @@ object AdapterChunker {
       * md5(url)-prefixed ids (:95-116). Empty check is
       * `empty(trim($content))` (:58) — the falsy "0" quirk applies to
       * the trimmed cleaned text. */
-    case object Drupal extends Variant
+    case object Drupal extends Variant(Php, cleanDrupal, "-*", ListFirst,
+      packBySum(_, TextUtil.cpLength, 500), zeroIsEmpty = true)
   }
 
   final case class AChunk(id: String, text: String, chunkType: String,
@@ -107,7 +126,7 @@ object AdapterChunker {
   private val tagRe = Pattern.compile("<[^>]*>")
   private val spaceTabRe = Pattern.compile("[ \\t]+")
   private val manyNewlinesRe = Pattern.compile("\\n{3,}")
-  private val paraSplitRe = Pattern.compile("\\n{2,}")
+  private[extract] val paraSplitRe = Pattern.compile("\\n{2,}")
 
   /** JS whitespace — what both `/\s/` and `String.prototype.trim()`
     * accept: \t-\r, the Unicode space separators (Zs), U+2028, U+2029
@@ -119,6 +138,11 @@ object AdapterChunker {
     case _ => c >= '\u2000' && c <= '\u200A'
   }
 
+  /** C-locale `isspace`: the six units PHP `strip_tags` tests after a `<`
+    * and PCRE's `\s` matches without /u. */
+  @inline private def isCSpace(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
+
   /** A regex character class matching exactly the units `ws` accepts. */
   private def charClass(ws: Char => Boolean): String =
     (0 to 0xFFFF).filter(i => ws(i.toChar))
@@ -126,15 +150,36 @@ object AdapterChunker {
 
   private val jsWsSplitRe = Pattern.compile(charClass(isJsWs) + "+")
 
-  /** `^(\d+[.)]\s|[-*+]\s)` under the host's `\s`: JS regexes have an
-    * ASCII `\d`; Python `re` on str has a Unicode `\d`. */
-  private def listLineRe(ws: Char => Boolean, flags: Int): Pattern = {
+  /** `^(\d+[.)]\s|[bullets]\s)` under the host's `\s`: JS regexes and
+    * PCRE without /u have an ASCII `\d`; Python `re` on str has a
+    * Unicode `\d`. */
+  private def listLineRe(ws: Char => Boolean, bullets: String, flags: Int): Pattern = {
     val s = charClass(ws)
-    Pattern.compile(s"^(\\d+[.)]$s|[-*+]$s)", flags)
+    Pattern.compile(s"^(\\d+[.)]$s|[$bullets]$s)", flags)
   }
-  private val jsListLineRe = listLineRe(isJsWs, 0)
-  private val pyListLineRe =
-    listLineRe(TextUtil.isPyWs, Pattern.UNICODE_CHARACTER_CLASS)
+
+  /** A host language's string semantics, shared by every port written in
+    * it: the trim, the word count, the line split, the list pattern's
+    * `\s` (`ws`) and `\d` (`flags`), and whether paragraphs are filtered
+    * by PHP `array_filter`, which also drops a falsy "0" paragraph. */
+  private[AdapterChunker] final class Host(val trim: String => String,
+      val words: String => Int, val lines: String => collection.IndexedSeq[String],
+      val ws: Char => Boolean, val flags: Int, val dropsZero: Boolean)
+  private val Js = new Host(jsTrim, countWords, _.split("\n", -1), isJsWs, 0,
+    dropsZero = false)
+  private val Php = new Host(phpTrim, phpStrWordCount, _.split("\n", -1), isCSpace, 0,
+    dropsZero = true)
+  private val Py = new Host(TextUtil.stripPy, pyCountWords, pySplitlines,
+    TextUtil.isPyWs, Pattern.UNICODE_CHARACTER_CLASS, dropsZero = false)
+
+  /** A port's detection order: code and quote first (express only), then
+    * a heading test before the list test, after it, or not at all. */
+  private[AdapterChunker] final class Order(val codeQuote: Boolean,
+      val headingFirst: Boolean, val headingLast: Boolean)
+  private val CodeQuoteHeadingFirst = new Order(true, true, false)
+  private val HeadingFirst = new Order(false, true, false)
+  private val ListFirst = new Order(false, false, true)
+  private val ListOnly = new Order(false, false, false)
 
   /** JS `String.prototype.trim()`. */
   private[extract] def jsTrim(s: String): String = {
@@ -143,6 +188,12 @@ object AdapterChunker {
     while (b > a && isJsWs(s.charAt(b - 1))) b -= 1
     if (a == 0 && b == s.length) s else s.substring(a, b)
   }
+
+  /** The tail of every clean: `[ \t]+` → " ", `\n{3,}` → "\n\n", then the
+    * host's trim (chunker.js:30-34 and each PHP port's `clean`). */
+  private def collapseWs(t: String, trim: String => String): String =
+    trim(manyNewlinesRe.matcher(spaceTabRe.matcher(t).replaceAll(" "))
+      .replaceAll("\n\n"))
 
   /** C1: strip tags, decode exactly 6 entities (sequentially, so `&amp;lt;`
     * becomes `<`, as in the JS), collapse spaces/tabs, squeeze blank lines —
@@ -155,9 +206,7 @@ object AdapterChunker {
     text = text.replace("&quot;", "\"")
     text = text.replace("&#039;", "'")
     text = text.replace("&nbsp;", " ")
-    text = spaceTabRe.matcher(text).replaceAll(" ")
-    text = manyNewlinesRe.matcher(text).replaceAll("\n\n")
-    jsTrim(text)
+    collapseWs(text, Js.trim)
   }
 
   /** chunker.js:40-42. */
@@ -165,39 +214,36 @@ object AdapterChunker {
     jsWsSplitRe.split(jsTrim(text), -1).count(_.nonEmpty)
 
   /** C4: code / quote / heading / list / paragraph — chunker.js:48-73. */
-  def detectType(text: String): String = {
-    val trimmed = jsTrim(text)
-    if (trimmed.startsWith("```")) "code"
-    else if (trimmed.startsWith(">")) "quote"
-    else detectTypeTs(text)
-  }
+  def detectType(text: String): String = detectType(text, Variant.Express)
 
-  /** [[detectType]] under a specific adapter port's semantics. */
-  def detectType(text: String, variant: Variant): String = variant match {
-    case Variant.Express => detectType(text)
-    case Variant.Wp => detectTypeWp(text)
-    case Variant.FastApi => detectTypeFastApi(text)
-    case Variant.Ts => detectTypeTs(text)
-    case Variant.Joomla => detectTypeJoomla(text)
-    case Variant.Woo => detectTypeWoo(text)
-    case Variant.Drupal => detectTypeWp(text) // ChunkerService.php:143-156 == WP's
-  }
-
-  /** astro/nextjs/vite chunker.ts detectType: heading first, then
-    * `[-*+]` list, no code/quote — express string semantics; express is
-    * this rule behind its code and quote checks. */
-  private def detectTypeTs(text: String): String = {
-    val trimmed = jsTrim(text)
-    val lines = trimmed.split("\n", -1)
-    if (lines.length == 1 && countWords(text) < 15) "heading"
-    else {
-      val listLines = lines.count(l => jsListLineRe.matcher(jsTrim(l)).find())
-      if (lines.nonEmpty && listLines.toDouble / lines.length >= 0.5) "list"
-      else "paragraph"
+  /** [[detectType]] under a specific adapter port's semantics: the
+    * port's [[Order]] over one trim, one line split and one list count.
+    * A text is a list when at least half its lines are list lines (WP's
+    * `$list_lines > 0 && $list_lines >= count($lines)/2` and the other
+    * ports' `ratio >= 0.5` agree on every line count, zero lines
+    * included), and a heading when it is one line of fewer than 15
+    * words. Heading-first ports count the raw text and list-first ports
+    * the trimmed one; only PHP `str_word_count` can tell them apart, on
+    * a trailing "-" that trimming exposes. */
+  def detectType(text: String, variant: Variant): String = {
+    val h = variant.host
+    val order = variant.order
+    val trimmed = h.trim(text)
+    if (order.codeQuote && trimmed.startsWith("```")) return "code"
+    if (order.codeQuote && trimmed.startsWith(">")) return "quote"
+    val lines = h.lines(trimmed)
+    def heading(counted: String) = lines.length == 1 && h.words(counted) < 15
+    def list = {
+      val n = lines.count(l => variant.listRe.matcher(h.trim(l)).find())
+      n > 0 && 2 * n >= lines.length
     }
+    if (order.headingFirst && heading(text)) "heading"
+    else if (list) "list"
+    else if (order.headingLast && heading(trimmed)) "heading"
+    else "paragraph"
   }
 
-  // ---- PHP string semantics (WP variant) ------------------------------
+  // ---- PHP string semantics -------------------------------------------
 
   /** PHP `str_word_count($s)` (C locale, no extra charlist): scans for
     * tokens of `[A-Za-z'-]`, where a token may start at `'`/`-` only when
@@ -222,50 +268,6 @@ object AdapterChunker {
       } else i += 1
     }
     count
-  }
-
-  /** PCRE (no /u): ASCII `\d`/`\s`, bullets `[-*]` only —
-    * class-chunker.php:161. */
-  private val wpListRe = Pattern.compile("^(\\d+[.)]\\s|[-*]\\s)")
-
-  /** class-chunker.php:152-174: list FIRST (`$list_lines > 0 &&
-    * $list_lines >= count($lines)/2` — float division), then single-line
-    * `str_word_count < 15` heading, else paragraph. */
-  private def detectTypeWp(text: String): String = {
-    val trimmed = phpTrim(text)
-    val lines = trimmed.split("\n", -1)
-    val listLines = lines.count(l => wpListRe.matcher(phpTrim(l)).find())
-    if (listLines > 0 && listLines >= lines.length / 2.0) "list"
-    else if (lines.length == 1 && phpStrWordCount(trimmed) < 15) "heading"
-    else "paragraph"
-  }
-
-  /** Joomla Chunker.php:96-117: heading first — `str_word_count($text)`
-    * on the RAW (untrimmed) text, so a text ending "- \n" counts its
-    * hyphen where the trimmed form "… -" would drop it under the
-    * trailing-hyphen rule — then `[-*+]` list at ratio ≥ 0.5, else
-    * paragraph. */
-  private val joomlaListRe = Pattern.compile("^(\\d+[.)]\\s|[-*+]\\s)")
-  private def detectTypeJoomla(text: String): String = {
-    val lines = phpTrim(text).split("\n", -1)
-    if (lines.length == 1 && phpStrWordCount(text) < 15) "heading"
-    else {
-      val listLines = lines.count(l => joomlaListRe.matcher(phpTrim(l)).find())
-      if (lines.nonEmpty && listLines.toDouble / lines.length >= 0.5) "list"
-      else "paragraph"
-    }
-  }
-
-  /** WooCommerce class-chunker.php:140-157: list or paragraph ONLY — no
-    * heading, no code/quote. The source class is `[-*•]` but see
-    * [[Variant.Woo]]: the • is a dead byte-class alternative, so the
-    * effective pattern is exactly [[wpListRe]] (one shared source of
-    * truth for the PCRE-no-/u bullet class). */
-  private def detectTypeWoo(text: String): String = {
-    val lines = phpTrim(text).split("\n", -1)
-    val listLines = lines.count(l => wpListRe.matcher(phpTrim(l)).find())
-    if (listLines > 0 && listLines >= lines.length / 2.0) "list"
-    else "paragraph"
   }
 
   // ---- Python string semantics (FastAPI variant) ----------------------
@@ -304,18 +306,6 @@ object AdapterChunker {
     count
   }
 
-  /** chunker.py:39-54: single-splitlines-line `< 15`-word heading first,
-    * then `[-*+]` list at ratio ≥ 0.5, else paragraph — no code/quote. */
-  private def detectTypeFastApi(text: String): String = {
-    val lines = pySplitlines(TextUtil.stripPy(text))
-    if (lines.length == 1 && pyCountWords(text) < 15) "heading"
-    else {
-      val listLines = lines.count(l => pyListLineRe.matcher(TextUtil.stripPy(l)).find())
-      if (lines.nonEmpty && listLines.toDouble / lines.length >= 0.5) "list"
-      else "paragraph"
-    }
-  }
-
   /** PHP `strip_tags` (`php_strip_tags_ex`, ext/standard/string.c): `<`
     * begins a tag unless the NEXT char is C-locale whitespace (`1 < 2`
     * stays text, but `I <3 u` swallows from `<3` on, and a trailing `<`
@@ -327,14 +317,12 @@ object AdapterChunker {
     * tag-to-space regex, removed tags CONCATENATE their surrounding
     * text (`<p>a</p><p>b</p>` → `ab`). */
   def phpStripTags(s: String): String = {
-    @inline def cSpace(c: Char) =
-      c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
     val n = s.length
     while (i < n) {
       val c = s.charAt(i)
-      val tagStart = c == '<' && (i + 1 >= n || !cSpace(s.charAt(i + 1)))
+      val tagStart = c == '<' && (i + 1 >= n || !isCSpace(s.charAt(i + 1)))
       if (tagStart) {
         if (s.startsWith("<!--", i)) {
           val e = s.indexOf("-->", i + 4)
@@ -348,7 +336,7 @@ object AdapterChunker {
             val t = s.charAt(j)
             if (quote != 0) { if (t == quote) quote = 0; j += 1 }
             else if (t == '"' || t == '\'') { quote = t; j += 1 }
-            else if (t == '<' && (j + 1 >= n || !cSpace(s.charAt(j + 1)))) {
+            else if (t == '<' && (j + 1 >= n || !isCSpace(s.charAt(j + 1)))) {
               depth += 1; j += 1
             }
             else if (t == '>') { if (depth > 0) { depth -= 1; j += 1 } else done = true }
@@ -369,9 +357,7 @@ object AdapterChunker {
     var t = curlyShortcodeRe.matcher(html).replaceAll("")
     t = phpStripTags(t)
     t = HtmlEntities.decodePhpHtml4(t)
-    t = spaceTabRe.matcher(t).replaceAll(" ")
-    t = manyNewlinesRe.matcher(t).replaceAll("\n\n")
-    phpTrim(t)
+    collapseWs(t, Php.trim)
   }
 
   /** WordPress core's default-registered shortcode tags: the media
@@ -511,9 +497,7 @@ object AdapterChunker {
     var t = stripShortcodesCore(content)
     t = wpStripAllTags(t, removeBreaks = true)
     t = HtmlEntities.decodePhpHtml5(t)
-    t = spaceTabRe.matcher(t).replaceAll(" ")
-    t = manyNewlinesRe.matcher(t).replaceAll("\n\n")
-    phpTrim(t)
+    collapseWs(t, Php.trim)
   }
 
   /** Drupal ChunkerService.php `clean` (:29-41): plain concatenating
@@ -525,9 +509,7 @@ object AdapterChunker {
   def cleanDrupal(content: String): String = {
     var t = phpStripTags(content)
     t = HtmlEntities.decodePhpHtml5(t)
-    t = spaceTabRe.matcher(t).replaceAll(" ")
-    t = manyNewlinesRe.matcher(t).replaceAll("\n\n")
-    phpTrim(t)
+    collapseWs(t, Php.trim)
   }
 
   /** Drupal ChunkerService.php `trimWords` (:120-127): PHP
@@ -595,48 +577,20 @@ object AdapterChunker {
     * `p{product_id}` — pass the product id as `url`). */
   def chunkContent(html: String, url: String,
       variant: Variant = Variant.Express): Vector[AChunk] = {
-    import Variant._
-    val text = variant match {
-      case Express | Ts | FastApi => cleanHtml(html)
-      case Wp => cleanWp(html)
-      case Joomla => cleanJoomla(html)
-      case Woo => cleanWoo(html)
-      case Drupal => cleanDrupal(html)
-    }
+    val h = variant.host
+    val text = variant.clean(html)
     // PHP empty($content): "" AND the falsy string "0" yield no chunks
     // (WP class-chunker.php:95, Woo :83; Drupal's `empty(trim($content))`
     // :58 sees the already-trimmed cleaned text, so it lands here too;
     // Joomla checks trim === '' only)
-    if (text.isEmpty ||
-        ((variant == Wp || variant == Woo || variant == Drupal) && text == "0"))
-      return Vector.empty
-    val trimF: String => String = variant match {
-      case Express | Ts => jsTrim
-      case Wp | Joomla | Woo | Drupal => phpTrim
-      case FastApi => TextUtil.stripPy
-    }
-    val wcF: String => Int = variant match {
-      case Express | Ts => countWords
-      case Wp | Joomla | Woo | Drupal => phpStrWordCount
-      case FastApi => pyCountWords
-    }
+    if (text.isEmpty || (variant.zeroIsEmpty && text == "0")) return Vector.empty
     // PHP array_filter (no callback) also drops a falsy "0" paragraph
-    val keep: String => Boolean = variant match {
-      case Wp | Joomla | Woo | Drupal => p => p.nonEmpty && p != "0"
-      case _ => p => p.nonEmpty
-    }
-    val paragraphs = paraSplitRe.split(text, -1).map(trimF).filter(keep)
+    val paragraphs = paraSplitRe.split(text, -1).map(h.trim)
+      .filter(p => p.nonEmpty && !(h.dropsZero && p == "0"))
     if (paragraphs.isEmpty) return Vector.empty
 
-    val chunkTexts: Vector[String] = variant match {
-      case Joomla => packJoomlaChars(paragraphs)
-      case Drupal => packBySum(paragraphs, TextUtil.cpLength, 500)
-      case Woo => packBySum(paragraphs, wcF, 300)
-      case _ => packBySum(paragraphs, wcF, WordsPerChunk)
-    }
-
-    val idPrefix = if (variant == Woo) "p" + url else TextUtil.md5Hex(url)
-    chunkTexts.zipWithIndex.map { case (t, i) =>
+    val idPrefix = variant.idPrefix(url)
+    variant.pack(paragraphs).zipWithIndex.map { case (t, i) =>
       AChunk(s"${idPrefix}_$i", t, detectType(t, variant), relevance = None)
     }
   }
@@ -685,9 +639,7 @@ object AdapterChunker {
     var t = stripWpNoise(content)
     t = Wpautop(t)
     t = wpStripAllTags(t)
-    t = spaceTabRe.matcher(t).replaceAll(" ")
-    t = manyNewlinesRe.matcher(t).replaceAll("\n\n")
-    phpTrim(t)
+    collapseWs(t, Php.trim)
   }
 
   /** WooCommerce `summarize` (class-chunker.php:58-73): source = the

@@ -83,6 +83,24 @@ object ChunkHtml {
     out.result()
   }
 
+  /** E9: join `texts` with " " until the result exceeds 300 code points,
+    * then keep its first 500 — chunker.py:719-726; None when `texts` is
+    * empty. The joined length is a running sum: the joining space keeps a
+    * lone surrogate at a text's edge from pairing with its neighbour's. */
+  private[extract] def summaryOf(texts: Iterator[String]): Option[String] = {
+    val joined = new java.lang.StringBuilder
+    var cp = 0
+    var n = 0
+    while (texts.hasNext && cp <= 300) {
+      val t = texts.next()
+      if (n > 0) { joined.append(' '); cp += 1 }
+      joined.append(t)
+      cp += TextUtil.cpLength(t)
+      n += 1
+    }
+    if (n == 0) None else Some(cpTake(joined.toString, 500))
+  }
+
   /** Legacy metadata (language/author/published) — `_extract_meta`,
     * chunker.py:583-611. Language: `<html lang>` primary(-region), default "en". */
   private[extract] def legacyMeta(idx: MetaExtract.MetaIndex): (String, JVal, JVal) = {
@@ -113,10 +131,7 @@ object ChunkHtml {
 
     // E10: title resolution — chunker.py:637-644 (h1 overrides <title>)
     var title = if (richMeta.title.truthy) richMeta.title.pyStr else ""
-    if (title.isEmpty) {
-      if (idx.titleEl != null) title = TextUtil.cleanText(idx.titleEl.getText)
-      if (idx.h1El != null) title = TextUtil.cleanText(idx.h1El.getText)
-    }
+    if (title.isEmpty) title = idx.htmlTitle.getOrElse("")
 
     val author = if (richMeta.author.truthy) Some(richMeta.author.pyStr)
       else if (legacyAuthor.truthy) Some(legacyAuthor.pyStr) else None
@@ -213,20 +228,9 @@ object ChunkHtml {
     }
 
     // E9: summary from paragraph chunks — chunker.py:719-726
-    val summaryParts = mutable.ArrayBuffer.empty[String]
-    val it = chunks.iterator
-    var break = false
-    while (it.hasNext && !break) {
-      val c = it.next()
-      if (c.chunkType == "paragraph") {
-        summaryParts += c.text
-        if (TextUtil.cpLength(summaryParts.mkString(" ")) > 300) break = true
-      }
-    }
     val summary =
-      if (summaryParts.nonEmpty) cpTake(summaryParts.mkString(" "), 500)
-      else if (richMeta.description.truthy) richMeta.description.pyStr
-      else title
+      summaryOf(chunks.iterator.filter(_.chunkType == "paragraph").map(_.text))
+        .getOrElse(if (richMeta.description.truthy) richMeta.description.pyStr else title)
 
     Extraction(
       ParsedPage(url, title, author, published,

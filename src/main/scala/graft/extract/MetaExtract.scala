@@ -298,6 +298,11 @@ object MetaExtract {
       byProperty.get(v).flatten.filter(_.nonEmpty).map(JStr.apply).getOrElse(JNull)
     def name(v: String): JVal =
       byName.get(v).flatten.filter(_.nonEmpty).map(JStr.apply).getOrElse(JNull)
+    /** The cleaned text of the first `<h1>`, else of `<title>` —
+      * `_extract_html_meta` and chunk_html's E10 (chunker.py:637-644). A
+      * def, not a field: stripping boilerplate can change an `<h1>`'s text. */
+    def htmlTitle: Option[String] =
+      Option(if (h1El != null) h1El else titleEl).map(e => TextUtil.cleanText(e.getText))
   }
 
   // -------------------------------------------------------------------
@@ -328,10 +333,7 @@ object MetaExtract {
   // M14: HTML fallback — `_extract_html_meta`, chunker.py:475-524
   // -------------------------------------------------------------------
   def extractHtmlMeta(idx: MetaIndex): Meta = {
-    var title: JVal = JNull
-    if (idx.titleEl != null) title = JStr(TextUtil.cleanText(idx.titleEl.getText))
-    if (idx.h1El != null) title = JStr(TextUtil.cleanText(idx.h1El.getText))
-
+    val title = idx.htmlTitle.map(JStr.apply).getOrElse(JNull)
     val description = idx.name("description")
     val author = idx.name("author")
     val published = publishedFrom(idx)
@@ -366,6 +368,17 @@ object MetaExtract {
   def extractMetadata(html: String, doc: HElem): Meta =
     extractMetadata(html, new MetaIndex(doc))
 
+  /** `m` with its blank title, description, author, published and image
+    * taken from `from` where those are set: OpenGraph fills JSON-LD, and
+    * the HTML fallback (whose image is always blank) fills OpenGraph. */
+  private def fillBlanks(m: Meta, from: Meta): Meta = {
+    def or(a: JVal, b: JVal) = if (!a.truthy && b.truthy) b else a
+    m.copy(title = or(m.title, from.title),
+      description = or(m.description, from.description),
+      author = or(m.author, from.author), published = or(m.published, from.published),
+      image = or(m.image, from.image))
+  }
+
   def extractMetadata(html: String, idx: MetaIndex): Meta = {
     extractJsonLd(html) match {
       case Some(ld) =>
@@ -373,29 +386,10 @@ object MetaExtract {
           case t if typeMap.contains(t) => typeMap(t)(ld)
         }.getOrElse(mapDefault(ld))
         // fill blanks from OpenGraph — chunker.py:558-562
-        extractOpenGraph(idx) match {
-          case Some(og) =>
-            var m = meta
-            if (!m.title.truthy && og.title.truthy) m = m.copy(title = og.title)
-            if (!m.description.truthy && og.description.truthy) m = m.copy(description = og.description)
-            if (!m.author.truthy && og.author.truthy) m = m.copy(author = og.author)
-            if (!m.published.truthy && og.published.truthy) m = m.copy(published = og.published)
-            if (!m.image.truthy && og.image.truthy) m = m.copy(image = og.image)
-            m
-          case None => meta
-        }
+        extractOpenGraph(idx).fold(meta)(fillBlanks(meta, _))
       case None =>
-        extractOpenGraph(idx) match {
-          case Some(og) =>
-            val hm = extractHtmlMeta(idx)
-            var m = og
-            if (!m.title.truthy && hm.title.truthy) m = m.copy(title = hm.title)
-            if (!m.description.truthy && hm.description.truthy) m = m.copy(description = hm.description)
-            if (!m.author.truthy && hm.author.truthy) m = m.copy(author = hm.author)
-            if (!m.published.truthy && hm.published.truthy) m = m.copy(published = hm.published)
-            m
-          case None => extractHtmlMeta(idx)
-        }
+        val hm = extractHtmlMeta(idx)
+        extractOpenGraph(idx).fold(hm)(fillBlanks(_, hm))
     }
   }
 }

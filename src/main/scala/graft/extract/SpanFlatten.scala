@@ -28,23 +28,14 @@ object SpanFlatten {
   final case class Flattened(chunks: Vector[ChunkHtml.Chunk], summary: String,
       spansKept: Int, spansDropped: Int)
 
-  private val paraSplit = java.util.regex.Pattern.compile("\\n{2,}")
-
   def flatten(text: String): Flattened = {
     val capped =
       if (text.length <= RawCapUnits) text else text.substring(0, RawCapUnits)
     val cleaned = AdapterChunker.cleanHtml(capped)
-    val segments = paraSplit.split(cleaned, -1)
+    val segments = AdapterChunker.paraSplitRe.split(cleaned, -1)
     val rawSpans = segments.iterator.map(TextUtil.stripPy).filter(_.nonEmpty).toVector
     val chunks = rawSpans.flatMap(s => ChunkHtml.splitLongText(s, "span"))
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = chunks.iterator
-    var break = false
-    while (it.hasNext && !break) {
-      parts += it.next().text
-      if (TextUtil.cpLength(parts.mkString(" ")) > 300) break = true
-    }
-    val summary = if (parts.nonEmpty) ChunkHtml.cpTake(parts.mkString(" "), 500) else ""
+    val summary = ChunkHtml.summaryOf(chunks.iterator.map(_.text)).getOrElse("")
     Flattened(chunks, summary, rawSpans.length, segments.length - rawSpans.length)
   }
 }

@@ -42,6 +42,13 @@ object Functions {
 
   final case class SqlChunk(id: String, text: String, `type`: String)
 
+  /** Sidecar chunks as SQL rows numbered by [[graft.job.ExtractJob.chunkId]]. */
+  private def sqlChunks(url: String,
+      chunks: Vector[graft.extract.ChunkHtml.Chunk]): Vector[SqlChunk] =
+    chunks.zipWithIndex.map { case (c, i) =>
+      SqlChunk(graft.job.ExtractJob.chunkId(url, i), c.text, c.chunkType)
+    }
+
   def registerAll(spark: SparkSession): Unit = {
     // native expression → expression registry (codegen-friendly)
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
@@ -91,19 +98,13 @@ object Functions {
     // §2.11 `of_extract`: the sidecar chunk pipeline from SQL (typed
     // mapPartitions remains the bulk path; this is the ad-hoc surface)
     spark.udf.register("of_extract_chunks",
-      udf((url: String, html: String) =>
-        graft.extract.ChunkHtml(url, html).chunks.zipWithIndex.map { case (c, i) =>
-          SqlChunk(graft.job.ExtractJob.chunkId(url, i), c.text, c.chunkType)
-        }))
+      udf((url: String, html: String) => sqlChunks(url, graft.extract.ChunkHtml(url, html).chunks)))
     // tool-dispatched variant — shares ExtractJob.RawFallbackTools routing
     // (render/pdf -> 50 KB-capped flatten-to-spans, else HTML pipeline);
     // null text yields an empty chunk list rather than a task-killing NPE
     spark.udf.register("of_extract_turn",
       udf((url: String, text: String, tool: String) =>
-        graft.job.ExtractJob.chunksFor(url, text, tool).zipWithIndex.map {
-          case (c, i) =>
-            SqlChunk(graft.job.ExtractJob.chunkId(url, i), c.text, c.chunkType)
-        }))
+        sqlChunks(url, graft.job.ExtractJob.chunksFor(url, text, tool))))
     // gateway helpers (shared constants with graft.query.Gateway)
     spark.udf.register("of_is_llm_bot",
       udf((ua: String) =>

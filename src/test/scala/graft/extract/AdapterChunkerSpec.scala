@@ -142,6 +142,12 @@ class AdapterChunkerSpec extends AnyFunSuite {
         "paragraph", "heading"))
     // the Woo `[-*•]` class is byte-dead for • (and no other port has it)
     assert(all7("• item one\n• item two") == Seq.fill(7)("paragraph"))
+    // str_word_count counts a hyphen that trimming leaves last (and so
+    // drops): 15 PHP words raw, 14 trimmed — heading-first Joomla counts
+    // the raw text, list-first WP and Drupal the trimmed one
+    assert(all7(("w " * 14) + "-\n") ==
+      Seq("paragraph", "heading", "paragraph", "paragraph", "paragraph",
+        "paragraph", "heading"))
   }
 
   test("three-way packing budget divergence: WP words / Joomla joined chars / Drupal summed chars") {
