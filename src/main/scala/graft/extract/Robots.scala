@@ -101,16 +101,7 @@ object Robots {
 
   /** Percent-encode like urllib.parse.quote (safe="/"): UTF-8 bytes,
     * uppercase hex, unreserved `A-Za-z0-9_.-~` and `/` kept. */
-  def quote(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
-    s.getBytes(java.nio.charset.StandardCharsets.UTF_8).foreach { b =>
-      val c = (b & 0xff).toChar
-      val keep = c < 0x80 && ((c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z') ||
-        (c >= '0' && c <= '9') || "_.-~/".indexOf(c) >= 0)
-      if (keep) sb.append(c) else sb.append(f"%%${b & 0xff}%02X")
-    }
-    sb.toString
-  }
+  def quote(s: String): String = TextUtil.percentEncode(s, "_.-~/")
 
   /** can_fetch's url normalization, mirroring urlparse: unquote the whole
     * url, drop `scheme:` (letters/digits/+-. after a leading letter), drop

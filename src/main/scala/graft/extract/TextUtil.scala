@@ -92,6 +92,22 @@ object TextUtil {
     new String(out)
   }
 
+  /** Percent-encodes the UTF-8 bytes of `s` (a lone surrogate encodes as
+    * `?`, so `%3F`), uppercase hex, keeping ASCII letters, digits and the
+    * ASCII `marks`: Python's `urllib.parse.quote` with `marks = "_.-~/"`,
+    * JS `encodeURIComponent` with `marks = "-_.!~*'()"`. */
+  def percentEncode(s: String, marks: String): String = {
+    val sb = new java.lang.StringBuilder(s.length + 8)
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8).foreach { b =>
+      val c = (b & 0xFF).toChar
+      if ((c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z') ||
+          (c >= '0' && c <= '9') || (c < 0x80 && marks.indexOf(c) >= 0)) sb.append(c)
+      else sb.append('%').append(upperHex((b >> 4) & 0xF)).append(upperHex(b & 0xF))
+    }
+    sb.toString
+  }
+  private val upperHex = "0123456789ABCDEF".toCharArray
+
   /** Sentence-boundary splitter of `_split_long_text`:
     * `re.split(r"(?<=[.!?])\s+", text)` — `/root/reference/sidecar/chunker.py:92`.
     *

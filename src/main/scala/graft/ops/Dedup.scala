@@ -72,13 +72,7 @@ object Dedup {
         if (portable) substring(md5(concat_ws(",", parts: _*)), 1, 16)
         else xxhash64(parts: _*).cast("string")
       }
-      val banded = sigs.select(col("doc_id"),
-          explode(array((0 until bands).map(b =>
-            struct(lit(b).as("band"), bandKey(b).as("key"))): _*)).as("bk"))
-        .select(col("doc_id"), col("bk.band"), col("bk.key"))
-      val cand = banded.as("a").join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-            col("a.doc_id") < col("b.doc_id"))
+      val cand = bandJoin(sigs, Nil, (0 until bands).map(bandKey))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .distinct()
       val agree = (0 until k).map(j =>
@@ -92,6 +86,23 @@ object Dedup {
         .filter(col("est_jaccard_x1000") >= minEstJaccardX1000)
     }
     (frame, sigs)
+  }
+
+  /** The LSH band self-join: explode one `(band, key)` struct per band
+    * (`keys(b)` is band b's key), project `doc_id`, the `carried` columns
+    * and the band and key, and join the rows with themselves on equal band
+    * and key with `a.doc_id < b.doc_id`. Callers select from sides `a`
+    * and `b`; a pair agreeing in several bands appears once per band. */
+  private[ops] def bandJoin(rows: DataFrame, carried: Seq[String],
+      keys: Seq[Column]): DataFrame = {
+    val kept = col("doc_id") +: carried.map(col)
+    val bk = explode(array(keys.zipWithIndex.map { case (k, b) =>
+      struct(lit(b).as("band"), k.as("key")) }: _*)).as("bk")
+    val banded = rows.select(kept :+ bk: _*)
+      .select(kept :+ col("bk.band") :+ col("bk.key"): _*)
+    banded.as("a").join(banded.as("b"),
+      col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
+        col("a.doc_id") < col("b.doc_id"))
   }
 
   /** Connected components over a near-dup pair set — the step that turns
@@ -249,13 +260,13 @@ object Dedup {
     // of twice per candidate PAIR (bucket collisions are quadratic in
     // bucket size — the pair side is the expensive place to do per-vector
     // work): one interpreted aggregate per pair instead of three.
-    // IEEE-identical to cosine(a.embedding, b.embedding): same fold
+    // IEEE-identical to recomputing both norms per pair: same fold
     // order, ‖a‖·‖b‖ product order preserved.
     val sigd = VectorOps.lshSignature(emb, dim, nPlanes)
       .select(col("vec_id"), col("embedding"), col("lsh_sig"),
         VectorOps.norm(col("embedding")).as("_n"))
-    val cos = VectorOps.dot(col("a.embedding"), col("b.embedding")) /
-      (col("a._n") * col("b._n"))
+    val cos = VectorOps.cosine(col("a.embedding"), col("a._n"),
+      col("b.embedding"), col("b._n"))
     sigd.as("a").join(sigd.as("b"),
         col("a.lsh_sig") === col("b.lsh_sig") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),

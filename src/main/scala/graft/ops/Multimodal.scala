@@ -47,7 +47,7 @@ object Multimodal {
   def synthImage(id: Long): Array[Byte] = {
     val w = 8 * (1 + (id % 16).toInt)
     val h = 5 * (1 + (id % 16).toInt)
-    encodePng(renderFrame(id, 0, w, h))
+    encode(renderFrame(id, 0, w, h), "png")
   }
 
   /** 16-bit mono PCM WAV @16 kHz, 160·(1+id%20) frames, deterministic sine. */
@@ -74,7 +74,7 @@ object Multimodal {
   def synthVideo(id: Long): Array[Byte] = {
     val n = 1 + (id % 10).toInt
     val bos = new ByteArrayOutputStream()
-    (0 until n).foreach(f => bos.write(encodePng(renderFrame(id, f, 16, 9))))
+    (0 until n).foreach(f => bos.write(encode(renderFrame(id, f, 16, 9), "png")))
     bos.toByteArray
   }
 
@@ -87,7 +87,7 @@ object Multimodal {
     val n = 1 + (id % 10).toInt
     val fps = 12
     val w = 16; val h = 9
-    val frames = (0 until n).map(f => encodeJpeg(renderFrame(id, f, w, h)))
+    val frames = (0 until n).map(f => encode(renderFrame(id, f, w, h), "jpg"))
 
     def u32(v: Long): Array[Byte] =
       Array((v & 0xFF).toByte, ((v >> 8) & 0xFF).toByte,
@@ -123,12 +123,6 @@ object Multimodal {
     bos.toByteArray
   }
 
-  private def encodeJpeg(img: java.awt.image.BufferedImage): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", bos)
-    bos.toByteArray
-  }
-
   private def renderFrame(id: Long, frame: Int, w: Int, h: Int)
       : java.awt.image.BufferedImage = {
     val img = new java.awt.image.BufferedImage(w, h,
@@ -145,11 +139,19 @@ object Multimodal {
     img
   }
 
-  private def encodePng(img: java.awt.image.BufferedImage): Array[Byte] = {
+  /** `img` encoded in an ImageIO format (`"png"`, `"jpg"`). */
+  private def encode(img: java.awt.image.BufferedImage, format: String): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
+    javax.imageio.ImageIO.write(img, format, bos)
     bos.toByteArray
   }
+
+  /** The decoded image, or null where the bytes do not decode: ImageIO
+    * returns null for a format it does not recognize and throws an
+    * `IIOException` for a truncated or corrupt one. */
+  private def readImage(bytes: Array[Byte]): java.awt.image.BufferedImage =
+    try javax.imageio.ImageIO.read(new ByteArrayInputStream(bytes))
+    catch { case _: java.io.IOException => null }
 
   /** Synthetic media column over the documents table (stand-in for a real
     * binary column); kind cycles image/audio/video by doc_id. Video ids
@@ -179,7 +181,7 @@ object Multimodal {
     * ([len][type][data][crc] until IEND) so signature bytes occurring
     * inside compressed IDAT data are never miscounted as frame starts.
     * Stops at the first malformed frame (robust to truncation). */
-  private def countPngFrames(bytes: Array[Byte]): Int = {
+  private[ops] def countPngFrames(bytes: Array[Byte]): Int = {
     def u32(i: Int): Long =
       ((bytes(i) & 0xFFL) << 24) | ((bytes(i + 1) & 0xFFL) << 16) |
         ((bytes(i + 2) & 0xFFL) << 8) | (bytes(i + 3) & 0xFFL)
@@ -215,7 +217,7 @@ object Multimodal {
     * per-pixel path pays a color-model dispatch per call on the decoded
     * image's raster; the bulk path converts a row at a time. Same ARGB
     * conversion, identical bin counts. */
-  private def lumaHistogram(img: java.awt.image.BufferedImage): Array[Float] = {
+  private[ops] def lumaHistogram(img: java.awt.image.BufferedImage): Array[Float] = {
     val feat = new Array[Float](8)
     val w = img.getWidth
     val row = new Array[Int](w)
@@ -236,17 +238,12 @@ object Multimodal {
   }
 
   /** Decode one media row with the JDK codecs (see class doc). Malformed
-    * payloads (ImageIO.read returns NULL for unrecognized/truncated bytes;
-    * AudioSystem throws) degrade to a zeroed row instead of killing the
-    * task — at 10^12 rows, corrupt payloads are a certainty, not an edge. */
+    * payloads (an image or frame that does not decode, audio AudioSystem
+    * rejects, a truncated AVI) degrade to a zeroed row instead of killing
+    * the task — at 10^12 rows, corrupt payloads are a certainty, not an
+    * edge. */
   def decodeOne(r: MediaRow): MediaMeta = r.kind match {
-    case "image" =>
-      val img = javax.imageio.ImageIO.read(new ByteArrayInputStream(r.payload))
-      if (img == null)
-        MediaMeta(r.doc_id, r.kind, r.payload.length, 0, 0, 0, 0, new Array[Float](8))
-      else
-        MediaMeta(r.doc_id, r.kind, r.payload.length, img.getWidth, img.getHeight,
-          0, 0, lumaHistogram(img))
+    case "image" => frameMeta(r, 0)
     case "audio" =>
       try {
         val in = new ByteArrayInputStream(r.payload)
@@ -266,31 +263,36 @@ object Multimodal {
           fmt.getSampleRate.toInt, nFrames, feat)
       } catch {
         case _: javax.sound.sampled.UnsupportedAudioFileException |
-             _: java.io.IOException =>
-          MediaMeta(r.doc_id, r.kind, r.payload.length, 0, 0, 0, 0, new Array[Float](8))
+             _: java.io.IOException => zeroed(r)
       }
     case _ if isRiffAvi(r.payload) => // video: standard AVI/MJPEG container
       decodeAvi(r.payload) match {
         case Some((w, h, fps, nFrames, firstJpeg)) =>
-          val first = javax.imageio.ImageIO.read(new ByteArrayInputStream(firstJpeg))
-          val feat = if (first == null) new Array[Float](8) else lumaHistogram(first)
+          val feat = frameMeta(r.copy(payload = firstJpeg), nFrames).feature
           // sample_rate carries fps for video (frames per second — the
           // temporal sampling rate), mirroring the audio column's meaning
           MediaMeta(r.doc_id, r.kind, r.payload.length, w, h, fps, nFrames, feat)
-        case None =>
-          MediaMeta(r.doc_id, r.kind, r.payload.length, 0, 0, 0, 0, new Array[Float](8))
+        case None => zeroed(r)
       }
-    case _ => // video: MJPNG frame count + first-frame decode
-      val nFrames = countPngFrames(r.payload)
-      val first = javax.imageio.ImageIO.read(new ByteArrayInputStream(r.payload))
-      if (first == null)
-        MediaMeta(r.doc_id, r.kind, r.payload.length, 0, 0, 0, nFrames, new Array[Float](8))
-      else
-        MediaMeta(r.doc_id, r.kind, r.payload.length, first.getWidth,
-          first.getHeight, 0, nFrames, lumaHistogram(first))
+    case _ => frameMeta(r, countPngFrames(r.payload)) // video: MJPNG
   }
 
-  private def isRiffAvi(b: Array[Byte]): Boolean =
+  /** The row a payload that does not decode degrades to: dimensions,
+    * sample rate and feature zero, `nFrames` kept. */
+  private def zeroed(r: MediaRow, nFrames: Int = 0): MediaMeta =
+    MediaMeta(r.doc_id, r.kind, r.payload.length, 0, 0, 0, nFrames, new Array[Float](8))
+
+  /** The row of a payload whose first bytes are one encoded frame (an
+    * image, or an MJPNG's first frame): its dimensions and luma
+    * histogram, or [[zeroed]] with `nFrames` kept when it does not decode. */
+  private def frameMeta(r: MediaRow, nFrames: Int): MediaMeta =
+    readImage(r.payload) match {
+      case null => zeroed(r, nFrames)
+      case img => MediaMeta(r.doc_id, r.kind, r.payload.length, img.getWidth,
+        img.getHeight, 0, nFrames, lumaHistogram(img))
+    }
+
+  private[ops] def isRiffAvi(b: Array[Byte]): Boolean =
     b.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
       b(8) == 'A' && b(9) == 'V' && b(10) == 'I' && b(11) == ' '
 
@@ -299,7 +301,7 @@ object Multimodal {
     * `movi`'s `??dc`/`??db` chunks are the frames (first one returned for
     * JPEG decode). Truncated/malformed containers → None (zeroed row, same
     * degradation contract as the other codecs). */
-  private def decodeAvi(b: Array[Byte])
+  private[ops] def decodeAvi(b: Array[Byte])
       : Option[(Int, Int, Int, Int, Array[Byte])] = {
     def u32(i: Int): Long =
       (b(i) & 0xFFL) | ((b(i + 1) & 0xFFL) << 8) |
@@ -361,7 +363,7 @@ object Multimodal {
   /** Real resize (Graphics2D bilinear) — returns PNG bytes of a w×h
     * thumbnail of an image payload. */
   def thumbnail(payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    val src = javax.imageio.ImageIO.read(new ByteArrayInputStream(payload))
+    val src = readImage(payload)
     val dst = new java.awt.image.BufferedImage(w, h,
       java.awt.image.BufferedImage.TYPE_INT_RGB)
     val g = dst.createGraphics()
@@ -369,7 +371,7 @@ object Multimodal {
       java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
     g.drawImage(src, 0, 0, w, h, null)
     g.dispose()
-    encodePng(dst)
+    encode(dst, "png")
   }
 
   /** Frame-sampling: explode video rows into every-nth-frame index rows

@@ -259,19 +259,10 @@ object TextOps {
   /** SimHash near-dup candidates: pairs within `maxHamming` bits, using
     * 4×16-bit band blocking (exact for maxHamming ≤ 3 by pigeonhole). */
   def simHashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val sh = simHash(docs)
-    val banded = sh.select(col("doc_id"), col("simhash"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"),
-          shiftright(col("simhash"), b * 16).bitwiseAND(0xFFFFL).as("key"))): _*)).as("bk"))
-      .select(col("doc_id"), col("simhash"), col("bk.band"), col("bk.key"))
-    val ham = {
-      val x = col("a.simhash").bitwiseXOR(col("b.simhash"))
-      bit_count(x)
-    }
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
+    val keys = (0 until 4).map(b =>
+      shiftright(col("simhash"), b * 16).bitwiseAND(0xFFFFL))
+    val ham = bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
+    Dedup.bandJoin(simHash(docs), Seq("simhash"), keys)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         ham.as("hamming"))
       .filter(col("hamming") <= maxHamming)

@@ -25,7 +25,10 @@ object VectorOps {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  /** dot(a, b) / (‖a‖·‖b‖) with both norms supplied by the caller: the
+    * one cosine body (see the building blocks below). */
+  private[ops] def cosine(a: Column, aNorm: Column, b: Column, bNorm: Column): Column =
+    dot(a, b) / (aNorm * bNorm)
 
   // --------------------------------------------------------------------
   // Redundancy-free cosine building blocks. Spark's higher-order array
@@ -39,24 +42,28 @@ object VectorOps {
   //    once per row/vector, not once per centroid or per candidate pair;
   //  - ‖c‖ of a constant (query vector, centroid, LSH plane) is a
   //    driver-side double, not a per-row aggregate.
-  // Both substitutions are IEEE-identical to cosine(a, c): same fold
-  // order from 0.0, same float→double widening, same ‖a‖·‖c‖ product
-  // order, correctly-rounded sqrt on both sides.
+  // Both substitutions are IEEE-identical to dot(a, c) / (norm(a) *
+  // norm(c)): same fold order from 0.0, same float→double widening, same
+  // ‖a‖·‖c‖ product order, correctly-rounded sqrt on both sides.
   // --------------------------------------------------------------------
 
-  /** Driver-side ‖q‖ with the same IEEE sequence as [[norm]] over the
-    * equivalent literal array (float→double per element, sequential sum
-    * from 0.0, correctly-rounded sqrt). */
-  def normLocal(q: Array[Double]): Double = {
+  /** Driver-side [[dot]] with the same IEEE sequence (sequential sum from
+    * 0.0 in index order, over `a.length` elements): the one local
+    * accumulation loop of the vector operators. */
+  def dotLocal(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
-    while (i < q.length) { s += q(i) * q(i); i += 1 }
-    math.sqrt(s)
+    while (i < a.length) { s += a(i) * b(i); i += 1 }
+    s
   }
 
-  /** cosine(a, c) for a constant vector c, with ‖a‖ supplied by the
+  /** Driver-side ‖q‖ with the same IEEE sequence as [[norm]] over the
+    * equivalent literal array (correctly-rounded sqrt of [[dotLocal]]). */
+  def normLocal(q: Array[Double]): Double = math.sqrt(dotLocal(q, q))
+
+  /** [[cosine]] against a constant vector c, with ‖a‖ supplied by the
     * caller (compute it once per row) and ‖c‖ folded to a literal. */
   private def cosineLit(a: Column, aNorm: Column, c: Array[Float]): Column =
-    dot(a, typedlit(c)) / (aNorm * lit(normLocal(c.map(_.toDouble))))
+    cosine(a, aNorm, typedlit(c), lit(normLocal(c.map(_.toDouble))))
 
   /** Exact brute-force cosine top-k against one query vector (broadcast as
     * a literal array — no shuffle, one scan, TakeOrderedAndProject). */
@@ -161,11 +168,15 @@ object VectorOps {
     ((h & 0xFFFFL).toDouble / 65535.0) - 0.5
   }
 
+  /** Hyperplane `p` in `dim` dimensions: the LSH planes and, from
+    * `p = 1000`, the deterministic IVF centroids. */
+  def plane(p: Int, dim: Int): Array[Double] = Array.tabulate(dim)(planeComponent(p, _))
+
   /** nPlanes-bit LSH signature per vector (sign of dot with each plane). */
   def lshSignature(emb: DataFrame, dim: Int, nPlanes: Int = 16): DataFrame = {
     val sig = (0 until nPlanes).map { p =>
-      val plane = typedlit((0 until dim).map(d => planeComponent(p, d)).toArray)
-      when(dot(col("embedding"), plane) >= 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
+      when(dot(col("embedding"), typedlit(plane(p, dim))) >= 0, shiftleft(lit(1L), p))
+        .otherwise(lit(0L))
     }.reduce(_.bitwiseOR(_))
     emb.withColumn("lsh_sig", sig)
   }
@@ -179,15 +190,21 @@ object VectorOps {
   def lshTopK(emb: DataFrame, dim: Int, query: Array[Float], k: Int,
       nPlanes: Int = 8, probeBits: Int = 3,
       excludeId: Option[Long] = None): DataFrame = {
-    val qSig = (0 until nPlanes).map { p =>
-      val d = (0 until dim).map(i => planeComponent(p, i) * query(i)).sum
-      if (d >= 0) 1L << p else 0L
-    }.reduce(_ | _)
-    val probes = (0L until (1L << nPlanes))
-      .filter(sig => java.lang.Long.bitCount(sig ^ qSig) <= probeBits)
     val sigd = lshSignature(emb, dim, nPlanes)
-      .filter(col("lsh_sig").isin(probes: _*))
+      .filter(col("lsh_sig").isin(lshProbes(dim, query, nPlanes, probeBits): _*))
     cosineTopK(sigd, query, k, excludeId)
+  }
+
+  /** The signatures [[lshTopK]] probes: every bucket within `probeBits`
+    * Hamming distance of the query's own [[lshSignature]]. */
+  private[ops] def lshProbes(dim: Int, query: Array[Float], nPlanes: Int,
+      probeBits: Int): Seq[Long] = {
+    val q = query.map(_.toDouble)
+    val qSig = (0 until nPlanes).map { p =>
+      if (dotLocal(plane(p, dim), q) >= 0) 1L << p else 0L
+    }.reduce(_ | _)
+    (0L until (1L << nPlanes))
+      .filter(sig => java.lang.Long.bitCount(sig ^ qSig) <= probeBits)
   }
 
   /** IVF-style coarse quantization: assign each vector to the nearest of
@@ -198,7 +215,7 @@ object VectorOps {
     // ‖embedding‖ is centroid-independent: compute it once per row in a
     // projection instead of once per centroid (k× fewer aggregate chains),
     // and fold each constant ‖c‖ to a driver-computed literal — both
-    // IEEE-identical to the per-cell cosine(embedding, c) they replace.
+    // IEEE-identical to recomputing norm(embedding) and norm(c) per cell.
     val scores = centroids.zipWithIndex.map { case (c, i) =>
       struct(cosineLit(col("embedding"), col("_ne"), c).as("s"), lit(i).as("cell"))
     }
@@ -209,8 +226,7 @@ object VectorOps {
 
   /** Deterministic unit-ish centroids from the hyperplane generator. */
   def deterministicCentroids(nCells: Int, dim: Int): Array[Array[Float]] =
-    Array.tabulate(nCells)(c =>
-      Array.tabulate(dim)(d => planeComponent(c + 1000, d).toFloat))
+    Array.tabulate(nCells)(c => plane(c + 1000, dim).map(_.toFloat))
 
   /** One Lloyd (spherical k-means) refinement pass: assign every vector to
     * its nearest centroid by cosine, recompute each cell's mean, and
@@ -232,7 +248,7 @@ object VectorOps {
       val cell = r.getInt(0)
       val n = r.getLong(dim + 1).toDouble
       val mean = Array.tabulate(dim)(i => r.getDouble(i + 1) / n)
-      val norm = math.sqrt(mean.map(v => v * v).sum)
+      val norm = normLocal(mean)
       if (norm > 0) out(cell) = mean.map(v => (v / norm).toFloat)
     }
     out
@@ -249,21 +265,20 @@ object VectorOps {
       excludeId: Option[Long] = None, lloydIters: Int = 0): DataFrame = {
     val centroids = (0 until lloydIters).foldLeft(
       deterministicCentroids(nCells, dim))((c, _) => lloydRefine(emb, c))
-    // double-precision accumulation, matching the SQL/expression cosine
-    // bit-for-bit so probe-cell selection agrees with the oracle
-    def cosLocal(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val probeCells = centroids.zipWithIndex
-      .sortBy { case (c, _) => -cosLocal(c, query) }
-      .take(nProbe).map(_._2)
     val assigned = ivfAssign(emb, centroids)
-      .filter(col("cell").isin(probeCells.toSeq: _*))
+      .filter(col("cell").isin(probeCells(centroids, query, nProbe).toSeq: _*))
     cosineTopK(assigned, query, k, excludeId)
+  }
+
+  /** The `nProbe` cells [[ivfTopK]] probes, most similar first: driver-side
+    * cosine on [[dotLocal]], bit-for-bit the expression cosine, so the
+    * probe-cell selection agrees with the oracle. */
+  private[ops] def probeCells(centroids: Array[Array[Float]], query: Array[Float],
+      nProbe: Int): Array[Int] = {
+    val q = query.map(_.toDouble)
+    val nq = normLocal(q)
+    centroids.map(_.map(_.toDouble)).zipWithIndex
+      .sortBy { case (c, _) => -(dotLocal(c, q) / (normLocal(c) * nq)) }
+      .take(nProbe).map(_._2)
   }
 }

@@ -118,16 +118,8 @@ object Gateway {
     * `encodeURIComponent` (UTF-8 bytes percent-encoded, uppercase hex,
     * unreserved set kept). Powers the `of_encode_uri` SQL function and the
     * parity test against the column form. */
-  def encodeUriComponentLocal(s: String): String = {
-    val keep = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789-_.!~*'()"
-    val sb = new StringBuilder(s.length + 8)
-    s.getBytes("UTF-8").foreach { b =>
-      val c = (b & 0xff).toChar
-      if (c < 0x80 && keep.indexOf(c) >= 0) sb.append(c)
-      else sb.append(f"%%${b & 0xff}%02X")
-    }
-    sb.toString
-  }
+  def encodeUriComponentLocal(s: String): String =
+    graft.extract.TextUtil.percentEncode(s, "-_.!~*'()")
 
   /** Mode-1 Round-1 (cold start) question synthesis —
     * `buildQuestions` (gateway.js:77-205): per detected context type, the

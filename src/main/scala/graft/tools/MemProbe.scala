@@ -1,33 +1,12 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicInteger
+import ThreadScaling.{stage, texts}
 
 /** Dev-only: host memory-bandwidth ceiling check. Scales a read-only char
   * scan and an allocation-only workload 8->32 threads to separate "our
   * code doesn't scale" from "the machine is bandwidth-bound". */
 object MemProbe {
   def main(args: Array[String]): Unit = {
-    val n = 400000
-    val texts = (0 until n).map(i => graft.job.Transcripts.mkTurn(i / 8, i % 8, "c").text).toArray
-    @volatile var sink = 0L
-    def run(threads: Int, f: Int => Long): Double = {
-      val idx = new AtomicInteger(0)
-      val t0 = System.nanoTime()
-      val ts = (0 until threads).map(_ => new Thread(() => {
-        var acc = 0L
-        var i = idx.getAndIncrement()
-        while (i < n) { acc += f(i); i = idx.getAndIncrement() }
-        sink += acc
-      }))
-      ts.foreach(_.start()); ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
-    }
-    def stage(label: String, f: Int => Long): Unit = {
-      run(8, f)
-      val t8 = Seq(run(8, f), run(8, f)).min
-      val t32 = Seq(run(32, f), run(32, f)).min
-      println(f"$label: t8=$t8%.3f t32=$t32%.3f eff=${(t8 / t32) / 4.0}%.2f")
-    }
     // read-only: sum every char (touches each byte once, zero allocation)
     stage("read-only-scan", { i =>
       val s = texts(i); var j = 0; var a = 0L

@@ -1,33 +1,16 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicInteger
+import ThreadScaling.{stage, texts}
 
 /** Dev-only: which extraction stage limits thread scaling? */
 object ParseProbe {
   def main(args: Array[String]): Unit = {
-    val n = 400000
-    val texts = (0 until n).map(i => graft.job.Transcripts.mkTurn(i / 8, i % 8, "c").text).toArray
-    def run(threads: Int, f: Int => Unit): Double = {
-      val idx = new AtomicInteger(0)
-      val t0 = System.nanoTime()
-      val ts = (0 until threads).map(_ => new Thread(() => {
-        var i = idx.getAndIncrement()
-        while (i < n) { f(i); i = idx.getAndIncrement() }
-      }))
-      ts.foreach(_.start()); ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
-    }
-    def stage(label: String, f: Int => Unit): Unit = {
-      run(8, f)
-      val t8 = Seq(run(8, f), run(8, f)).min
-      val t32 = Seq(run(32, f), run(32, f)).min
-      println(f"$label: t8=$t8%.2f t32=$t32%.2f eff=${(t8 / t32) / 4.0}%.2f")
-    }
-    stage("parse-only", i => graft.extract.HtmlDom.parse(texts(i)))
+    stage("parse-only", { i => graft.extract.HtmlDom.parse(texts(i)); 0L })
     stage("parse+meta", { i =>
       val doc = graft.extract.HtmlDom.parse(texts(i))
       graft.extract.MetaExtract.extractMetadata(texts(i), doc)
+      0L
     })
-    stage("full", i => graft.extract.ChunkHtml.extract(s"u#$i", texts(i), Some("x")))
+    stage("full", { i => graft.extract.ChunkHtml.extract(s"u#$i", texts(i), Some("x")); 0L })
   }
 }

@@ -3,6 +3,7 @@ package graft.extract
 import java.util.regex.Pattern
 import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
+import graft.JUnitSafe.same
 import AdapterChunker.{AChunk, Variant, WordsPerChunk, countWords, jsTrim, packBySum, phpStrWordCount,
   phpStripTags, pyCountWords, pySplitlines, stripShortcodesCore, stripWpNoise,
   wpStripAllTags}
@@ -15,16 +16,6 @@ import TextUtil.phpTrim
   * the variant, and cleans that each typed their own whitespace tail. The
   * [[Legacy]] bodies below are verbatim copies of the replaced code. */
 class AdapterChunkerEquivSpec extends AnyFunSuite {
-
-  /** Fails with both sides and the input escaped for the JUnit XML
-    * report: controls and non-ASCII (lone surrogates included) as hex
-    * escapes, each cut to its first 200 units. */
-  private def same[A](got: A, want: A, input: Any): Unit = {
-    def show(x: Any) = x.toString.take(200).flatMap { c =>
-      if (c >= ' ' && c < '\u007F') c.toString else f"\\u${c.toInt}%04x"
-    }
-    if (got != want) fail(s"${show(got)} != ${show(want)} on ${show(input)}")
-  }
 
   private val all7 = Seq(Variant.Express, Variant.Wp, Variant.FastApi, Variant.Ts,
     Variant.Joomla, Variant.Woo, Variant.Drupal)

@@ -1,6 +1,7 @@
 package graft.extract
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.JUnitSafe.{check, same}
 import AdapterChunker._
 import TextUtil.{md5Hex, stripPy}
 
@@ -434,7 +435,7 @@ class AdapterChunkerSpec extends AnyFunSuite {
       val s = (0 until rnd.nextInt(40)).map(_ =>
         alphabet(rnd.nextInt(alphabet.length))).mkString
       for (v <- Seq(Express, Wp, FastApi, Ts, Joomla, Woo, Drupal)) {
-        assert(validTypes.contains(detectType(s, v)), s"type for ${s.take(20)}")
+        check(validTypes.contains(detectType(s, v)), s"$v type", s)
         val chunks = chunkContent(s, "http://fuzz", v)
         val prefix = if (v == Woo) "phttp://fuzz" else md5Hex("http://fuzz")
         chunks.zipWithIndex.foreach { case (c, i) =>
@@ -566,8 +567,8 @@ class AdapterChunkerSpec extends AnyFunSuite {
         val allEmptyText = expected.isEmpty ||
           (phpFamily(v) && expected.mkString("\n\n") == "0")
         // 1. lossless: chunk paragraphs re-concatenate to the kept inputs
-        if (allEmptyText) assert(chunks.isEmpty, s"$v empty-text")
-        else assert(chunks.flatMap(paragraphsOf).toList == expected, s"$v lossless")
+        if (allEmptyText) check(chunks.isEmpty, s"$v empty-text", joined)
+        else same(chunks.flatMap(paragraphsOf).toList, expected, s"$v lossless: $joined")
         // 2. no empty chunks, ids sequential with the variant's prefix
         assert(chunks.forall(_.text.nonEmpty), s"$v nonempty")
         val prefix = if (v == Woo) "pu" else md5Hex("u")
@@ -586,8 +587,8 @@ class AdapterChunkerSpec extends AnyFunSuite {
         chunks.foreach { c =>
           val cps = paragraphsOf(c)
           if (cps.length >= 2) {
-            if (v == Joomla) assert(cp(c.text) <= 500, s"$v joined budget")
-            else assert(cps.map(metric).sum <= budget, s"$v summed budget")
+            if (v == Joomla) check(cp(c.text) <= 500, s"$v joined budget", c.text)
+            else check(cps.map(metric).sum <= budget, s"$v summed budget", c.text)
           }
         }
         // 5. greedy: the first paragraph of the NEXT chunk would not

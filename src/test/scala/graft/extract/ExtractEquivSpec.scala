@@ -2,6 +2,7 @@ package graft.extract
 
 import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
+import graft.JUnitSafe.same
 import MetaExtract.{Meta, MetaIndex, extractJsonLd, extractOpenGraph, mapArticle,
   mapDefault, mapEvent, mapProduct, mapRecipe, publishedFrom}
 import SpanFlatten.{Flattened, RawCapUnits}
@@ -120,16 +121,6 @@ class ExtractEquivSpec extends AnyFunSuite {
       }
       title
     }
-  }
-
-  /** Fails with both sides and the input escaped for the JUnit XML
-    * report: controls and non-ASCII (lone surrogates included) as hex
-    * escapes, each cut to its first 200 units. */
-  private def same[A](got: A, want: A, input: Any): Unit = {
-    def show(x: Any) = x.toString.take(200).flatMap { c =>
-      if (c >= ' ' && c < '\u007F') c.toString else f"\\u${c.toInt}%04x"
-    }
-    if (got != want) fail(s"${show(got)} != ${show(want)} on ${show(input)}")
   }
 
   private def pick[A](r: Random, xs: A*): A = xs(r.nextInt(xs.length))

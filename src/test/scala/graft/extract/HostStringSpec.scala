@@ -1,6 +1,7 @@
 package graft.extract
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.JUnitSafe.same
 import AdapterChunker.Variant
 
 /** The host-language string rules the adapter ports share: whitespace sets
@@ -111,6 +112,53 @@ class HostStringSpec extends AnyFunSuite {
     }
     // surrogate pairs make code-point and UTF-16 lengths pack differently
     assert(charLenDiffers > 0)
+  }
+
+  /** `Robots.quote` before it called [[TextUtil.percentEncode]]. */
+  private def oldQuote(s: String): String = {
+    val sb = new StringBuilder(s.length + 8)
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8).foreach { b =>
+      val c = (b & 0xff).toChar
+      val keep = c < 0x80 && ((c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z') ||
+        (c >= '0' && c <= '9') || "_.-~/".indexOf(c) >= 0)
+      if (keep) sb.append(c) else sb.append(f"%%${b & 0xff}%02X")
+    }
+    sb.toString
+  }
+
+  /** `Gateway.encodeUriComponentLocal` before it called
+    * [[TextUtil.percentEncode]]. */
+  private def oldEncodeUriComponent(s: String): String = {
+    val keep = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789-_.!~*'()"
+    val sb = new StringBuilder(s.length + 8)
+    s.getBytes("UTF-8").foreach { b =>
+      val c = (b & 0xff).toChar
+      if (c < 0x80 && keep.indexOf(c) >= 0) sb.append(c)
+      else sb.append(f"%%${b & 0xff}%02X")
+    }
+    sb.toString
+  }
+
+  test("percentEncode: quote and encodeURIComponent equal their old loops") {
+    val quote = Robots.quote _
+    val uri = graft.query.Gateway.encodeUriComponentLocal _
+    allUnits.foreach { c =>
+      same(quote(c.toString), oldQuote(c.toString), c.toInt)
+      same(uri(c.toString), oldEncodeUriComponent(c.toString), c.toInt)
+    }
+    val rnd = new scala.util.Random(20261019L)
+    val pieces = Vector("a", "Z", "0", "/", "_.-~", "!*'()", " ", "%", "+", "?&=#",
+      "\u0000", "\u007F", "\u0080", "é", "\u07FF", "\u0800", "€", "\uFFFF",
+      "😀", "𐐷", "\uD800", "\uDBFF", "\uDC00", "\uDFFF", "\uDC00\uD800")
+    var lone = 0
+    for (_ <- 0 until 3000) {
+      val s = Vector.fill(rnd.nextInt(24))(pieces(rnd.nextInt(pieces.size))).mkString
+      if (s.codePoints().anyMatch(cp => cp >= 0xD800 && cp <= 0xDFFF)) lone += 1
+      same(quote(s), oldQuote(s), s)
+      same(uri(s), oldEncodeUriComponent(s), s)
+    }
+    // the corpus holds strings whose lone surrogates encode as `?`
+    assert(lone > 0)
   }
 
   test("hex digests and sidecar ids match MessageDigest") {

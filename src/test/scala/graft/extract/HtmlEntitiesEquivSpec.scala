@@ -1,6 +1,7 @@
 package graft.extract
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.JUnitSafe.same
 
 /** Equivalence of the derived HTML 4.01 table and the one-mode decoder
   * against the forms they replaced: a literal 4.01 value map and a
@@ -228,11 +229,11 @@ class HtmlEntitiesEquivSpec extends AnyFunSuite {
     var decodedSome = 0
     strings.foreach { s =>
       val lenient = legacyDecodeWith(s, named, numericSemicolonOptional = true)
-      assert(HtmlEntities.decode(s) == lenient, s"decode: $s")
-      assert(HtmlEntities.decodePhpHtml4(s) == legacyDecodeWith(s, html4,
+      same(HtmlEntities.decode(s), lenient, s"decode: $s")
+      same(HtmlEntities.decodePhpHtml4(s), legacyDecodeWith(s, html4,
         numericSemicolonOptional = false, phpNumericRules = true,
         phpDoctype = PhpHtml401), s"decodePhpHtml4: $s")
-      assert(HtmlEntities.decodePhpHtml5(s) == legacyDecodeWith(s, named,
+      same(HtmlEntities.decodePhpHtml5(s), legacyDecodeWith(s, named,
         numericSemicolonOptional = false, phpNumericRules = true,
         phpDoctype = PhpHtml5), s"decodePhpHtml5: $s")
       if (lenient != s) decodedSome += 1

@@ -1,6 +1,7 @@
 package graft.extract
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.JUnitSafe.{check, same}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -56,12 +57,12 @@ class PropertySpec extends AnyFunSuite {
       Gen.oneOf(wsChars))
     val text = Gen.choose(0, 30).flatMap(n => Gen.listOfN(n, tokens)).map(_.mkString)
     forAll(text, 500) { t =>
-      assert(TextUtil.splitSentences(t).toSeq == rx.split(t, -1).toSeq, s"input=${t.map(c => f"\\u${c.toInt}%04x").mkString}")
+      same(TextUtil.splitSentences(t).toSeq, rx.split(t, -1).toSeq, t)
     }
     // edge cases the generator may miss
     Seq("", ".", ". ", " .", "a. b! c? d", "a.  \n b", "a .b", "!!", "! ! !",
       "a. b", "x?y", "tail. ").foreach { t =>
-      assert(TextUtil.splitSentences(t).toSeq == rx.split(t, -1).toSeq, s"input=<$t>")
+      same(TextUtil.splitSentences(t).toSeq, rx.split(t, -1).toSeq, t)
     }
   }
 
@@ -238,10 +239,11 @@ class PropertySpec extends AnyFunSuite {
         .map(_.mkString), 150) { s =>
       val enc = graft.query.Gateway.encodeUriComponentLocal(s)
       // the encoding is fully reversible (lossless percent-encoding)
-      assert(Robots.unquote(enc) == s, s"round-trip failed for '$s'")
+      same(Robots.unquote(enc), s, s"round trip of $s")
       // output alphabet is URL-safe: every byte unreserved or %XX
-      assert(enc.forall(c =>
-        c == '%' || c.isLetterOrDigit && c < 128 || "-_.!~*'()".contains(c)))
+      check(enc.forall(c =>
+        c == '%' || c.isLetterOrDigit && c < 128 || "-_.!~*'()".contains(c)),
+        "URL-unsafe output", enc)
     }
   }
 }

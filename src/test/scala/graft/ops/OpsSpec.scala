@@ -399,6 +399,24 @@ class OpsSpec extends AnyFunSuite {
     val trunc = java.util.Arrays.copyOfRange(avi, 0, 40)
     val mt = Multimodal.decodeOne(Multimodal.MediaRow(11L, "video", trunc))
     assert(mt.n_frames == 0 && mt.width == 0 && mt.sample_rate == 0)
+    def zeroed(m: Multimodal.MediaMeta, nBytes: Int, nFrames: Int): Unit = {
+      assert(m.n_bytes == nBytes && m.n_frames == nFrames)
+      assert(m.width == 0 && m.height == 0 && m.sample_rate == 0)
+      assert(m.feature.toSeq == Seq.fill(8)(0f))
+    }
+    // a truncated PNG (ImageIO throws on it) and garbage bytes as image
+    // or audio degrade to the zeroed row
+    val png = Multimodal.synthImage(15L).take(60)
+    zeroed(Multimodal.decodeOne(Multimodal.MediaRow(15L, "image", png)), 60, 0)
+    val junk = Array.tabulate[Byte](64)(i => (i * 37 + 11).toByte)
+    zeroed(Multimodal.decodeOne(Multimodal.MediaRow(1L, "image", junk)), 64, 0)
+    zeroed(Multimodal.decodeOne(Multimodal.MediaRow(1L, "audio", junk)), 64, 0)
+    // an MJPNG whose first frame is corrupt still counts its 9 frames
+    val mjpng = Multimodal.synthVideo(8L)
+    val idat = mjpng.indices.find(i => new String(mjpng, i, 4, "US-ASCII") == "IDAT").get
+    val bad = mjpng.clone()
+    (idat + 4 until idat + 12).foreach(bad(_) = 0xFF.toByte)
+    zeroed(Multimodal.decodeOne(Multimodal.MediaRow(8L, "video", bad)), bad.length, 9)
   }
 
   test("langId picks the max-hit language deterministically") {
