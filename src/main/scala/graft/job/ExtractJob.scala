@@ -2,6 +2,8 @@ package graft.job
 
 import java.time.format.DateTimeFormatter
 import java.time.ZoneOffset
+import java.util.concurrent.{ExecutionException, Executors, Future}
+import scala.util.Try
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,7 +19,8 @@ import graft.model._
   * rows (the reference measures ~18× HTML→JSON shrinkage, README.md:93-97,
   * so windowing after extraction shuffles an order of magnitude less data
   * than windowing the raw input) → dynamic-partition-overwrite write keyed
-  * by `conv_bucket`, with a lineage row per completed bucket.
+  * by `conv_bucket`, with a lineage row per completed bucket. At most two
+  * groups are in flight; lineage is committed in group order.
   *
   * Catalyst-only: typed mapPartitions on Datasets (MapPartitionsExec), no
   * RDD API anywhere.
@@ -27,8 +30,8 @@ object ExtractJob {
   final case class Config(
       outDir: String,
       buckets: Int = 64,
-      /** checkpoint granularity: buckets are processed in this many
-        * sequential groups; each group commits output + lineage. */
+      /** checkpoint granularity: at most two of these groups in flight;
+        * each commits output, then lineage, in group order. */
       groups: Int = 4,
       runId: String = "run")
 
@@ -217,79 +220,99 @@ object ExtractJob {
   def bucketOf(buckets: Int): org.apache.spark.sql.Column =
     pmod(hash(col("conv_id")), lit(buckets))
 
-  /** Full run with per-group checkpoint commits. Returns (rows written). */
+  /** Full run with per-group checkpoint commits. Returns (rows written).
+    * Group g+1 extracts and writes while group g finishes: their dynamic
+    * overwrites stage apart, on disjoint partitions, but lineage appends
+    * share `lineage/_temporary`, so they stay on the calling thread. */
   def run(turns: Dataset[Turn], cfg: Config,
       stopAfterGroups: Int = Int.MaxValue): Long = {
     val spark = turns.sparkSession
     import spark.implicits._
 
     val doneBuckets: Set[Int] = completedBuckets(spark, cfg.outDir)
+    val todo = (0 until math.min(cfg.groups, stopAfterGroups)).map { g =>
+      g -> (g * cfg.buckets / cfg.groups until (g + 1) * cfg.buckets / cfg.groups)
+        .filterNot(doneBuckets.contains)
+    }.filter(_._2.nonEmpty)
 
-    var written = 0L
-    val groupsToRun = math.min(cfg.groups, stopAfterGroups)
-    for (g <- 0 until groupsToRun) {
-      val lo = g * cfg.buckets / cfg.groups
-      val hi = (g + 1) * cfg.buckets / cfg.groups // exclusive
-      val groupBuckets = (lo until hi).filterNot(doneBuckets.contains)
-      if (groupBuckets.nonEmpty) {
-        // bucket is derivable from conv_id alone, so the resume/group
-        // predicate applies BEFORE extraction: completed buckets are never
-        // re-extracted (the whole point of per-partition lineage)
-        val slice = turns.filter(bucketOf(cfg.buckets).isin(groupBuckets: _*))
-          .as[Turn]
-        val part = withTurnPos(extract(slice))
-          .withColumn("conv_bucket", bucketOf(cfg.buckets))
-          .cache()
-        try {
-          // pages table (turn envelope, nested chunks)
-          part.write.mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("conv_bucket")
-            .parquet(s"${cfg.outDir}/pages")
-          // chunks table (exploded, flat — the reference's chunk store)
-          part.select($"conv_id", $"turn_idx", $"turn_pos", $"url", $"page_id",
-              $"title", $"ts", $"conv_bucket", explode($"chunks").as("c"))
-            .select($"conv_id", $"turn_idx", $"turn_pos", $"url", $"page_id",
-              $"title", $"ts", $"c.id".as("chunk_id"),
-              $"c.chunk_index", $"c.text", $"c.chunk_type", $"conv_bucket")
-            .write.mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("conv_bucket")
-            .parquet(s"${cfg.outDir}/chunks")
-          // metrics side table (exact, aggregated from output columns)
-          val metrics = part.groupBy($"conv_bucket").agg(
-              count(lit(1)).as("rows"), sum($"bytes_in").as("bytes_in"),
-              sum($"bytes_out").as("bytes_out"), sum($"n_chunks").as("chunks_emitted"),
-              sum($"blocks_kept").as("blocks_kept"), sum($"blocks_dropped").as("blocks_dropped"))
-            .collect()
-          val metricRows = metrics.map { r =>
-            // rows_in == rows_out by construction: extraction is strictly
-            // one ExtractedTurn per Turn (both kept so a future filtering
-            // stage can diverge them)
-            MetricRow(cfg.runId, g, r.getInt(0), r.getLong(1), r.getLong(1),
-              r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))
-          }.toSeq
-          // dynamic overwrite keyed by (run_id, group_id): a crash between
-          // the metrics write and the lineage write re-runs the group, and
-          // the re-run REPLACES this group's metrics instead of appending
-          // duplicates — metrics stay exact under resume
-          spark.createDataset(metricRows).write.mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_id", "group_id")
-            .parquet(s"${cfg.outDir}/metrics")
-          // lineage LAST: a bucket is only "done" once its data + metrics
-          // are durable (idempotent resume)
-          val lineageRows = metricRows.map(m =>
-            LineageRow(cfg.runId, g, m.conv_bucket, "done", m.rows_out)) ++
-            groupBuckets.filterNot(b => metricRows.exists(_.conv_bucket == b))
-              .map(b => LineageRow(cfg.runId, g, b, "done", 0L)) // empty buckets
-          spark.createDataset(lineageRows).write.mode(SaveMode.Append)
-            .parquet(s"${cfg.outDir}/lineage")
-          written += metricRows.map(_.rows_out).sum
-        } finally part.unpersist()
-      }
+    /** One group's pages, chunks and metrics; returns its metric rows. */
+    def writeGroup(g: Int, groupBuckets: Seq[Int]): Seq[MetricRow] = {
+      // bucket is derivable from conv_id alone, so the resume/group
+      // predicate applies BEFORE extraction: completed buckets are never
+      // re-extracted (the whole point of per-partition lineage)
+      val slice = turns.filter(bucketOf(cfg.buckets).isin(groupBuckets: _*))
+        .as[Turn]
+      val part = withTurnPos(extract(slice))
+        .withColumn("conv_bucket", bucketOf(cfg.buckets))
+        .cache()
+      try {
+        // pages table (turn envelope, nested chunks)
+        part.write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("conv_bucket")
+          .parquet(s"${cfg.outDir}/pages")
+        // chunks table (exploded, flat — the reference's chunk store)
+        part.select($"conv_id", $"turn_idx", $"turn_pos", $"url", $"page_id",
+            $"title", $"ts", $"conv_bucket", explode($"chunks").as("c"))
+          .select($"conv_id", $"turn_idx", $"turn_pos", $"url", $"page_id",
+            $"title", $"ts", $"c.id".as("chunk_id"),
+            $"c.chunk_index", $"c.text", $"c.chunk_type", $"conv_bucket")
+          .write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("conv_bucket")
+          .parquet(s"${cfg.outDir}/chunks")
+        // metrics side table (exact, aggregated from output columns)
+        val metrics = part.groupBy($"conv_bucket").agg(
+            count(lit(1)).as("rows"), sum($"bytes_in").as("bytes_in"),
+            sum($"bytes_out").as("bytes_out"), sum($"n_chunks").as("chunks_emitted"),
+            sum($"blocks_kept").as("blocks_kept"), sum($"blocks_dropped").as("blocks_dropped"))
+          .collect()
+        val metricRows = metrics.map { r =>
+          // rows_in == rows_out by construction: extraction is strictly
+          // one ExtractedTurn per Turn (both kept so a future filtering
+          // stage can diverge them)
+          MetricRow(cfg.runId, g, r.getInt(0), r.getLong(1), r.getLong(1),
+            r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))
+        }.toSeq
+        // dynamic overwrite keyed by (run_id, group_id): a crash between
+        // the metrics write and the lineage write re-runs the group, and
+        // the re-run REPLACES this group's metrics instead of appending
+        // duplicates — metrics stay exact under resume
+        spark.createDataset(metricRows).coalesce(1).write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("run_id", "group_id")
+          .parquet(s"${cfg.outDir}/metrics")
+        metricRows
+      } finally part.unpersist()
     }
-    written
+
+    // threads start on submit, from this thread: their jobs inherit the
+    // caller's local properties (job group, scheduler pool) of this call
+    val pool = Executors.newFixedThreadPool(2)
+    val inFlight = new Array[Future[Seq[MetricRow]]](todo.size)
+    def submit(i: Int): Unit = if (i < todo.size)
+      inFlight(i) = pool.submit[Seq[MetricRow]](() => writeGroup(todo(i)._1, todo(i)._2))
+    def commit(i: Int): Long = {
+      val (g, groupBuckets) = todo(i)
+      val metricRows = try inFlight(i).get() catch { case e: ExecutionException => throw e.getCause }
+      // lineage LAST: a bucket is only "done" once its data + metrics
+      // are durable (idempotent resume)
+      val lineageRows = metricRows.map(m =>
+        LineageRow(cfg.runId, g, m.conv_bucket, "done", m.rows_out)) ++
+        groupBuckets.filterNot(b => metricRows.exists(_.conv_bucket == b))
+          .map(b => LineageRow(cfg.runId, g, b, "done", 0L)) // empty buckets
+      spark.createDataset(lineageRows).coalesce(1).write.mode(SaveMode.Append)
+        .parquet(s"${cfg.outDir}/lineage")
+      submit(i + 2) // at most two parts cached; a failed group starts none
+      metricRows.map(_.rows_out).sum
+    }
+    try {
+      submit(0); submit(1)
+      todo.indices.map(commit).sum
+    } catch { case e: Throwable => // no job of this run may outlive it
+      inFlight.filter(_ != null).foreach(f => Try(f.get()))
+      throw e
+    } finally pool.shutdown()
   }
 
   /** Buckets already marked done in the lineage table (resume support). */

@@ -1,7 +1,11 @@
 package graft.job
 
-import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.extract.ChunkHtml
@@ -311,6 +315,111 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(n == distinct, s"duplicate metric rows after resume: $n vs $distinct")
     val totals = metrics.agg(sum("rows_out")).collect().head
     assert(totals.getLong(0) == turns.count())
+  }
+
+  /** Both ways empty under `exceptAll`, on rows as JSON: set operations
+    * reject the map column `metadata.extra`. */
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean = {
+    def json(df: DataFrame) = df.select(to_json(struct(df.columns.map(col): _*)))
+    json(a).exceptAll(json(b)).isEmpty && json(b).exceptAll(json(a)).isEmpty
+  }
+
+  test("pipelined groups: 8 groups write the rows of 1, and leave no staging behind") {
+    val turns = Transcripts.generate(spark, 60)
+    val dir8 = Files.createTempDirectory("graft-groups8").toString
+    val dir1 = Files.createTempDirectory("graft-groups1").toString
+    assert(ExtractJob.run(turns, ExtractJob.Config(dir8, buckets = 16, groups = 8)) ==
+      ExtractJob.run(turns, ExtractJob.Config(dir1, buckets = 16, groups = 1)))
+    assert(ExtractJob.completedBuckets(spark, dir8) == (0 until 16).toSet)
+    assert(ExtractJob.readPages(spark, dir8).count() == Transcripts.expectedCount(60))
+    assert(sameRows(ExtractJob.readPages(spark, dir8), ExtractJob.readPages(spark, dir1)))
+    assert(sameRows(ExtractJob.readChunks(spark, dir8), ExtractJob.readChunks(spark, dir1)))
+    for (dir <- Seq(dir8, dir1); table <- Seq("pages", "chunks", "metrics", "lineage")) {
+      val left = Files.walk(Paths.get(dir, table)).iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n == "_temporary" || n.startsWith(".spark-staging-")).toSeq
+      assert(left.isEmpty, s"$dir/$table: $left")
+    }
+    // bucketOf and the window's hashpartitioning(conv_id, 4) share one
+    // Murmur3 hash, and 4 divides 16: each bucket is one partition, so each
+    // group writes one file per bucket and table
+    for (table <- Seq("pages", "chunks")) {
+      val perBucket = new java.io.File(s"$dir8/$table").listFiles()
+        .filter(_.getName.startsWith("conv_bucket="))
+        .map(d => d.getName -> d.list().count(_.endsWith(".parquet"))).toSeq
+      assert(perBucket.size ==
+        spark.read.parquet(s"$dir8/$table").select("conv_bucket").distinct().count())
+      assert(perBucket.forall(_._2 == 1), s"$table: $perBucket")
+    }
+  }
+
+  test("a failing group: earlier lineage only, no job left running, resume completes") {
+    import spark.implicits._
+    val turns = Transcripts.generate(spark, 60)
+    val cfg = ExtractJob.Config(Files.createTempDirectory("graft-fail").toString,
+      buckets = 8, groups = 4, runId = "a")
+    // bucket 2 is in group 1 (buckets 2 and 3)
+    val bad = turns.filter(ExtractJob.bucketOf(8) === 2).select("conv_id").as[String]
+      .collect().toSet
+    assert(bad.nonEmpty)
+    // a deterministic column map: run's bucket filter is pushed below it, so
+    // only group 1's jobs meet these conversations (a typed map would sit
+    // above the filter and fail every group)
+    val boom = udf { (conv: String, text: String) =>
+      if (bad(conv)) throw new IllegalStateException(s"bad conversation $conv") else text }
+    val failing = turns.withColumn("text", boom($"conv_id", $"text")).as[Turn]
+    // jobs of the failing run carry a scope: none may start after it returns
+    val sc = spark.sparkContext
+    val scoped = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.scope") == "failing"))
+          scoped.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.scope", "failing")
+    val e = try intercept[Exception](ExtractJob.run(failing, cfg))
+      finally sc.setLocalProperty("graft.test.scope", null)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.toString.contains("bad conversation")), e)
+    ListenerBusDrain(sc)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    val startedBeforeReturn = scoped.get
+    assert(ExtractJob.completedBuckets(spark, cfg.outDir) == Set(0, 1))
+
+    ExtractJob.run(turns, cfg.copy(runId = "b"))
+    val clean = Files.createTempDirectory("graft-fail-clean").toString
+    ExtractJob.run(turns, ExtractJob.Config(clean, buckets = 8, groups = 4, runId = "a"))
+    assert(sameRows(ExtractJob.readPages(spark, cfg.outDir), ExtractJob.readPages(spark, clean)))
+    assert(sameRows(ExtractJob.readChunks(spark, cfg.outDir), ExtractJob.readChunks(spark, clean)))
+    ListenerBusDrain(sc)
+    sc.removeSparkListener(listener)
+    assert(scoped.get == startedBeforeReturn, "a job of the failed run started after it threw")
+  }
+
+  test("run's jobs inherit the caller's local properties, and 4 groups run 32 jobs") {
+    val turns = Transcripts.generate(spark, 60)
+    val dir = Files.createTempDirectory("graft-jobs").toString
+    val sc = spark.sparkContext
+    val key = "graft.test.scope"
+    val scopes = new ConcurrentLinkedQueue[Option[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        scopes.add(Option(e.properties).flatMap(p => Option(p.getProperty(key))))
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, "extract-run")
+    try ExtractJob.run(turns, ExtractJob.Config(dir, buckets = 8, groups = 4))
+    finally {
+      sc.setLocalProperty(key, null)
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    val seen = scopes.asScala.toSeq
+    assert(seen.forall(_.contains("extract-run")), seen)
+    // the job count of the sequential run on this input (8 per group)
+    assert(seen.size == 32)
   }
 
   test("per-turn recipe fixture end-to-end via Spark row") {
