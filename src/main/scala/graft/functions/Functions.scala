@@ -49,6 +49,14 @@ object Functions {
       SqlChunk(graft.job.ExtractJob.chunkId(url, i), c.text, c.chunkType)
     }
 
+  /** NULL in, NULL out: `f` runs only on a non-null argument. */
+  private def nullSafe[R >: Null](f: String => R): String => R =
+    a => if (a == null) null else f(a)
+
+  /** Two-argument [[nullSafe]]: NULL when either argument is NULL. */
+  private def nullSafe2[R >: Null](f: (String, String) => R): (String, String) => R =
+    (a, b) => if (a == null || b == null) null else f(a, b)
+
   def registerAll(spark: SparkSession): Unit = {
     // native expression → expression registry (codegen-friendly)
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
@@ -74,31 +82,32 @@ object Functions {
       },
       "built-in")
 
-    // Scala UDFs over the pure extraction core
-    spark.udf.register("of_clean_html",
-      udf((html: String) => AdapterChunker.cleanHtml(html)))
-    spark.udf.register("of_clean_wp",
-      udf((html: String) => AdapterChunker.cleanWp(html)))
+    // Scala UDFs over the pure extraction core; a NULL argument gives a
+    // NULL result instead of a task-killing NPE
+    spark.udf.register("of_clean_html", udf(nullSafe(AdapterChunker.cleanHtml)))
+    spark.udf.register("of_clean_wp", udf(nullSafe(AdapterChunker.cleanWp)))
+    // a NULL `words` (a primitive Int) already yields NULL
     spark.udf.register("of_summarise",
-      udf((html: String, words: Int) => AdapterChunker.summarise(html, words)))
+      udf((html: String, words: Int) =>
+        if (html == null) null else AdapterChunker.summarise(html, words)))
     spark.udf.register("of_word_count",
-      udf((text: String) => AdapterChunker.countWords(text)))
+      udf((text: String) => Option(text).map(AdapterChunker.countWords)))
     spark.udf.register("of_detect_type",
-      udf((text: String) => AdapterChunker.detectType(text)))
+      udf(nullSafe(t => AdapterChunker.detectType(t))))
     spark.udf.register("of_chunk500",
-      udf((html: String, url: String) =>
+      udf(nullSafe2((html, url) =>
         AdapterChunker.chunkContent(html, url)
-          .map(c => SqlChunk(c.id, c.text, c.chunkType))))
-    spark.udf.register("of_sync_token",
-      udf((iso: String) => SyncCodec.encodeSyncToken(iso)))
+          .map(c => SqlChunk(c.id, c.text, c.chunkType)))))
+    spark.udf.register("of_sync_token", udf(nullSafe(SyncCodec.encodeSyncToken)))
     spark.udf.register("of_parse_since",
-      udf((raw: String) => SyncCodec.parseSince(raw)))
+      udf((raw: String) => Option(raw).flatMap(SyncCodec.parseSince)))
     spark.udf.register("of_extract_summary",
-      udf((url: String, html: String) => graft.extract.ChunkHtml(url, html).summary))
+      udf(nullSafe2((url, html) => graft.extract.ChunkHtml(url, html).summary)))
     // §2.11 `of_extract`: the sidecar chunk pipeline from SQL (typed
     // mapPartitions remains the bulk path; this is the ad-hoc surface)
     spark.udf.register("of_extract_chunks",
-      udf((url: String, html: String) => sqlChunks(url, graft.extract.ChunkHtml(url, html).chunks)))
+      udf(nullSafe2((url, html) =>
+        sqlChunks(url, graft.job.ExtractJob.chunksFor(url, html, null)))))
     // tool-dispatched variant — shares ExtractJob.RawFallbackTools routing
     // (render/pdf -> 50 KB-capped flatten-to-spans, else HTML pipeline);
     // null text yields an empty chunk list rather than a task-killing NPE

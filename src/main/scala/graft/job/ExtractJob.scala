@@ -223,7 +223,13 @@ object ExtractJob {
   /** Full run with per-group checkpoint commits. Returns (rows written).
     * Group g+1 extracts and writes while group g finishes: their dynamic
     * overwrites stage apart, on disjoint partitions, but lineage appends
-    * share `lineage/_temporary`, so they stay on the calling thread. */
+    * share `lineage/_temporary`, so they stay on the calling thread.
+    *
+    * Each group filters the caller's `turns` on its buckets, and Catalyst
+    * cannot push that filter below a typed operator: when `turns` ends in
+    * a typed `map`/`flatMap`, as `Transcripts.generate` does, that map
+    * runs over the whole input once per group. Extraction still sees
+    * only the group's rows. */
   def run(turns: Dataset[Turn], cfg: Config,
       stopAfterGroups: Int = Int.MaxValue): Long = {
     val spark = turns.sparkSession

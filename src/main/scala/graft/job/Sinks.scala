@@ -1,6 +1,6 @@
 package graft.job
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Store-maintenance semantics from the reference's indexer/sync layer,
@@ -94,21 +94,29 @@ object Sinks {
   def tombstonesSince(tombstones: DataFrame, since: java.sql.Timestamp): DataFrame =
     tombstones.filter(col("deleted_at") >= lit(since)).orderBy("url")
 
+  /** T2+J5: the sync window over an indexed pages table
+    * (the sidecar's `indexer.py:339-377`) — the pages whose
+    * `indexed_at` lies in the inclusive [since, until], and the predicate
+    * that puts a windowed page in the added bucket (`first_indexed_at >=
+    * since`; the rest are updated). The predicate is NULL on a NULL
+    * `first_indexed_at`, so such a page is in neither filtered bucket. */
+  def syncWindow(pages: DataFrame, since: Column, until: Column): (DataFrame, Column) =
+    (pages.filter(col("indexed_at") >= since && col("indexed_at") <= until),
+      col("first_indexed_at") >= since)
+
   /** T2+J5+A2+T3 combined: the full differential-sync envelope for a
-    * [since, until] window over an indexed pages table —
+    * [since, until] [[syncWindow]] over an indexed pages table —
     * `/root/reference/sidecar/main.py:393-472`. Returns (added, updated,
     * deleted, counts, sync_token). */
   def syncEnvelope(pages: DataFrame, tombstones: DataFrame,
       since: java.sql.Timestamp, until: java.sql.Timestamp)
       : (DataFrame, DataFrame, DataFrame, DataFrame, String) = {
-    val inWindow = pages.filter(
-      col("indexed_at") >= lit(since) && col("indexed_at") <= lit(until))
-    val added = inWindow.filter(col("first_indexed_at") >= lit(since))
-    val updated = inWindow.filter(col("first_indexed_at") < lit(since))
+    val (inWindow, isAdded) = syncWindow(pages, lit(since), lit(until))
+    val added = inWindow.filter(isAdded)
+    val updated = inWindow.filter(!isAdded)
     val deleted = tombstonesSince(tombstones, since)
     val counts = inWindow
-      .withColumn("bucket",
-        when(col("first_indexed_at") >= lit(since), "added").otherwise("updated"))
+      .withColumn("bucket", when(isAdded, "added").otherwise("updated"))
       .groupBy("bucket").agg(count(lit(1)).as("n"))
     // SyncCodec.toIsoUtc pads whole-minute timestamps to ":00" seconds like
     // Python's isoformat (LocalDateTime.toString would drop them)

@@ -136,13 +136,19 @@ object Analytics {
       .drop("ev")
   }
 
-  /** The ANALYTICS.md headline rollup: events by bot_family × endpoint ×
-    * day — request counts, total duration, and the api.request subset.
-    * Map-side combinable; shuffles only (bot_family, endpoint, day). */
+  /** The headline rollup's measures, shared by the batch [[rollup]] and
+    * its streaming twin `StreamOps.analyticsRollupStream`: event count,
+    * the api.request and api.bot subsets, and total duration. */
+  private[graft] val RollupMeasures: Seq[Column] = Seq(
+    count(lit(1)).as("n_events"),
+    sum(when(col("event_type") === "api.request", 1L).otherwise(0L)).as("n_requests"),
+    sum(when(col("event_type") === "api.bot", 1L).otherwise(0L)).as("n_bot"),
+    sum(col("duration_ms")).as("sum_duration_ms"))
+
+  /** The ANALYTICS.md headline rollup: [[RollupMeasures]] by bot_family ×
+    * endpoint × day. Map-side combinable; shuffles only (bot_family,
+    * endpoint, day). */
   def rollup(events: DataFrame): DataFrame =
     events.groupBy("bot_family", "endpoint", "day")
-      .agg(count(lit(1)).as("n_events"),
-        sum(when(col("event_type") === "api.request", 1L).otherwise(0L)).as("n_requests"),
-        sum(when(col("event_type") === "api.bot", 1L).otherwise(0L)).as("n_bot"),
-        sum(col("duration_ms")).as("sum_duration_ms"))
+      .agg(RollupMeasures.head, RollupMeasures.tail: _*)
 }

@@ -101,6 +101,16 @@ object Gateway {
           regexp_replace(lastSeg, "[-_]", " ").as("detected_topic")))
   }
 
+  /** `df` plus [[detectContext]] of its `path` as the top-level
+    * `detected_type` and `detected_topic` columns. The detection is
+    * materialized once; every use site reads the two attributes instead
+    * of re-inlining the when-chain. */
+  def withContext(df: DataFrame): DataFrame =
+    df.withColumn("_ctx", detectContext(col("path")))
+      .withColumn("detected_type", col("_ctx").getField("detected_type"))
+      .withColumn("detected_topic", col("_ctx").getField("detected_topic"))
+      .drop("_ctx")
+
   /** JS `encodeURIComponent` parity (gateway.js:79,237-270 encodes BOTH the
     * query and the requested path — `/a/b` → `%2Fa%2Fb`): percent-encode
     * every byte of the UTF-8 form except `A-Za-z0-9 - _ . ! ~ * ' ( )`.
@@ -132,14 +142,12 @@ object Gateway {
     * actions; the `search` context type falls through to the default arm
     * (no case of its own).
     *
-    * Takes an already-computed [[detectContext]] struct column: callers
-    * materialize the context once (e.g. via `withColumn`) instead of
-    * inlining the whole detection when-chain at every one of the ~10
-    * type/topic use sites below. */
-  def coldStartQuestionsFrom(path: Column, ctx: Column, baseUrl: String,
+    * Reads the `detected_type`/`detected_topic` columns of
+    * [[withContext]] at its ~10 type/topic use sites. */
+  private def coldStartQuestions(path: Column, baseUrl: String,
       hasEcommerce: Boolean): Column = {
-    val dtype = ctx.getField("detected_type")
-    val topic = ctx.getField("detected_topic")
+    val dtype = col("detected_type")
+    val topic = col("detected_topic")
     val seg1 = pathSegments(path)._2
     val encPath = encodeUriComponent(path)
     val topicPlus = regexp_replace(topic, " ", "+")
@@ -242,23 +250,22 @@ object Gateway {
     * block, and `next_steps`. The stateful `dialog` block (session_id,
     * 300 s expiry, the 4 fixed intake questions) lives in the streaming
     * path ([[graft.streaming.StreamOps.dialogueSessions]]) — sessions are
-    * runtime state, not a batch-derivable column. */
+    * runtime state, not a batch-derivable column. The detected context
+    * lives only inside `context`: `df` must not carry its own
+    * `detected_type`/`detected_topic` columns. */
   def coldStartEnvelope(df: DataFrame, baseUrl: String,
       hasEcommerce: Boolean): DataFrame = {
     val caps =
       if (hasEcommerce) Seq("content", "search", "products")
       else Seq("content", "search")
-    // detection computed ONCE into a struct column; everything downstream
-    // reads attribute references instead of re-inlining the when-chain
-    df.withColumn("_ctx", detectContext(col("path")))
+    withContext(df)
       .withColumn("context", struct(
         col("path").as("page_requested"),
-        col("_ctx").getField("detected_type").as("detected_type"),
-        col("_ctx").getField("detected_topic").as("detected_topic"),
+        col("detected_type"),
+        col("detected_topic"),
         typedlit(caps).as("site_capabilities")))
-      .withColumn("questions",
-        coldStartQuestionsFrom(col("path"), col("_ctx"), baseUrl, hasEcommerce))
-      .drop("_ctx")
+      .withColumn("questions", coldStartQuestions(col("path"), baseUrl, hasEcommerce))
+      .drop("detected_type", "detected_topic")
       .withColumn("endpoints", struct(
         lit(s"$baseUrl/openfeeder").as("content"),
         lit(s"$baseUrl/.well-known/openfeeder.json").as("discovery")))
@@ -278,8 +285,8 @@ object Gateway {
 
   /** buildTailoredResponse's recommended endpoints + query hints +
     * current_page block (gateway.js:230-290) for Mode-2 rows. Expects
-    * `intent`, `query`, `format`, `depth`, `path`, `detected_type`,
-    * `detected_topic` columns. The query AND the
+    * `intent`, `query`, `format`, `depth`, `path` and the [[withContext]]
+    * columns `detected_type`, `detected_topic`. The query AND the
     * requested path are percent-encoded exactly like the reference's
     * `encodeURIComponent(query)` / `encodeURIComponent(context.page_requested)`
     * — a path `/a/b` renders as `url=%2Fa%2Fb`. */

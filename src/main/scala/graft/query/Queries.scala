@@ -3,7 +3,7 @@ package graft.query
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.job.{ExtractJob, Transcripts}
+import graft.job.{ExtractJob, Sinks, Transcripts}
 import graft.ops.{Dedup, Multimodal, TextOps, VectorOps}
 
 /** The query surface: every read-side operator from SURVEY.md §2.4-§2.10,
@@ -797,6 +797,13 @@ object Queries {
       untilCands.map(_.filter(_.nonEmpty).flatMap(SyncCodec.parseIsoTimestamp).map(_.toLong))
   }
 
+  /** The spec §8 error body `{"schema":"openfeeder/1.0","error":{"code",
+    * "message"}}` as a JSON string column. */
+  private def specErrorBody(code: String, message: String): Column =
+    to_json(struct(
+      lit("openfeeder/1.0").as("schema"),
+      struct(lit(code).as("code"), lit(message).as("message")).as("error")))
+
   /** `values(idx)` as a `sqlType` column, NULL where the value is absent
     * or `idx` is out of range: a when-chain folded over the indices. */
   private def pickByIndex(idx: Column, values: Seq[Option[Any]], sqlType: String): Column =
@@ -852,10 +859,6 @@ object Queries {
       val hasSince = col("since_param").isNotNull && col("since_param") =!= ""
       val hasUntil = col("until_param").isNotNull && col("until_param") =!= ""
       val syncBranch = (hasSince || hasUntil) && !hasQ
-      def specEnv(m: String): Column = to_json(struct(
-        lit("openfeeder/1.0").as("schema"),
-        struct(lit("INVALID_PARAM").as("code"),
-          lit(m).as("message")).as("error")))
       // invalid ?until= NEVER reaches the spec-envelope branch: parse_until
       // RAISES HTTPException(400, detail={...}) (main.py:770-778), so the
       // handler's `if until_ts is None` check (:405-406) is dead code and
@@ -865,11 +868,12 @@ object Queries {
         lit("?until= must be an RFC 3339 datetime").as("message")).as("detail")))
       val body =
         when(syncBranch && hasSince && col("since_ts").isNull,
-          specEnv("Invalid ?since= value. Provide an RFC3339 datetime or a valid sync_token."))
+          specErrorBody("INVALID_PARAM",
+            "Invalid ?since= value. Provide an RFC3339 datetime or a valid sync_token."))
         .when(syncBranch && hasUntil && col("until_ts").isNull, untilRaise)
         .when(syncBranch && hasSince && hasUntil &&
             col("until_ts") < col("since_ts"),
-          specEnv("?until= must be after ?since=."))
+          specErrorBody("INVALID_PARAM", "?until= must be after ?since=."))
       base
         .withColumn("body", body)
         .select(col("doc_id"), col("q_param"), col("since_param"),
@@ -1400,9 +1404,9 @@ object Queries {
       val sinceIso = "2024-01-10T00:00:00+00:00"
       val untilIso = "2024-01-20T00:00:00+00:00"
       val token = graft.extract.SyncCodec.encodeSyncToken(untilIso)
-      val win = syncPages(s, dir)
-        .filter(col("indexed_at") >= syncSince && col("indexed_at") <= syncUntil)
-        .withColumn("is_added", col("first_indexed_at") >= syncSince)
+      val (inWindow, isAdded) = Sinks.syncWindow(syncPages(s, dir), syncSince, syncUntil)
+      val win = inWindow
+        .withColumn("is_added", isAdded)
         .withColumn("item", struct(
           col("url"),
           col("title"),
@@ -1492,11 +1496,11 @@ object Queries {
   private val xSyncPage = Q(
     (s, dir) => {
       val cursor = "/page/3" // last url of the previous page (keyset)
-      syncPages(s, dir)
-        .filter(col("indexed_at") >= syncSince && col("indexed_at") <= syncUntil)
+      val (inWindow, isAdded) = Sinks.syncWindow(syncPages(s, dir), syncSince, syncUntil)
+      inWindow
         .filter(col("url") > cursor)
         .select(
-          when(col("first_indexed_at") >= syncSince, "added").otherwise("updated").as("bucket"),
+          when(isAdded, "added").otherwise("updated").as("bucket"),
           col("url"), col("title"),
           when(pmod(col("event_id"), lit(3)) =!= 0, iso(col("first_indexed_at")))
             .as("published"),
@@ -3268,11 +3272,8 @@ object Queries {
       val auth = when(pmod(col("doc_id"), lit(3)) === 0, s"Bearer $apiKey")
         .when(pmod(col("doc_id"), lit(3)) === 1, "Bearer wrong-key")
         .otherwise(lit(null).cast("string"))
-      val errBody = to_json(struct(
-        lit("openfeeder/1.0").as("schema"),
-        struct(lit("UNAUTHORIZED").as("code"),
-          lit("Valid API key required. Include Authorization: Bearer <key> header.")
-            .as("message")).as("error")))
+      val errBody = specErrorBody("UNAUTHORIZED",
+        "Valid API key required. Include Authorization: Bearer <key> header.")
       rd(s, dir, "documents")
         .select(col("doc_id"), path.as("path"), auth.as("auth_header"))
         .withColumn("status_code",
@@ -3309,14 +3310,10 @@ object Queries {
   /** Gateway mode routing + context detection (gateway.js:18-75,319-346),
     * every branch oracle-checked. */
   private val g1GatewayRoute = Q(
-    (s, dir) => {
-      val ctx = Gateway.detectContext(col("path"))
-      Gateway.routeRequests(gatewayRequests(s, dir))
-        .withColumn("detected_type", ctx.getField("detected_type"))
-        .withColumn("detected_topic", ctx.getField("detected_topic"))
+    (s, dir) =>
+      Gateway.withContext(Gateway.routeRequests(gatewayRequests(s, dir)))
         .select("doc_id", "route", "detected_type", "detected_topic")
-        .orderBy("doc_id")
-    },
+        .orderBy("doc_id"),
     Some {
       val llm = Gateway.LlmAgents.map(a => s"ua LIKE '%$a%'").mkString(" OR ")
       val title = "array_to_string(list_transform(string_split(" +
@@ -3364,11 +3361,8 @@ object Queries {
     * replace-chains over exactly this alphabet (DuckDB has no url_encode). */
   private val g2GatewayTailored = Q(
     (s, dir) => {
-      val reqs = Gateway.routeRequests(gatewayRequests(s, dir))
-        .filter(col("route") === "mode2_direct")
-        .withColumn("_ctx", Gateway.detectContext(col("path")))
-        .withColumn("detected_type", col("_ctx").getField("detected_type"))
-        .withColumn("detected_topic", col("_ctx").getField("detected_topic"))
+      val reqs = Gateway.withContext(Gateway.routeRequests(gatewayRequests(s, dir))
+          .filter(col("route") === "mode2_direct"))
         .withColumn("depth", lit(null).cast("string"))
         .withColumn("format", lit(null).cast("string"))
         .withColumn("query",

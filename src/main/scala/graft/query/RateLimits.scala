@@ -128,9 +128,4 @@ object RateLimits {
     Decision(r.ip, r.endpoint, r.event_id, r.sec, r.limit_rpm, allowed,
       remaining, reset, if (allowed) None else Some(reset))
   }
-
-  /** Walk one bucket's time-ordered requests through [[decideOne]]. */
-  def decideBucket(sorted: Seq[Req],
-      q: scala.collection.mutable.ArrayDeque[Long]): Seq[Decision] =
-    sorted.map(decideOne(_, q))
 }

@@ -135,8 +135,8 @@ object StreamOps {
           else {
             val q = scala.collection.mutable.ArrayDeque.from(
               state.getOption.getOrElse(Seq.empty))
-            val out = graft.query.RateLimits.decideBucket(
-              batch.toVector.sortBy(r => (r.sec, r.event_id)), q)
+            val out = batch.toVector.sortBy(r => (r.sec, r.event_id))
+              .map(graft.query.RateLimits.decideOne(_, q))
             state.update(q.toSeq)
             renewTtl(state, ttlMs)
             out.iterator
@@ -192,23 +192,24 @@ object StreamOps {
       }
   }
 
-  /** Streaming twin of [[graft.query.Analytics.rollup]]: the ANALYTICS.md
-    * headline view as watermarked 1-day tumbling windows per bot_family ×
-    * endpoint. The watermark bounds state exactly like the rate limiter's
-    * (late events beyond 1 day drop; closed windows emit once in Append
-    * mode). Input: a typed event stream with (ts, bot_family, endpoint,
-    * event_type, duration_ms) — e.g. `Analytics.deriveEvents` applied to a
-    * streaming request log (deriveEvents is pure column transforms, so it
-    * composes with readStream unchanged). */
-  def analyticsRollupStream(events: DataFrame): DataFrame =
+  /** Streaming twin of [[graft.query.Analytics.rollup]]: the same
+    * `Analytics.RollupMeasures` per bot_family × endpoint over
+    * watermarked 1-day tumbling windows, keyed by `day_start`. The
+    * watermark bounds state exactly like the rate limiter's (late events
+    * beyond 1 day drop; closed windows emit once in Append mode). Input: a
+    * typed event stream with (ts, bot_family, endpoint, event_type,
+    * duration_ms) — e.g. `Analytics.deriveEvents` applied to a streaming
+    * request log (deriveEvents is pure column transforms, so it composes
+    * with readStream unchanged). */
+  def analyticsRollupStream(events: DataFrame): DataFrame = {
+    val measures = graft.query.Analytics.RollupMeasures
     events
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day"), col("bot_family"), col("endpoint"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(when(col("event_type") === "api.request", 1L).otherwise(0L)).as("n_requests"),
-        sum(col("duration_ms")).as("sum_duration_ms"))
-      .select(col("window.start").as("day_start"), col("bot_family"),
-        col("endpoint"), col("n_events"), col("n_requests"), col("sum_duration_ms"))
+      .agg(measures.head, measures.tail: _*)
+      .select(col("window.start").as("day_start"), col("*"))
+      .drop("window")
+  }
 
   final case class GwEvent(session_id: String, kind: String, path: String,
       detected_type: String, answer_intent: Option[String],

@@ -159,4 +159,42 @@ class FunctionsSpec extends AnyFunSuite {
         "toUtcString must render the UTC wall clock under a non-UTC session zone")
     } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
   }
+
+  test("every of_* function survives NULL arguments, all-NULL giving its documented result") {
+    Functions.registerAll(spark)
+    // documented non-NULL results on NULL input; every other of_*
+    // function, including any registered later, must return NULL
+    val documented: Map[String, Any] = Map(
+      "of_extract_turn" -> Seq.empty, "of_sitemap_locs" -> Seq.empty,
+      "of_is_llm_bot" -> false, "of_robots_allowed" -> false,
+      "of_detect_bot" -> "unknown", "of_bot_family" -> "unknown")
+    val names = spark.catalog.listFunctions().collect().map(_.name)
+      .filter(_.startsWith("of_")).distinct.sorted.toSeq
+    assert(names.size >= 19, names)
+    def call(name: String, args: Seq[String]) = scala.util.Try(
+      spark.sql(s"SELECT $name(${args.mkString(", ")}) AS v").collect().head.get(0))
+    val failures = names.flatMap { name =>
+      // a function's arity is the smallest NULL-argument count that analyses
+      (0 to 3).find(n => scala.util.Try(
+          spark.sql(s"SELECT $name(${Seq.fill(n)("NULL").mkString(", ")})")).isSuccess) match {
+        case None => Seq(s"$name analyses at no arity 0..3")
+        case Some(n) =>
+          val want = documented.getOrElse(name, null)
+          val allNull = call(name, Seq.fill(n)("NULL")) match {
+            case scala.util.Failure(e) => Some(s"$name(NULL...) failed: $e")
+            case scala.util.Success(v) =>
+              if (v == want) None else Some(s"$name returned $v, expected $want")
+          }
+          // one NULL beside non-NULL arguments must not fail either: a NULL
+          // primitive argument alone short-circuits the all-NULL call
+          val oneNull = if (n < 2) Nil else (0 until n).flatMap { i =>
+            val args = Seq.tabulate(n)(j => if (j == i) "NULL" else "'0'")
+            call(name, args).failed.toOption
+              .map(e => s"$name(${args.mkString(", ")}) failed: $e")
+          }
+          allNull.toSeq ++ oneNull
+      }
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
 }

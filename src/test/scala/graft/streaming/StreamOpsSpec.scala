@@ -165,6 +165,51 @@ class StreamOpsSpec extends AnyFunSuite {
       ("2024-01-02", "anthropic", "/docs", 1L, 1L, 30L)))
   }
 
+  test("streaming analytics rollup equals Analytics.rollup row for row, n_bot included") {
+    import spark.implicits._
+    import graft.query.Analytics
+    val in = Files.createTempDirectory("an-parity").toString + "/data"
+    val rnd = new scala.util.Random(18)
+    val paths = Seq("/openfeeder", "/healthz", "/docs/a", "/search/x",
+      "/.well-known/openfeeder.json")
+    val uas = Seq("GPTBot/1.0", "ClaudeBot/1.0", "Mozilla/5.0 (human)", "", "Googlebot/2.1")
+    // a seeded request log over three UTC days, through the batch event
+    // derivation, so both rollups read the same typed events
+    val reqs = (0 until 400).map { _ =>
+      (if (rnd.nextInt(10) == 0) "POST" else "GET", paths(rnd.nextInt(paths.size)),
+        uas(rnd.nextInt(uas.size)), Seq(200, 404, 500)(rnd.nextInt(3)),
+        rnd.nextInt(100).toLong, rnd.nextInt(8) == 0,
+        if (rnd.nextBoolean()) Some("term") else None, rnd.nextInt(4) == 0,
+        if (rnd.nextInt(3) == 0) Some("/a") else None,
+        new java.sql.Timestamp(1704067200000L + rnd.nextInt(3 * 86400) * 1000L))
+    }.toDF("method", "path", "ua", "status_code", "duration_ms", "rate_limited",
+      "q_term", "is_sync", "url_param", "ts")
+      .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
+    val events = Analytics.deriveEvents(reqs)
+    events.write.parquet(in)
+    val q = StreamOps.analyticsRollupStream(
+        spark.readStream.schema(events.schema).parquet(in))
+      .writeStream.outputMode(OutputMode.Complete)
+      .format("memory").queryName("anparity")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val batch = Analytics.rollup(events)
+    val measures = batch.columns.toSeq.filterNot(Set("bot_family", "endpoint", "day"))
+    assert(measures.contains("n_bot"))
+    val streamed = spark.table("anparity")
+    assert(streamed.columns.toSeq == Seq("day_start", "bot_family", "endpoint") ++ measures)
+    def byKey(df: org.apache.spark.sql.DataFrame, day: org.apache.spark.sql.Column) =
+      df.select(day +: (Seq("bot_family", "endpoint") ++ measures).map(col): _*)
+        .collect().map(r => r.toSeq.take(3) -> r.toSeq.drop(3)).toSeq
+    val got = byKey(streamed, date_format(col("day_start"), "yyyy-MM-dd"))
+    val want = byKey(batch, col("day"))
+    assert(got.map(_._1).distinct.size == got.size)
+    assert(got.toMap == want.toMap && got.size == want.size)
+    assert(want.exists(_._2(measures.indexOf("n_bot")) != 0L),
+      "the fixture must produce api.bot events")
+  }
+
   test("gateway session state with TTL via mapGroupsWithState") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -301,7 +346,7 @@ class StreamOpsSpec extends AnyFunSuite {
     // rests on one assumption: the per-TRIGGER batch Vector is the ONLY
     // term proportional to traffic — everything CARRIED across triggers
     // is O(limit). Pin that: replay a 50k-request hot-bucket micro-batch
-    // through the same decideBucket the streaming operator calls and
+    // through the same decideOne the streaming operator maps and
     // assert the carried window queue never exceeds the bucket limit.
     import graft.query.RateLimits
     val limit = 60
@@ -310,7 +355,7 @@ class StreamOpsSpec extends AnyFunSuite {
         sec = (i / 100).toLong, event_id = i.toLong, limit_rpm = limit)
     }
     val q = scala.collection.mutable.ArrayDeque.empty[Long]
-    val out = RateLimits.decideBucket(reqs, q)
+    val out = reqs.map(RateLimits.decideOne(_, q))
     assert(out.size == 50000)
     assert(q.size <= limit) // carried state: at most `limit` timestamps
     // and the window bound held throughout: per 60 s window, exactly

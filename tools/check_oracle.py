@@ -10,7 +10,8 @@ sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 # `SF OUT --against OUT2` also compares every Verify output table, the
 # rows-only ones included, row for row with the same table of a second
-# Verify dump, by EXCEPT ALL in both directions; any difference fails.
+# Verify dump, by EXCEPT ALL in both directions, and the two dumps'
+# oracle_sql.json query by query; any difference fails.
 against = sys.argv[4] if len(sys.argv) > 4 and sys.argv[3] == "--against" else None
 
 con = duckdb.connect()
@@ -87,4 +88,13 @@ if against:
         else:
             same += 1
     print(f"AGAINST {against}: {same}/{len(tables)} tables identical")
+    # the two dumps' oracle SQL, query by query: any added, dropped or
+    # edited oracle fails the run
+    theirs = json.load(open(f"{against}/oracle_sql.json"))
+    names = sorted(set(oracle) | set(theirs))
+    differ = [n for n in names if oracle.get(n) != theirs.get(n)]
+    print(f"ORACLE_SQL {len(names) - len(differ)}/{len(names)} identical")
+    for name in differ:
+        print(f"ORACLE_SQL DIFF {name}")
+    fails += len(differ)
 sys.exit(1 if fails else 0)
