@@ -42,11 +42,13 @@ object Functions {
 
   final case class SqlChunk(id: String, text: String, `type`: String)
 
-  /** Sidecar chunks as SQL rows numbered by [[graft.job.ExtractJob.chunkId]]. */
+  /** Sidecar chunks as SQL rows numbered by [[graft.job.ExtractJob.chunkId]];
+    * a NULL url numbers them as "", as [[graft.job.ExtractJob.chunksFor]]
+    * reads it. */
   private def sqlChunks(url: String,
       chunks: Vector[graft.extract.ChunkHtml.Chunk]): Vector[SqlChunk] =
     chunks.zipWithIndex.map { case (c, i) =>
-      SqlChunk(graft.job.ExtractJob.chunkId(url, i), c.text, c.chunkType)
+      SqlChunk(graft.job.ExtractJob.chunkId(if (url == null) "" else url, i), c.text, c.chunkType)
     }
 
   /** NULL in, NULL out: `f` runs only on a non-null argument. */

@@ -224,6 +224,8 @@ object ExtractJob {
     * Group g+1 extracts and writes while group g finishes: their dynamic
     * overwrites stage apart, on disjoint partitions, but lineage appends
     * share `lineage/_temporary`, so they stay on the calling thread.
+    * All four writers take [[LocalFs.WriteOptions]]: local files and
+    * directories get their permissions without a forked `chmod`.
     *
     * Each group filters the caller's `turns` on its buckets, and Catalyst
     * cannot push that filter below a typed operator: when `turns` ends in
@@ -253,7 +255,7 @@ object ExtractJob {
         .cache()
       try {
         // pages table (turn envelope, nested chunks)
-        part.write.mode(SaveMode.Overwrite)
+        part.write.mode(SaveMode.Overwrite).options(LocalFs.WriteOptions)
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("conv_bucket")
           .parquet(s"${cfg.outDir}/pages")
@@ -263,7 +265,7 @@ object ExtractJob {
           .select($"conv_id", $"turn_idx", $"turn_pos", $"url", $"page_id",
             $"title", $"ts", $"c.id".as("chunk_id"),
             $"c.chunk_index", $"c.text", $"c.chunk_type", $"conv_bucket")
-          .write.mode(SaveMode.Overwrite)
+          .write.mode(SaveMode.Overwrite).options(LocalFs.WriteOptions)
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("conv_bucket")
           .parquet(s"${cfg.outDir}/chunks")
@@ -285,6 +287,7 @@ object ExtractJob {
         // the re-run REPLACES this group's metrics instead of appending
         // duplicates — metrics stay exact under resume
         spark.createDataset(metricRows).coalesce(1).write.mode(SaveMode.Overwrite)
+          .options(LocalFs.WriteOptions)
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("run_id", "group_id")
           .parquet(s"${cfg.outDir}/metrics")
@@ -308,6 +311,7 @@ object ExtractJob {
         groupBuckets.filterNot(b => metricRows.exists(_.conv_bucket == b))
           .map(b => LineageRow(cfg.runId, g, b, "done", 0L)) // empty buckets
       spark.createDataset(lineageRows).coalesce(1).write.mode(SaveMode.Append)
+        .options(LocalFs.WriteOptions)
         .parquet(s"${cfg.outDir}/lineage")
       submit(i + 2) // at most two parts cached; a failed group starts none
       metricRows.map(_.rows_out).sum

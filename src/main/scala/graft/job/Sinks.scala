@@ -133,12 +133,13 @@ object Sinks {
     * anti-pattern, so the Spark-native shape is partitioned JSON-lines
     * keyed by the same `path` values (a CDN/edge materializer fans rows
     * out to files; `path` is the file each row would become). Input is
-    * any DataFrame shaped like the `x_static_build` query's output. */
+    * any DataFrame shaped like the `x_static_build` query's output.
+    * Local paths are written through [[LocalFs]], like `ExtractJob.run`'s. */
   def writeStaticFeed(artifacts: DataFrame, outDir: String): Unit =
     artifacts
       .repartition(col("kind")) // one writer wave per artifact kind
       .sortWithinPartitions("seq", "path")
-      .write.mode(SaveMode.Overwrite)
+      .write.mode(SaveMode.Overwrite).options(LocalFs.WriteOptions)
       .partitionBy("kind")
       .json(outDir)
 }

@@ -90,6 +90,15 @@ class FunctionsSpec extends AnyFunSuite {
     assert(r.getBoolean(3) && !r.getBoolean(4))
   }
 
+  test("of_extract_turn numbers a NULL url's chunks as the empty url") {
+    Functions.registerAll(spark)
+    val r = spark.sql("SELECT of_extract_turn(NULL, " +
+      "'<p>A paragraph with more than twenty characters.</p>', 'browser') AS h")
+      .collect().head.getSeq[org.apache.spark.sql.Row](0)
+    assert(r.head.getString(0) == graft.job.ExtractJob.chunkId("", 0))
+    assert(r.head.getString(0) == "871bfd972afe747e")
+  }
+
   test("of_detect_bot / of_bot_family / of_encode_uri from SQL") {
     Functions.registerAll(spark)
     val r = spark.sql(

@@ -3,6 +3,7 @@ package graft.job
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -349,6 +350,33 @@ class ExtractJobSpec extends AnyFunSuite {
       assert(perBucket.size ==
         spark.read.parquet(s"$dir8/$table").select("conv_bucket").distinct().count())
       assert(perBucket.forall(_._2 == 1), s"$table: $perBucket")
+    }
+  }
+
+  test("a run's output tree: every data file has its .crc, and stock Hadoop modes") {
+    val dir = Files.createTempDirectory("graft-tree").toString
+    // bytes written through LocalFs's raw file system, every writer's included
+    @annotation.nowarn("cat=deprecation")
+    val viaLocalFs = org.apache.hadoop.fs.FileSystem.getStatistics("file", classOf[LocalFs.Raw])
+    val before = viaLocalFs.getBytesWritten
+    ExtractJob.run(Transcripts.generate(spark, 60), ExtractJob.Config(dir, buckets = 8, groups = 4))
+    val treeBytes = Seq("pages", "chunks", "metrics", "lineage").flatMap(t =>
+      Files.walk(Paths.get(dir, t)).iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size))
+    assert(viaLocalFs.getBytesWritten - before >= treeBytes.sum)
+    val umask = FsPermission.getUMask(spark.sparkContext.hadoopConfiguration)
+    def mode(p: java.nio.file.Path) = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+    val fileMode = FsPermission.getFileDefault.applyUMask(umask).toShort.toInt
+    val dirMode = FsPermission.getDirDefault.applyUMask(umask).toShort.toInt
+    for (table <- Seq("pages", "chunks", "metrics", "lineage")) {
+      val paths = Files.walk(Paths.get(dir, table)).iterator().asScala.toSeq
+      val (dirs, files) = paths.partition(Files.isDirectory(_))
+      val data = files.filterNot(_.getFileName.toString.startsWith("."))
+      assert(data.exists(_.getFileName.toString.endsWith(".parquet")), table)
+      data.foreach { f =>
+        assert(Files.exists(f.resolveSibling(s".${f.getFileName}.crc")), s"$f has no .crc")
+      }
+      files.foreach(f => assert(mode(f) == fileMode, f"$f: ${mode(f)}%o"))
+      dirs.foreach(d => assert(mode(d) == dirMode, f"$d: ${mode(d)}%o"))
     }
   }
 
