@@ -94,8 +94,8 @@ object TextUtil {
 
   /** Percent-encodes the UTF-8 bytes of `s` (a lone surrogate encodes as
     * `?`, so `%3F`), uppercase hex, keeping ASCII letters, digits and the
-    * ASCII `marks`: Python's `urllib.parse.quote` with `marks = "_.-~/"`,
-    * JS `encodeURIComponent` with `marks = "-_.!~*'()"`. */
+    * ASCII `marks`: Python's `urllib.parse.quote` with `marks = "_.-~/"`
+    * ([[graft.extract.Robots.quote]]). */
   def percentEncode(s: String, marks: String): String = {
     val sb = new java.lang.StringBuilder(s.length + 8)
     s.getBytes(java.nio.charset.StandardCharsets.UTF_8).foreach { b =>

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, Column, SparkSession, classic}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.extract.{AdapterChunker, SyncCodec, TextUtil}
@@ -36,8 +37,9 @@ object IsoDurationHumanize {
 
 /** Registered function surface (SURVEY.md §2.11): the extraction scalar/
   * table functions usable from SQL. `of_iso_duration` is a native
-  * codegen'd expression; the rest are Scala UDFs over the pure extraction
-  * core. */
+  * codegen'd expression; `of_etag`, `of_is_llm_bot`, `of_detect_bot`,
+  * `of_bot_family` and `of_encode_uri` run the library's own column rules;
+  * the rest are Scala UDFs over the pure extraction core. */
 object Functions {
 
   final case class SqlChunk(id: String, text: String, `type`: String)
@@ -59,30 +61,50 @@ object Functions {
   private def nullSafe2[R >: Null](f: (String, String) => R): (String, String) => R =
     (a, b) => if (a == null || b == null) null else f(a, b)
 
-  def registerAll(spark: SparkSession): Unit = {
-    // native expression → expression registry (codegen-friendly)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "of_iso_duration",
-      (exprs: Seq[Expression]) => IsoDurationHumanize(exprs.head),
+  /** Registers `build` as the SQL function `name` over exactly `arity`
+    * arguments; a call with any other count fails analysis with
+    * `WRONG_NUM_ARGS`, naming the function and its arity. */
+  private def registerBuilder(spark: SparkSession, name: String, arity: Int)(
+      build: Seq[Expression] => Expression): Unit =
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name,
+      (args: Seq[Expression]) =>
+        if (args.size == arity) build(args)
+        else throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+          "functionName" -> s"`$name`", "expectedNum" -> arity.toString,
+          "actualNum" -> args.size.toString,
+          "docroot" -> org.apache.spark.SPARK_DOC_ROOT)),
       "built-in")
 
-    // of_etag(body) — the express adapter's makeEtag (etag.js:11-13):
-    // quoted 16-hex md5 prefix of the serialized body. Composed from
-    // built-in catalyst expressions, so it stays inside codegen. This is
-    // the expression-level twin of graft.query.Caching.etag (the Column
-    // API can't be unwrapped here — ExpressionUtils is private[sql] in
-    // Spark 4); FunctionsSpec pins the two encodings equal on ASCII and
-    // non-ASCII bodies so they cannot drift silently.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "of_etag",
-      { (exprs: Seq[Expression]) =>
-        import org.apache.spark.sql.catalyst.expressions.{Cast, Concat, Literal, Md5, Substring}
-        Concat(Seq(Literal("\""),
-          Substring(Md5(Cast(exprs.head, org.apache.spark.sql.types.BinaryType)),
-            Literal(1), Literal(16)),
-          Literal("\"")))
-      },
-      "built-in")
+  /** Registers the library column rule `rule` as the SQL function `name`
+    * over `arity` arguments. The rule is converted once over placeholder
+    * columns; each call swaps the placeholders for its argument
+    * expressions, so SQL runs the rule's own native expression tree. */
+  private def registerRule(spark: SparkSession, name: String, arity: Int)(
+      rule: Seq[Column] => Column): Unit = {
+    val params = Seq.tabulate(arity)(i => s"${name}_arg$i")
+    val body = spark.asInstanceOf[classic.SparkSession].expression(rule(params.map(col)))
+    registerBuilder(spark, name, arity) { args =>
+      val bound = params.zip(args).toMap
+      body.transformUp {
+        case a: UnresolvedAttribute if bound.contains(a.name) => bound(a.name)
+      }
+    }
+  }
+
+  def registerAll(spark: SparkSession): Unit = {
+    // native expression → expression registry (codegen-friendly)
+    registerBuilder(spark, "of_iso_duration", 1)(args => IsoDurationHumanize(args.head))
+    // the express adapter's makeEtag (etag.js:11-13)
+    registerRule(spark, "of_etag", 1)(args => graft.query.Caching.etag(args.head))
+    // gateway and analytics rules (shared with graft.query.Gateway/Analytics)
+    registerRule(spark, "of_is_llm_bot", 1)(args => graft.query.Gateway.isLlmBot(args.head))
+    registerRule(spark, "of_detect_bot", 1)(args =>
+      graft.query.Analytics.detectBot(args.head).getField("bot_name"))
+    registerRule(spark, "of_bot_family", 1)(args =>
+      graft.query.Analytics.detectBot(args.head).getField("bot_family"))
+    // JS encodeURIComponent parity (gateway.js URL synthesis)
+    registerRule(spark, "of_encode_uri", 1)(args =>
+      graft.query.Gateway.encodeUriComponent(args.head))
 
     // Scala UDFs over the pure extraction core; a NULL argument gives a
     // NULL result instead of a task-killing NPE
@@ -116,19 +138,6 @@ object Functions {
     spark.udf.register("of_extract_turn",
       udf((url: String, text: String, tool: String) =>
         sqlChunks(url, graft.job.ExtractJob.chunksFor(url, text, tool))))
-    // gateway helpers (shared constants with graft.query.Gateway)
-    spark.udf.register("of_is_llm_bot",
-      udf((ua: String) =>
-        ua != null && graft.query.Gateway.LlmAgents.exists(ua.contains)))
-    // analytics bot taxonomy (analytics_provider.py detect_bot semantics)
-    spark.udf.register("of_detect_bot",
-      udf((ua: String) => graft.query.Analytics.detectBotLocal(ua)._1))
-    spark.udf.register("of_bot_family",
-      udf((ua: String) => graft.query.Analytics.detectBotLocal(ua)._2))
-    // JS encodeURIComponent parity (gateway.js URL synthesis)
-    spark.udf.register("of_encode_uri",
-      udf((s: String) =>
-        if (s == null) null else graft.query.Gateway.encodeUriComponentLocal(s)))
     // crawl-side parsers (crawler.py sitemap/robots semantics); for bulk
     // gating parse once and use Robots.Rules.allowedColumn instead
     spark.udf.register("of_sitemap_locs",

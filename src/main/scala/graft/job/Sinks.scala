@@ -99,7 +99,7 @@ object Sinks {
     * `indexed_at` lies in the inclusive [since, until], and the predicate
     * that puts a windowed page in the added bucket (`first_indexed_at >=
     * since`; the rest are updated). The predicate is NULL on a NULL
-    * `first_indexed_at`, so such a page is in neither filtered bucket. */
+    * `first_indexed_at`, so such a page is in neither bucket. */
   def syncWindow(pages: DataFrame, since: Column, until: Column): (DataFrame, Column) =
     (pages.filter(col("indexed_at") >= since && col("indexed_at") <= until),
       col("first_indexed_at") >= since)
@@ -107,7 +107,8 @@ object Sinks {
   /** T2+J5+A2+T3 combined: the full differential-sync envelope for a
     * [since, until] [[syncWindow]] over an indexed pages table —
     * `/root/reference/sidecar/main.py:393-472`. Returns (added, updated,
-    * deleted, counts, sync_token). */
+    * deleted, counts, sync_token); `counts` holds the sizes of the
+    * non-empty `added` and `updated` lists, as `x_sync_envelope`'s do. */
   def syncEnvelope(pages: DataFrame, tombstones: DataFrame,
       since: java.sql.Timestamp, until: java.sql.Timestamp)
       : (DataFrame, DataFrame, DataFrame, DataFrame, String) = {
@@ -115,7 +116,7 @@ object Sinks {
     val added = inWindow.filter(isAdded)
     val updated = inWindow.filter(!isAdded)
     val deleted = tombstonesSince(tombstones, since)
-    val counts = inWindow
+    val counts = inWindow.filter(isAdded.isNotNull)
       .withColumn("bucket", when(isAdded, "added").otherwise("updated"))
       .groupBy("bucket").agg(count(lit(1)).as("n"))
     // SyncCodec.toIsoUtc pads whole-minute timestamps to ":00" seconds like

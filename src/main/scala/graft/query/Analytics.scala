@@ -67,18 +67,6 @@ object Analytics {
     chain.otherwise(pair("human-or-unknown", "unknown"))
   }
 
-  /** Driver-local twin of [[detectBot]] (same insertion-order,
-    * case-insensitive substring semantics) — powers the `of_detect_bot` /
-    * `of_bot_family` SQL functions. */
-  def detectBotLocal(ua: String): (String, String) =
-    if (ua == null || ua.isEmpty) ("unknown", "unknown")
-    else {
-      val lowered = ua.toLowerCase(java.util.Locale.ROOT)
-      BotFamilies.find { case (p, _) =>
-        lowered.contains(p.toLowerCase(java.util.Locale.ROOT))
-      }.getOrElse(("human-or-unknown", "unknown"))
-    }
-
   /** The two endpoints the middleware exempts from rate limiting and
     * tracks unconditionally (main.py:206-208). */
   val InternalEndpoints: Seq[String] = Seq("/healthz", "/.well-known/openfeeder.json")

@@ -124,13 +124,6 @@ object Gateway {
       .foldLeft(url_encode(c)) { case (acc, (from, to)) =>
         replace(acc, lit(from), lit(to)) }
 
-  /** Driver-local twin of [[encodeUriComponent]] — byte-for-byte JS
-    * `encodeURIComponent` (UTF-8 bytes percent-encoded, uppercase hex,
-    * unreserved set kept). Powers the `of_encode_uri` SQL function and the
-    * parity test against the column form. */
-  def encodeUriComponentLocal(s: String): String =
-    graft.extract.TextUtil.percentEncode(s, "-_.!~*'()")
-
   /** Mode-1 Round-1 (cold start) question synthesis —
     * `buildQuestions` (gateway.js:77-205): per detected context type, the
     * suggested next actions an LLM agent can take, each as

@@ -10,6 +10,13 @@ import org.scalacheck.rng.Seed
   * offline cache has raw scalacheck only, no scalatest bridge). */
 class PropertySpec extends AnyFunSuite {
 
+  lazy val spark: org.apache.spark.sql.SparkSession =
+    org.apache.spark.sql.SparkSession.builder()
+      .master("local[2]")
+      .appName("property-spec")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
   private def forAll[A](g: Gen[A], minSuccessful: Int)(f: A => Unit): Unit = {
     var produced = 0
     var seed = 42L
@@ -234,10 +241,17 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("encodeUriComponentLocal round-trips through unquote for any string") {
+  test("encodeUriComponent round-trips through unquote for any string") {
+    val samples = Seq.newBuilder[String]
     forAll(Gen.listOf(Gen.oneOf(word, Gen.const("é😀&?/+%"), Gen.const(" ")))
-        .map(_.mkString), 150) { s =>
-      val enc = graft.query.Gateway.encodeUriComponentLocal(s)
+        .map(_.mkString), 150)(samples += _)
+    val t = spark; import t.implicits._
+    import org.apache.spark.sql.functions.col
+    val encoded = samples.result().toDF("v")
+      .select(col("v"), graft.query.Gateway.encodeUriComponent(col("v")))
+      .collect().map(r => r.getString(0) -> r.getString(1))
+    assert(encoded.length == 150)
+    encoded.foreach { case (s, enc) =>
       // the encoding is fully reversible (lossless percent-encoding)
       same(Robots.unquote(enc), s, s"round trip of $s")
       // output alphabet is URL-safe: every byte unreserved or %XX

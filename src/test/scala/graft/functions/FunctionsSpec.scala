@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.scalatest.funsuite.AnyFunSuite
 
 class FunctionsSpec extends AnyFunSuite {
@@ -19,9 +20,9 @@ class FunctionsSpec extends AnyFunSuite {
       .toDF("d")
     val got = df.selectExpr("of_iso_duration(d) AS h").collect().map(_.getString(0))
     assert(got.toSeq == Seq("25 min", "1h 30 min", "1d 2h", "garbage", "45s", null))
-    // stays inside whole-stage codegen (no BatchEvalPython / no udf node)
-    val plan = df.selectExpr("of_iso_duration(d)").queryExecution.executedPlan.toString
-    assert(!plan.contains("ScalaUDF") && !plan.contains("BatchEval"), plan)
+    // a native expression: the executed plan holds no udf node
+    val native = FunctionsSpec.uaColumn(spark).selectExpr("of_iso_duration(v)")
+    assert(FunctionsSpec.scalaUdfs(native).isEmpty, native.queryExecution.executedPlan)
   }
 
   test("of_chunk500 from SQL: array<struct> with ids and types") {
@@ -127,9 +128,8 @@ class FunctionsSpec extends AnyFunSuite {
     assert(r.getString(0) == expected)
     assert(r.getString(0).length == 18 && r.getString(0).startsWith("\""))
     // non-ASCII body: the string→binary cast must hash UTF-8 bytes, like
-    // node's Buffer default in crypto.update — and the SQL function and
-    // Column-API encodings of the contract must agree exactly (they are
-    // separate expression compositions; this pins them together)
+    // node's Buffer default in crypto.update — and the SQL function must
+    // give the Column API's Caching.etag, the rule it registers
     val uni = "café ✓"
     val mdU = java.security.MessageDigest.getInstance("MD5")
       .digest(uni.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -169,6 +169,28 @@ class FunctionsSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
   }
 
+  test("rule-backed functions plan as native expressions, with no ScalaUDF") {
+    Functions.registerAll(spark)
+    for (name <- FunctionsSpec.RuleBacked) {
+      val df = FunctionsSpec.uaColumn(spark).selectExpr(s"$name(v)")
+      assert(FunctionsSpec.scalaUdfs(df).isEmpty, df.queryExecution.executedPlan)
+    }
+    // a UDF call is seen
+    spark.udf.register("probe_udf", (s: String) => s)
+    assert(FunctionsSpec.scalaUdfs(FunctionsSpec.uaColumn(spark).selectExpr("probe_udf(v)"))
+      .nonEmpty)
+  }
+
+  test("builder-registered functions fail analysis on a wrong argument count") {
+    Functions.registerAll(spark)
+    for (name <- "of_iso_duration" +: FunctionsSpec.RuleBacked; n <- Seq(0, 2)) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT $name(${Seq.fill(n)("'PT1H'").mkString(", ")})"))
+      assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", e)
+      assert(e.getMessage.contains(s"`$name` requires 1 parameters"), e.getMessage)
+    }
+  }
+
   test("every of_* function survives NULL arguments, all-NULL giving its documented result") {
     Functions.registerAll(spark)
     // documented non-NULL results on NULL input; every other of_*
@@ -201,9 +223,30 @@ class FunctionsSpec extends AnyFunSuite {
             call(name, args).failed.toOption
               .map(e => s"$name(${args.mkString(", ")}) failed: $e")
           }
-          allNull.toSeq ++ oneNull
+          // one argument too many fails analysis
+          val extra = Seq.fill(n + 1)("NULL").mkString(", ")
+          val tooMany = if (scala.util.Try(spark.sql(s"SELECT $name($extra)")).isFailure) Nil
+            else Seq(s"$name($extra) analyses")
+          allNull.toSeq ++ oneNull ++ tooMany
       }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
+}
+
+object FunctionsSpec {
+
+  /** The SQL functions that register a library column rule. */
+  val RuleBacked: Seq[String] =
+    Seq("of_etag", "of_is_llm_bot", "of_detect_bot", "of_bot_family", "of_encode_uri")
+
+  /** A string column `v` over a range, so the optimizer cannot fold a
+    * projection of it into a local relation. */
+  def uaColumn(spark: SparkSession): DataFrame =
+    spark.range(2).selectExpr("CASE WHEN id = 0 THEN 'Mozilla/5.0 ClaudeBot/1.0' END AS v")
+
+  /** The ScalaUDF nodes in `df`'s executed plan. */
+  def scalaUdfs(df: DataFrame): Seq[ScalaUDF] =
+    df.queryExecution.executedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case u: ScalaUDF => u }))
 }

@@ -77,7 +77,8 @@ class SinksSpec extends AnyFunSuite {
       ("/new", ts(700), ts(700)),   // first seen inside window  -> added
       ("/upd", ts(100), ts(800)),   // first seen before since   -> updated
       ("/old", ts(100), ts(100)),   // untouched (outside window)
-      ("/fut", ts(950), ts(950)))   // after until (excluded)
+      ("/fut", ts(950), ts(950)),   // after until (excluded)
+      ("/nul", null, ts(750)))      // no first_indexed_at: in neither list
       .toDF("url", "first_indexed_at", "indexed_at")
     val tombs = Seq(("/gone", ts(650)), ("/ancient", ts(10))).toDF("url", "deleted_at")
     val (added, updated, deleted, counts, token) =
@@ -85,6 +86,7 @@ class SinksSpec extends AnyFunSuite {
     assert(added.collect().map(_.getString(0)).toSeq == Seq("/new"))
     assert(updated.collect().map(_.getString(0)).toSeq == Seq("/upd"))
     assert(deleted.collect().map(_.getString(0)).toSeq == Seq("/gone"))
+    // the counts are the sizes of the two lists
     assert(counts.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
       Map("added" -> 1L, "updated" -> 1L))
     // token decodes back to `until`

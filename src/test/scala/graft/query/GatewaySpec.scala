@@ -35,6 +35,8 @@ class GatewaySpec extends AnyFunSuite {
 
   test("column encodeUriComponent equals the local JS-parity twin on tricky inputs") {
     val t = spark; import t.implicits._
+    // the JS-parity twin: the body of the former Gateway.encodeUriComponentLocal
+    def local(s: String): String = graft.extract.TextUtil.percentEncode(s, "-_.!~*'()")
     val inputs = Seq("", "plain", "a b", "a+b", "100%", "x&y=z", "/p/q/",
       "tilde~bang!quote'parens()star*", "naïve café", "emoji 😀 end",
       "semi;colon,comma:colon@at", "#hash?q=v", "\"quotes\" <tags>")
@@ -42,23 +44,8 @@ class GatewaySpec extends AnyFunSuite {
       .select(col("v"), Gateway.encodeUriComponent(col("v")).as("e"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     inputs.foreach { s =>
-      assert(got(s) == Gateway.encodeUriComponentLocal(s),
-        s"divergence for '$s': column=${got(s)} local=${Gateway.encodeUriComponentLocal(s)}")
-    }
-  }
-
-  test("column detectBot equals the local twin across the UA corpus") {
-    val t = spark; import t.implicits._
-    val uas = Seq("", "Mozilla/5.0 (human)", "GPTBot/1.0", "chatgpt-user probe",
-      "ClaudeBot/1.0", "something anthropic-ai here", "PerplexityBot",
-      "Googlebot/2.1", "Google-Extended", "CCBot/2.0", "Bytespider x",
-      "Amazonbot", "YOUBOT uppercase", "FacebookBot")
-    val got = uas.toDF("ua")
-      .select(col("ua"), Analytics.detectBot(col("ua")).as("b"))
-      .collect().map(r => r.getString(0) ->
-        (r.getStruct(1).getString(0), r.getStruct(1).getString(1))).toMap
-    uas.foreach { ua =>
-      assert(got(ua) == Analytics.detectBotLocal(ua), s"divergence for '$ua'")
+      assert(got(s) == local(s),
+        s"divergence for '$s': column=${got(s)} local=${local(s)}")
     }
   }
 

@@ -37,14 +37,20 @@ class ServingEquivSpec extends AnyFunSuite {
     val tombs = (0 until 60).map(i => (s"/gone$i", pick())).toDF("url", "deleted_at")
     val got = Sinks.syncEnvelope(pages, tombs, since, until)
     val want = SyncEnvelopeParent(pages, tombs, since, until)
-    Seq(got._1 -> want._1, got._2 -> want._2, got._3 -> want._3, got._4 -> want._4)
+    Seq(got._1 -> want._1, got._2 -> want._2, got._3 -> want._3)
       .foreach { case (g, w) =>
         assert(g.schema == w.schema)
         assert(rows(g) == rows(w))
       }
     assert(got._5 == want._5)
-    // the fixture reaches every bucket, the NULL first_indexed_at count
-    // (bucketed as updated) included
+    // the counts are the sizes of the parent's own added and updated
+    // lists; its counts frame also bucketed a NULL first_indexed_at as
+    // updated
+    assert(got._4.schema == want._4.schema)
+    val listSizes = Seq("added" -> want._1.count(), "updated" -> want._2.count())
+      .filter(_._2 > 0).toMap
+    assert(got._4.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == listSizes)
+    // the fixture reaches every bucket and a windowed NULL first_indexed_at
     assert(rows(got._1).nonEmpty && rows(got._2).nonEmpty && rows(got._3).nonEmpty)
     assert(pages.filter(col("indexed_at") === lit(since) &&
       col("first_indexed_at").isNull).count() > 0)
